@@ -19,7 +19,7 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Idempotent: guarantees the engine's native functions (ws_tokens,
-    // shingle_set, minhash_sig, simhash32, vec_dot, ...) resolve in any
+    // shingle_set, minhash_sig, simhash64, vec_dot, ...) resolve in any
     // query built over these tables, whatever session the harness passes.
     graft.functions.VectorExpressions.register(spark)
     spark.read.parquet(s"$dir/$name.parquet")

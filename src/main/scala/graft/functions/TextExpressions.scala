@@ -190,34 +190,6 @@ object DedupKernels {
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
   }
 
-  /** 32-bit SimHash over the token multiset: bit j set iff tokens whose
-    * 32-bit hash (md5 prefix) has bit j outnumber those that don't. */
-  def simhash32(text: UTF8String): Long = {
-    val toks = tokenize(text)
-    val md = mdLocal.get()
-    val counts = new Array[Int](32)
-    var i = 0
-    while (i < toks.length) {
-      val d = md.digest(toks(i).getBytes(StandardCharsets.UTF_8))
-      val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-        ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-      var j = 0
-      while (j < 32) {
-        counts(j) += ((h >>> j) & 1L).toInt
-        j += 1
-      }
-      i += 1
-    }
-    val n = toks.length
-    var sig = 0L
-    var j = 0
-    while (j < 32) {
-      if (2L * counts(j) > n) sig |= 1L << j
-      j += 1
-    }
-    sig
-  }
-
   /** 64-bit SimHash over the token multiset: bit j set iff tokens whose
     * 64-bit hash (md5 digest bytes 0-7 big-endian = first 16 hex chars)
     * has bit j outnumber those that don't. The published standard width
@@ -357,37 +329,9 @@ object MinHashSig {
   val info = new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig")
 }
 
-/** `simhash32(string) -> bigint`: 32-bit SimHash of the lower-cased
-  * whitespace token multiset. */
-case class SimHash32(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash32"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.sql}")
-
-  override def nullSafeEval(t: Any): Any =
-    DedupKernels.simhash32(t.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DedupKernels.simhash32($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash32 =
-    copy(child = newChild)
-}
-
-object SimHash32 {
-  val info = new ExpressionInfo(classOf[SimHash32].getName, "simhash32")
-}
-
 /** `simhash64(string) -> bigint`: 64-bit SimHash of the lower-cased
   * whitespace token multiset (the near-dup production width — see
-  * [[DedupKernels.simhash64]]; `simhash32` remains for callers that only
-  * need a compact fingerprint, not LSH banding). */
+  * [[DedupKernels.simhash64]]). */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType

@@ -2,8 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -19,85 +22,69 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   */
 object VectorExpressions {
 
-  /** Registers the full native-function surface on a session (idempotent):
-    * `vec_dot`, `vec_norm`, `topk_pairs`, and the text/dedup kernels
-    * `ws_tokens`, `shingle_set`, `minhash_sig`, `simhash32`. Called by
-    * every [[graft.core.Tables]] load, so any query built over the test
-    * tables resolves them; also injected by
-    * [[graft.plans.GraftExtensions]] for config-driven use. */
+  /** The engine's native-function surface: one `(name, info, builder)`
+    * entry per SQL function. [[register]] installs it on a live session
+    * and [[graft.plans.GraftExtensions]] injects the same table for
+    * config-driven sessions, so the two can never drift apart. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    (FunctionIdentifier("vec_dot"), DotProduct.info,
+      c => DotProduct(c(0), c(1))),
+    (FunctionIdentifier("vec_norm"), L2Norm.info,
+      c => L2Norm(c.head)),
+    (FunctionIdentifier("topk_pairs"), TopKPairs.info,
+      c => TopKPairs(c(0), c(1), c(2))),
+    (FunctionIdentifier("collect_min_k"), CollectMinK.info,
+      c => CollectMinK(c(0), c(1))),
+    (FunctionIdentifier("vec_sum"), VecSum.info,
+      c => VecSum(c.head)),
+    (FunctionIdentifier("heavy_hitters"), SpaceSaving.info,
+      c => SpaceSaving(c(0), c(1))),
+    (FunctionIdentifier("ws_tokens"), WsTokens.info,
+      c => WsTokens(c.head)),
+    (FunctionIdentifier("shingle_set"), ShingleSet.info,
+      c => ShingleSet(c(0), c(1))),
+    (FunctionIdentifier("minhash_sig"), MinHashSig.info,
+      c => MinHashSig(c(0), c(1))),
+    (FunctionIdentifier("minhash_sig_fast"), MinHashSigFast.info,
+      c => MinHashSigFast(c(0), c(1), c(2))),
+    (FunctionIdentifier("simhash64"), SimHash64.info,
+      c => SimHash64(c.head)),
+    (FunctionIdentifier("nfc_normalize"), NfcNormalize.info,
+      c => NfcNormalize(c.head)),
+    (FunctionIdentifier("morton2"), Morton2.info,
+      c => Morton2(c(0), c(1))),
+    (FunctionIdentifier("jaro_winkler"), JaroWinklerSim.info,
+      c => JaroWinklerSim(c(0), c(1))),
+    (FunctionIdentifier("bloom_might_contain"), BloomMightContain.info,
+      c => BloomMightContain(c(0), c(1))),
+    (FunctionIdentifier("pq_adc"), PqAdc.info,
+      c => PqAdc(c(0), c(1))),
+    (FunctionIdentifier("char_entropy"), CharEntropy.info,
+      c => CharEntropy(c.head)))
+
+  /** The engine's optimizer rules: Levenshtein pruning, and the
+    * transparent MV rewrite (matching grouped aggregates over a
+    * registered base route onto the FRESH view — see MvRewrite's
+    * conservatism ladder; kill switch `spark.graft.mv.rewrite=false`). */
+  val optimizerRules: Seq[SparkSession => Rule[LogicalPlan]] = Seq(
+    _ => graft.plans.LevenshteinPruning,
+    session => new graft.plans.MvRewriteRule(session))
+
+  /** Registers [[functions]] and [[optimizerRules]] on a session
+    * (idempotent). Called by every [[graft.core.Tables]] load, so any
+    * query built over the test tables resolves them. */
   def register(spark: SparkSession): Unit = {
     val registry =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.functionRegistry
-    registry.registerFunction(
-      FunctionIdentifier("vec_dot"), DotProduct.info,
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("vec_norm"), L2Norm.info,
-      (children: Seq[Expression]) => L2Norm(children.head))
-    registry.registerFunction(
-      FunctionIdentifier("topk_pairs"),
-      TopKPairs.info,
-      (children: Seq[Expression]) =>
-        TopKPairs(children(0), children(1), children(2)))
-    registry.registerFunction(
-      FunctionIdentifier("collect_min_k"),
-      CollectMinK.info,
-      (children: Seq[Expression]) => CollectMinK(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("vec_sum"),
-      VecSum.info,
-      (children: Seq[Expression]) => VecSum(children.head))
-    registry.registerFunction(
-      FunctionIdentifier("heavy_hitters"),
-      SpaceSaving.info,
-      (children: Seq[Expression]) => SpaceSaving(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("ws_tokens"), WsTokens.info,
-      (children: Seq[Expression]) => WsTokens(children.head))
-    registry.registerFunction(
-      FunctionIdentifier("shingle_set"), ShingleSet.info,
-      (children: Seq[Expression]) => ShingleSet(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("minhash_sig"), MinHashSig.info,
-      (children: Seq[Expression]) => MinHashSig(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("minhash_sig_fast"), MinHashSigFast.info,
-      (children: Seq[Expression]) =>
-        MinHashSigFast(children(0), children(1), children(2)))
-    registry.registerFunction(
-      FunctionIdentifier("simhash32"), SimHash32.info,
-      (children: Seq[Expression]) => SimHash32(children.head))
-    registry.registerFunction(
-      FunctionIdentifier("simhash64"), SimHash64.info,
-      (children: Seq[Expression]) => SimHash64(children.head))
-    registry.registerFunction(
-      FunctionIdentifier("nfc_normalize"), NfcNormalize.info,
-      (children: Seq[Expression]) => NfcNormalize(children.head))
-    registry.registerFunction(
-      FunctionIdentifier("morton2"), Morton2.info,
-      (children: Seq[Expression]) => Morton2(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("jaro_winkler"), JaroWinklerSim.info,
-      (children: Seq[Expression]) =>
-        JaroWinklerSim(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("bloom_might_contain"), BloomMightContain.info,
-      (children: Seq[Expression]) =>
-        BloomMightContain(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("pq_adc"), PqAdc.info,
-      (children: Seq[Expression]) => PqAdc(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("char_entropy"), CharEntropy.info,
-      (children: Seq[Expression]) => CharEntropy(children.head))
+    functions.foreach { case (id, info, builder) =>
+      registry.registerFunction(id, info, builder)
+    }
     // Optimizer rules piggyback on the same idempotent hook: sessions
     // built without `spark.sql.extensions` (the harness's plain
     // builders) still get the engine's rewrites. Assignment, not
     // append — this list is wholly owned here.
-    spark.experimental.extraOptimizations = Seq(
-      graft.plans.LevenshteinPruning,
-      new graft.plans.MvRewriteRule(spark))
+    spark.experimental.extraOptimizations = optimizerRules.map(_(spark))
   }
 }
 

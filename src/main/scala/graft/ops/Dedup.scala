@@ -86,22 +86,12 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
-  /** 32-bit SimHash over the token multiset: bit j is set iff tokens whose
-    * 32-bit hash ([[PortableHash.hash32]] md5 prefix) has bit j outnumber
-    * those that don't. Computed entirely inside the row — no explode, no
-    * shuffle.
-    *
-    * Native `simhash32` expression ([[graft.functions.SimHash32]]): one
-    * primitive loop (tokenize → md5 → 32 bit-counts) per row. The round-1
-    * interpreted 32-wide `zip_with` fold computed identical values ~50×
-    * slower. */
-  def simhash32(text: Column): Column = call_function("simhash32", text)
-
   /** 64-bit SimHash — the production near-dup width (Manku et al.,
     * WWW'07 use 64-bit fingerprints for exactly the banding reason
     * documented at [[simhashNearDups]]). Native `simhash64` expression
-    * ([[graft.functions.SimHash64]]), same tokenize→md5 loop as
-    * [[simhash32]] over the digest's first 8 bytes. */
+    * ([[graft.functions.SimHash64]]): bit j is set iff tokens whose
+    * 64-bit hash (md5 digest bytes 0-7) has bit j outnumber those that
+    * don't, in one primitive loop per row — no explode, no shuffle. */
   def simhash64(text: Column): Column = call_function("simhash64", text)
 
   /** Cache for intermediates that several plan branches re-read (band
@@ -252,7 +242,8 @@ object Dedup {
     // branches — persist. `cacheShingles = true` flips that tradeoff:
     // the full shingle table persists once and the verify stage rereads
     // it instead of re-shingling candidate docs. Measured at sf0.1
-    // (ShingleCacheProbe, SCALE.md): caching wins ~13% wall-clock when
+    // (SCALE.md, `cacheShingles` knob A/B under "Round-4 'regressions'
+    // adjudicated"): caching wins ~13% wall-clock when
     // the table fits memory — but the default stays FALSE because the
     // shingle table is the pipeline's largest intermediate (string
     // arrays ≈ 5-10× raw text) and pinning it at corpus scale evicts
@@ -287,9 +278,10 @@ object Dedup {
     * path only through hash-family randomness; both are verified with the
     * same exact Jaccard, so false positives are impossible either way.
     *
-    * Measured honesty (`tools.ScaleProbe`, alternating min-of-2, 64×
-    * corpus): with the codegen'd kernels both paths are signature-cheap
-    * and END-TO-END EQUAL (~6 s either way) — candidate shuffle + verify
+    * Measured honesty (README.md "Scaling evidence": alternating
+    * min-of-2, 64× replicated corpus): with the codegen'd kernels both
+    * paths are signature-cheap and END-TO-END EQUAL (~6 s either way) —
+    * candidate shuffle + verify
     * dominate, and those are identical. The fast path's remaining edge is
     * memory-bandwidth, not CPU: it never materializes shingle STRINGS, so
     * it wins where per-doc shingle payloads are large (long documents) or
@@ -332,8 +324,9 @@ object Dedup {
     *  - dense candidates (> [[BroadcastVerifyLimit]], e.g. a corpus of
     *    pervasive templated text): plain co-partitioned joins — AQE
     *    picks shuffled-hash — because a pairs x shingles broadcast
-    *    would be GB-scale (measured: 890 K candidates at ScaleProbe 64x
-    *    made the broadcast build the whole runtime). */
+    *    would be GB-scale (measured: 890 K candidates on the 64×
+    *    replicated corpus of README.md "Scaling evidence" made the
+    *    broadcast build the whole runtime). */
   private def verifyPairs(
       pairs: DataFrame, docs: DataFrame,
       broadcastLimit: Long = BroadcastVerifyLimit,
@@ -342,7 +335,7 @@ object Dedup {
     // tables: several nested broadcast builds consume them, and a lazy
     // persist materializes inside the first broadcast-build thread,
     // re-running candidate generation per consumer before the cache
-    // fills (measured 3x end-to-end at ScaleProbe 64x). The candidate
+    // fills (measured 3x end-to-end on that 64× corpus). The candidate
     // count that picks the join regime rides the checkpoint's own
     // materialization job as an observe() metric (r17) — the separate
     // count job over the pinned table is gone; the observe node

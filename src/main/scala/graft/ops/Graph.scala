@@ -90,8 +90,9 @@ object Graph {
     // driver — collect + re-enter as a local relation — on the
     // broadcast-sized dangling-free path. Measured: job count 21 → 22
     // (JobCountProbe) and shared-sweep wall slightly WORSE; the same
-    // collect-loop cost ~0.4 s/round on labelPropagation's LpProbe A/B.
-    // The per-round localCheckpoint loop stays.)
+    // collect-loop cost ~0.4 s/round on labelPropagation's A/B
+    // (OPTIMIZATION_r18.md, "Graph.labelPropagation"). The per-round
+    // localCheckpoint loop stays.)
     var ranks = nodes.withColumn("pr", lit(1.0 / n))
     var round = 0
     while (round < iterations) {
@@ -182,7 +183,8 @@ object Graph {
     // (a strict subset of (node2, label)), so one repartition(node2) of
     // the raw vote rows replaces the two aggregate exchanges and the
     // whole round runs in one shuffle + one codegen stage — measured
-    // 4.6 → 3.3 s on the bench graph (LpProbe A/B, sf0.1). The cost is
+    // 4.6 → 3.3 s on the bench graph (A/B at sf0.1, OPTIMIZATION_r18.md
+    // "Graph.labelPropagation"). The cost is
     // losing map-side partial aggregation on the vote table: every raw
     // vote for a node lands in that node's partition, so the shape is
     // gated on max in-degree — a hub past the gate would concentrate
@@ -195,9 +197,9 @@ object Graph {
     // the driver — collect + re-enter as a local relation, saving the
     // per-round checkpoint job and the distributed broadcast build —
     // measured ~0.4 s/round SLOWER than the checkpoint loop at sf0.1
-    // (LpProbe: operator-with-collect 4.6–5.1 s vs fused-checkpoint
-    // 3.1–3.7 s), erasing the fused-exchange win below. The checkpoint
-    // loop stays.)
+    // (OPTIMIZATION_r18.md "Graph.labelPropagation": operator-with-collect
+    // 4.6–5.1 s vs fused-checkpoint 3.1–3.7 s), erasing the
+    // fused-exchange win below. The checkpoint loop stays.)
     var labels = nodesPinned.withColumn("label", col("node"))
     var round = 0
     while (round < iterations) {

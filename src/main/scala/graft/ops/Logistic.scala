@@ -47,8 +47,9 @@ object Logistic {
     // exchange-free — at bench scale AQE already broadcasts the small
     // per-round sides, so the columnar cache encode + force job cost
     // MORE than the saved exchanges; localCheckpoint alone is cheaper.
-    // An RDD-scan checkpoint drops output partitioning — probed, see
-    // tools/PartProbe — so checkpoint cannot carry the layout either.)
+    // An RDD-scan checkpoint drops output partitioning — an explain
+    // probe showed it, since removed and kept in git history — so
+    // checkpoint cannot carry the layout either.)
     val f = features.select(col("doc_id"), col("b"), col("x"))
       .localCheckpoint()
     // r17: labels attach to the feature table ONCE (inner broadcast
@@ -105,9 +106,10 @@ object Logistic {
     }
     // occurring buckets, in one deterministic driver-side order (the
     // order never affects results — weights are only ever hash-joined
-    // on b — but a stable frame beats an arbitrary one)
-    val buckets: Seq[Any] = f.select(col("b")).distinct()
-      .collect().toSeq.map(_.get(0)).sortBy(_.toString)
+    // on b — but a stable frame beats an arbitrary one). A null bucket
+    // never matches that join, so it carries no weight and is left out.
+    val buckets: Seq[Any] = f.select(col("b")).where(col("b").isNotNull)
+      .distinct().collect().toSeq.map(_.get(0)).sortBy(_.toString)
     var w: Seq[(Any, Double)] = buckets.map(_ -> 1e-9)
     var round_ = 0
     while (round_ < iterations) {

@@ -135,8 +135,8 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
       // ONE base-CDF evaluation for the whole refresh: the aux folds,
       // the MV fold, and the touched-group scope all read this pinned
       // window (each unpinned consumer would re-read and re-shuffle
-      // the base CDF — the DcntProbe measured the repeated passes
-      // costing more than the from-scratch pair aggregation)
+      // the base CDF — measured costing more than the from-scratch
+      // pair aggregation: SCALE.md, "Round-17 (late): DcntProbe")
       val (changes, cBlocks) = Checkpoints.pin(base.readChanges(w, head))
       try {
         syncAuxFrame(changes, head)
@@ -327,9 +327,10 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
     * bounded-recompute device), every other group KEEPS its stored
     * `<c>_dcnt`. Without this the derive step alone would scan the
     * live pair set — base-cardinality for a high-distinct column —
-    * at every refresh, which the DcntProbe showed costing MORE than
-    * the from-scratch pair aggregation. Groups whose values are all
-    * NULL read 0 (SQL semantics); joins run at MV cardinality. */
+    * at every refresh, measured costing MORE than the from-scratch
+    * pair aggregation (SCALE.md, "Round-17 (late): DcntProbe").
+    * Groups whose values are all NULL read 0 (SQL semantics); joins
+    * run at MV cardinality. */
   private def withDcnt(df: DataFrame,
       touched: Option[DataFrame]): DataFrame =
     if (dcntCols.isEmpty) df

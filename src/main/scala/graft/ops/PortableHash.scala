@@ -22,12 +22,8 @@ object PortableHash {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)
 
-  /** 32-bit hash: first 8 hex chars of md5. Small enough that per-bit
-    * arithmetic (SimHash) stays in cheap BIGINT ops everywhere. */
+  /** 32-bit hash: first 8 hex chars of md5. Small enough that bucket
+    * arithmetic (the hashing trick) stays in cheap BIGINT ops everywhere. */
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast(LongType)
-
-  /** DuckDB-SQL rendering of [[hash32]] over expression `e`. */
-  def sqlHash32(e: String): String =
-    s"CAST('0x' || substring(md5($e), 1, 8) AS BIGINT)"
 }

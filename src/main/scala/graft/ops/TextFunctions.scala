@@ -55,13 +55,4 @@ object TextFunctions {
 
   /** Deterministic 128-bit content fingerprint of the canonical text. */
   def fingerprintMd5(text: Column): Column = md5(normalized(text))
-
-  /** Polynomial rolling hash (base-31) over token xxhash64 values — an
-    * order-sensitive 64-bit fingerprint, cheaper to join on than md5
-    * strings at scale. Engine-internal (not oracle-comparable). */
-  def rollingFingerprint(text: Column): Column =
-    aggregate(
-      transform(tokens(text), t => xxhash64(t)),
-      lit(0L),
-      (acc, h) => acc * lit(31L) + h)
 }

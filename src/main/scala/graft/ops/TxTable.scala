@@ -1307,7 +1307,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * back — the per-file scoping that makes Delta's DV reads cheap
     * (measured: the join leg costs ~3× a plain scan per row it
     * covers, so scoping it to the needle's files is what keeps a
-    * 2k-row delete from taxing a whole-table read; DvProbe). The
+    * 2k-row delete from taxing a whole-table read; SCALE.md, "Semantic
+    * dedup + change data feed (round-6 additions)"). The
     * touched-file list is a driver-side read of the vectors — file-NAME
     * scale, the same cost class as the manifest pruning reads. */
   /** Memoized touched-file sets, keyed by the (immutable) dv file
@@ -4370,19 +4371,6 @@ final class TxTable private (spark: SparkSession, dir: String,
       set: Map[String, Column], maxRetries: Int = 20): Commit =
     updateCore(Seq((column, Option(lo), Option(hi))),
       col(column) >= lit(lo) && col(column) <= lit(hi), set, maxRetries)
-
-  /** UPDATE WHERE <arbitrary SQL predicate> — the general form of
-    * [[updateBetween]], same bounds-from-conjuncts file skipping as
-    * [[deleteExpr]] and the same assignment contract as
-    * [[updateBetween]] (no new columns, no type changes, generated
-    * columns recomputed, CHECK constraints enforced inline). */
-  def updateExpr(predicate: String, set: Map[String, Column],
-      maxRetries: Int = 20): Commit = {
-    val e = spark.sessionState.sqlParser.parseExpression(predicate)
-    updateCore(TxPredicates.bounds(e),
-      org.apache.spark.sql.graft.ColumnShim.column(e), set,
-      maxRetries)
-  }
 
   private[ops] def updateCore(
       bounds: Seq[(String, Option[Any], Option[Any])], matches: Column,

@@ -1,86 +1,18 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Expression
 
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-import graft.functions.{BloomMightContain, CharEntropy, CollectMinK, DotProduct, JaroWinklerSim, L2Norm, MinHashSig, MinHashSigFast, Morton2, NfcNormalize, PqAdc, ShingleSet, SimHash32, SimHash64, TopKPairs, VecSum, WsTokens, SpaceSaving}
+import graft.functions.VectorExpressions
 
 /** Session-extension entry point: enable with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  * Injects the engine's native expressions into the function registry so
-  * both SQL text and the Column API resolve them. */
+  * Injects the engine's native expressions and optimizer rules (the
+  * table in [[graft.functions.VectorExpressions]]) so both SQL text and
+  * the Column API resolve them, plus the transactional-table parser. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"), DotProduct.info,
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_norm"), L2Norm.info,
-      (children: Seq[Expression]) => L2Norm(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ws_tokens"), WsTokens.info,
-      (children: Seq[Expression]) => WsTokens(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_set"), ShingleSet.info,
-      (children: Seq[Expression]) => ShingleSet(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"), MinHashSig.info,
-      (children: Seq[Expression]) => MinHashSig(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig_fast"), MinHashSigFast.info,
-      (children: Seq[Expression]) =>
-        MinHashSigFast(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash32"), SimHash32.info,
-      (children: Seq[Expression]) => SimHash32(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"), SimHash64.info,
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("topk_pairs"),
-      TopKPairs.info,
-      (children: Seq[Expression]) =>
-        TopKPairs(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("collect_min_k"),
-      CollectMinK.info,
-      (children: Seq[Expression]) => CollectMinK(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sum"),
-      VecSum.info,
-      (children: Seq[Expression]) => VecSum(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("heavy_hitters"),
-      SpaceSaving.info,
-      (children: Seq[Expression]) => SpaceSaving(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"), NfcNormalize.info,
-      (children: Seq[Expression]) => NfcNormalize(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("morton2"), Morton2.info,
-      (children: Seq[Expression]) => Morton2(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"), JaroWinklerSim.info,
-      (children: Seq[Expression]) =>
-        JaroWinklerSim(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"), BloomMightContain.info,
-      (children: Seq[Expression]) =>
-        BloomMightContain(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"), PqAdc.info,
-      (children: Seq[Expression]) => PqAdc(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("char_entropy"), CharEntropy.info,
-      (children: Seq[Expression]) => CharEntropy(children.head)))
-    ext.injectOptimizerRule(_ => LevenshteinPruning)
-    // transparent MV rewrite: matching grouped aggregates over a
-    // registered base route onto the FRESH view (see MvRewrite's
-    // conservatism ladder; kill switch spark.graft.mv.rewrite=false)
-    ext.injectOptimizerRule(session => new MvRewriteRule(session))
+    VectorExpressions.functions.foreach(ext.injectFunction)
+    VectorExpressions.optimizerRules.foreach(ext.injectOptimizerRule)
     // plain spark.sql() speaks the transactional table's DML/DDL
     // dialect: MERGE INTO / UPDATE / DELETE on txtable targets and the
     // Delta-grammar statements route onto the TxSql face; every other

@@ -36,8 +36,9 @@ import graft.ops.{MaterializedView, TxTable}
   *
   * Conservatism ladder (cheapest test first; ANY doubt keeps the base
   * plan — correctness never depends on the rewrite firing, it can only
-  * skip an optimization; measured in `tools.MvRewriteProbe` at under a
-  * millisecond of detection on non-matching plans):
+  * skip an optimization; measured at under a millisecond of detection
+  * on non-matching plans — SCALE.md, "Round-17: MV query-rewrite
+  * probe"):
   *  1. registry non-empty and the Aggregate's child — seen through the
   *     attribute-only Project column pruning inserts — is a parquet
   *     scan whose location roots sit under a registered base dir;

@@ -76,7 +76,8 @@ object DedupQueries {
     * No SQL oracle by design — engine-internal hash values are not
     * reproducible in external engines (the portable md5 twin above is);
     * `MinHashFastSpec` pins family agreement instead, and the bench
-    * carries the speed story (see `tools.ScaleProbe` for the slope). */
+    * carries the speed story (README.md "Scaling evidence" has the
+    * 64× slope). */
   private val minhashFast = GraftQuery(
     "x_dedup_minhash_fast",
     (s, d) => Dedup.minhashNearDupsFast(Tables.documents(s, d), threshold = 0.8),

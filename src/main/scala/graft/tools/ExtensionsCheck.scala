@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * registration call anywhere. Run with
   * `sbt "runMain graft.tools.ExtensionsCheck"` (own JVM — the shared
   * test session cannot re-apply extensions).
-  * Prints `extensions-ok N` on success; throws on any resolution miss. */
+  * Prints `extensions-ok N` on success; throws on any resolution miss.
+  * Gated in the test suite by `graft.plans.ExtensionsCheckSpec`. */
 object ExtensionsCheck {
   def main(a: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[2]")
@@ -25,7 +26,6 @@ object ExtensionsCheck {
       "SELECT size(shingle_set('a b c d', 3))" -> 2,
       "SELECT size(minhash_sig(array('x', 'y'), 12))" -> 12,
       "SELECT size(minhash_sig_fast('a b c d', 3, 12))" -> 12,
-      "SELECT simhash32('') " -> 0L,
       "SELECT simhash64('') " -> 0L,
       "SELECT size(topk_pairs(s, i, 2)) FROM VALUES (1.0d, 1L), (2.0d, 2L), (3.0d, 3L) AS t(s, i)" -> 2,
       // r17: the bounded bucket-membership aggregate — k smallest kept

@@ -248,29 +248,23 @@ object MpWorker {
       sys.exit(1)
   }
 
-  /** Launch this worker in a fresh JVM sharing the caller's classpath;
+  /** Launch `mainClass` (this worker by default) in a fresh JVM sharing
+    * the caller's classpath, its combined stdout/stderr going to `log`;
     * returns the process. The caller's JVM already loads Spark and the
-    * engine, so its `java.class.path` (plus the JDK17 module opens
-    * Spark needs) is sufficient and correct for the child. */
-  def spawn(args: Seq[String]): Process = {
+    * engine, so its `java.class.path` (plus [[graft.Bench.AddOpens]],
+    * the JDK17 module opens Spark needs) is sufficient and correct for
+    * the child. */
+  def spawn(args: Seq[String], mainClass: String = "graft.tools.MpWorker",
+      log: File = Files.createTempFile("graft-mp-", ".log").toFile)
+      : Process = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java")
       .toString
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java) ++ opens ++ Seq(
+    val cmd = Seq(java) ++ graft.Bench.AddOpens ++ Seq(
       "-Xmx2g", "-cp", System.getProperty("java.class.path"),
-      "graft.tools.MpWorker") ++ args
+      mainClass) ++ args
     new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
-      .redirectOutput(ProcessBuilder.Redirect.to(
-        Files.createTempFile("graft-mp-", ".log").toFile))
+      .redirectOutput(ProcessBuilder.Redirect.to(log))
       .start()
   }
 }

@@ -11,9 +11,8 @@ import graft.queries.Registry
   * block shows ratios ≤ 1 — which says nothing about whether the
   * operators parallelize. This tool replicates the sf0.1 `documents`
   * and `lineitem` tables K× with DISJOINT ids and token spaces (the
-  * ScaleProbe isomorphism: the near-dup graph and the supplier↔part
-  * graph repeat per copy instead of exploding into cross-copy
-  * cliques), then times the top queries over the scaled directory at
+  * near-dup graph and the supplier↔part graph repeat per copy instead
+  * of exploding into cross-copy cliques), then times the top queries over the scaled directory at
   * whatever core count `SPARK_GRAFT_CPUS` names. Run it once at 8 and
   * once at 32; ratios materially > 1 at the scaled SF are the
   * parallelism evidence the fixed-cost-bound bench SF cannot produce.
@@ -22,6 +21,25 @@ import graft.queries.Registry
   * (default K = 64). The scaled directory is rebuilt only if absent —
   * it is probe INPUT, deterministic in K, never a bench artifact. */
 object ScaleBench {
+
+  /** Copy i shifts `doc_id` by i·DocStride and the lineitem keys by
+    * i·KeyStride. */
+  val DocStride = 10_000_000L
+  val KeyStride = 1_000_000L
+
+  /** Fails loudly unless every base id sits below its stride: an id at
+    * or past it would collide with the next copy's shifted ids and
+    * merge copies the replica keeps disjoint. `keyMaxima` maps each
+    * shifted lineitem key column to its base maximum. */
+  def requireStrides(maxDocId: Long, keyMaxima: Map[String, Long]): Unit = {
+    require(maxDocId < DocStride,
+      s"max(doc_id) = $maxDocId is not below the doc stride $DocStride")
+    keyMaxima.foreach { case (c, m) =>
+      require(m < KeyStride,
+        s"max($c) = $m is not below the key stride $KeyStride")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 64
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -39,9 +57,16 @@ object ScaleBench {
     val big = s"/tmp/graft_scalebench_${k}x"
     if (!new java.io.File(s"$big/_built").isFile) {
       val docs = spark.read.parquet(s"$base/documents.parquet")
+      val li = spark.read.parquet(s"$base/lineitem.parquet")
+      val keys = Seq("l_orderkey", "l_suppkey", "l_partkey")
+      val liMax = li.agg(max(col(keys.head)).cast("long"),
+        keys.tail.map(c => max(col(c)).cast("long")): _*).head()
+      requireStrides(
+        docs.agg(max(col("doc_id")).cast("long")).head().getLong(0),
+        keys.indices.map(i => keys(i) -> liMax.getLong(i)).toMap)
       (0 until k).map { i =>
         docs.select(
-          (col("doc_id") + lit(i.toLong * 10_000_000L)).as("doc_id"),
+          (col("doc_id") + lit(i.toLong * DocStride)).as("doc_id"),
           regexp_replace(col("text"), "(\\S+)", s"$$1zz$i").as("text"),
           col("lang"), col("source"), col("n_chars"))
       }.reduce(_ unionAll _)
@@ -50,14 +75,10 @@ object ScaleBench {
       // key shift preserves encKey's 1 ≤ k < 10⁹ domain (suppkey/
       // partkey ≤ ~2·10⁴ at sf0.1, + 63·10⁶ ≪ 10⁹) and keeps each
       // copy's supplier↔part incidence graph disjoint from the rest
-      val li = spark.read.parquet(s"$base/lineitem.parquet")
-      val liCols = li.columns
       (0 until k).map { i =>
-        val shift = lit(i.toLong * 1_000_000L)
-        li.select(liCols.map {
-          case c @ ("l_suppkey" | "l_partkey" | "l_orderkey") =>
-            (col(c) + shift).as(c)
-          case c => col(c)
+        val shift = lit(i.toLong * KeyStride)
+        li.select(li.columns.map { c =>
+          if (keys.contains(c)) (col(c) + shift).as(c) else col(c)
         }: _*)
       }.reduce(_ unionAll _)
         .repartition(32)

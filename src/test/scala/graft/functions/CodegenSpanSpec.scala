@@ -16,9 +16,9 @@ class CodegenSpanSpec extends SparkTestBase {
     .parquet(sf("sf0.001") + "/documents.parquet")
     .select(col("doc_id"),
       Dedup.shingles(col("text")).as("sh"),
-      Dedup.simhash32(col("text")).as("sh32"))
+      Dedup.simhash64(col("text")).as("sh64"))
     .select(col("doc_id"), Dedup.minhashSignature(col("sh")).as("sig"),
-      col("sh32"))
+      col("sh64"))
 
   test("dedup kernel projection sits inside a WholeStageCodegen span") {
     val planStr = hotProjection.queryExecution.executedPlan.toString
@@ -26,7 +26,7 @@ class CodegenSpanSpec extends SparkTestBase {
       .find(_.contains("minhash_sig")).getOrElse("")
     assert(projLine.trim.startsWith("*("),
       s"projection not codegen'd:\n$planStr")
-    assert(planStr.contains("shingle_set") && planStr.contains("simhash32"))
+    assert(planStr.contains("shingle_set") && planStr.contains("simhash64"))
   }
 
   test("generated code compiles: execution succeeds with fallback disabled") {

@@ -107,16 +107,6 @@ class KernelPropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("simhash32 stays in [0, 2^32) and ignores token order") {
-    (1 to 300).foreach { _ =>
-      val words = Seq.fill(1 + rnd.nextInt(20))("w" + rnd.nextInt(10))
-      val h1 = DedupKernels.simhash32(u(words.mkString(" ")))
-      val h2 = DedupKernels.simhash32(u(rnd.shuffle(words).mkString(" ")))
-      assert(h1 >= 0L && h1 < (1L << 32))
-      assert(h1 === h2) // bag-of-tokens: order-invariant by construction
-    }
-  }
-
   test("simhash64 ignores token order; single token = its md5-prefix hash") {
     (1 to 300).foreach { _ =>
       val words = Seq.fill(1 + rnd.nextInt(20))("w" + rnd.nextInt(10))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.ops.{Dedup, PortableHash, TextFunctions}
+import graft.ops.{Dedup, TextFunctions}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -42,20 +42,27 @@ class TextExpressionsSpec extends SparkTestBase {
         (a, b) => least(a, b)))
   }
 
+  /** 64-wide SimHash fold: each token's hash is md5 digest bytes 0-7
+    * big-endian, assembled from two 8-hex-char halves so no step leaves
+    * the signed 64-bit range; bit j is set iff more than half the tokens
+    * carry it. */
   private def foldSimhash(text: Column): Column = {
-    val hs = transform(foldTokens(text), t => PortableHash.hash32(t))
+    def half(t: Column, from: Int): Column =
+      conv(substring(md5(t), from, 8), 16, 10).cast(LongType)
+    val hs = transform(foldTokens(text),
+      t => shiftleft(half(t, 1), 32).bitwiseOR(half(t, 9)))
     val n = size(hs)
     val bitCounts = aggregate(
-      hs, array_repeat(lit(0L), 32),
+      hs, array_repeat(lit(0L), 64),
       (acc, h) => zip_with(acc,
-        array((0 until 32).map(j =>
+        array((0 until 64).map(j =>
           shiftrightunsigned(h, j).bitwiseAND(lit(1L))): _*),
         (a, b) => a + b))
-    val weights = array((0 until 32).map(j => lit(1L << j)): _*)
+    val weights = array((0 until 64).map(j => lit(1L << j)): _*)
     aggregate(
       zip_with(bitCounts, weights,
         (cnt, w) => when(cnt * 2 > n, w).otherwise(lit(0L))),
-      lit(0L), (a, x) => a + x)
+      lit(0L), (a, x) => a.bitwiseOR(x))
   }
 
   private lazy val docs =
@@ -98,9 +105,9 @@ class TextExpressionsSpec extends SparkTestBase {
     assert(bad.count() === 0)
   }
 
-  test("simhash32 matches the interpreted 32-wide zip_with fold bit-for-bit") {
+  test("simhash64 matches the interpreted 64-wide zip_with fold bit-for-bit") {
     val bad = docs
-      .select(Dedup.simhash32(col("text")).as("a"),
+      .select(Dedup.simhash64(col("text")).as("a"),
         foldSimhash(col("text")).as("b"))
       .where(not(col("a") <=> col("b")))
     assert(bad.count() === 0)
@@ -135,12 +142,10 @@ class TextExpressionsSpec extends SparkTestBase {
       """SELECT ws_tokens('A  b') AS t,
         |       shingle_set('a b c d', 3) AS s,
         |       minhash_sig(array('x'), 2) AS m,
-        |       simhash32('a') AS h,
         |       simhash64('hello') AS h64""".stripMargin).head()
     assert(r.getSeq[String](0) === Seq("a", "b"))
     assert(r.getSeq[String](1) === Seq("a b c", "b c d"))
     assert(r.getSeq[Long](2).length === 2)
-    assert(r.getLong(3) >= 0L && r.getLong(3) < (1L << 32))
-    assert(r.getLong(4) === 0x5d41402abc4b2a76L) // md5('hello') bytes 0-7
+    assert(r.getLong(3) === 0x5d41402abc4b2a76L) // md5('hello') bytes 0-7
   }
 }

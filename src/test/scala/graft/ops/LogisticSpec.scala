@@ -48,6 +48,16 @@ class LogisticSpec extends SparkTestBase {
     assert(w1 === w2)
   }
 
+  test("a null-bucket feature row is ignored: same weights as without it") {
+    import spark.implicits._
+    val (f, l) = fixture
+    val withNull = f.select(col("doc_id"), col("b"), col("x"))
+      .union(Seq((1L, Option.empty[Long], 0.7)).toDF("doc_id", "b", "x"))
+    val w0 = Logistic.train(f, l).as[(Long, Double)].collect().toMap
+    val w1 = Logistic.train(withNull, l).as[(Long, Double)].collect().toMap
+    assert(w1 === w0)
+  }
+
   test("score is the sigmoid of the margin") {
     import spark.implicits._
     val f = Seq((1L, 7L, 2.0)).toDF("doc_id", "b", "x")
