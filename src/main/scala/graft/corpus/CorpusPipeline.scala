@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.ops.{Dedup, PortableHash, Redaction, TextFunctions}
+import graft.ops.{Checkpoints, Dedup, PortableHash, Redaction, TextFunctions}
 
 /** The end-to-end corpus-curation pipeline — the document-side twin of
   * [[graft.immigration.ImmigrationPipeline]], proving the operators
@@ -84,8 +84,8 @@ object CorpusPipeline {
     // the eager checkpoint IS the action that fires obsInput/obsQuality
     // (their chain lives only on this probe side); nExact is the
     // checkpointed row count — no extra pass over source data
-    val keepExact = qualityObserved.join(losers, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val keepExact = Checkpoints.pin(
+      qualityObserved.join(losers, Seq("doc_id"), "left_anti"))
     val nExact = keepExact.count() // row count of the checkpoint
 
     // 3. near-dup clustering: production-speed signatures, exact verify,
@@ -99,15 +99,14 @@ object CorpusPipeline {
     //    id (not the doc id) means a near-dup of a training document can
     //    never surface in eval — the dropped dups' canonical carries the
     //    whole component to one side (see x_split_by_cluster)
-    val keepNear = keepExact.join(
+    val keepNear = Checkpoints.pin(keepExact.join(
         comp.where(col("id") === col("label"))
           .select(col("id").as("doc_id"), col("label")),
         "doc_id")
       .withColumn("split",
         when(PortableHash.hash60(col("label").cast("string")) % 100 < 90,
           "train").otherwise("eval"))
-      .drop("label")
-      .localCheckpoint(true)
+      .drop("label"))
     val nNear = keepNear.count()
 
     // 4. deterministic stratified downsample (reproducible across runs
@@ -130,6 +129,8 @@ object CorpusPipeline {
     //    rides along with a training shard
     packed.write.mode(SaveMode.Overwrite)
       .partitionBy("lang", "split").parquet(s"$outDir/corpus")
+    // everything below reads the written corpus, not the pins
+    Checkpoints.release(keepExact, keepNear)
     val out = spark.read.parquet(s"$outDir/corpus")
     val nSeqs = out.select(col("lang"), col("seq_id")).distinct().count()
 

@@ -117,13 +117,12 @@ object StreamingIngest {
     // the first attempt finished, recomputing would only burn work
     if (out.txnVersion(TxnApp).exists(_ >= batchId) &&
         idx.txnVersion(TxnApp).exists(_ >= batchId)) return
-    // pinned (not bare localCheckpoint) so each batch RELEASES its blocks
-    // — a continuous trigger would otherwise accumulate them for the life
-    // of the app (the leak class ops.Checkpoints exists to close)
-    val (sigs, sigBlocks) = graft.ops.Checkpoints.pin(
-      Dedup.shingleTable(batch)
-        .select(col("doc_id"), Dedup.minhashSignature(col("sh")).as("sig")))
-    try {
+    // pinned per batch and RELEASED on every exit — a continuous trigger
+    // would otherwise accumulate blocks for the life of the app (the
+    // leak class ops.Checkpoints exists to close)
+    val sigPlan = Dedup.shingleTable(batch)
+      .select(col("doc_id"), Dedup.minhashSignature(col("sh")).as("sig"))
+    graft.ops.Checkpoints.using(sigPlan) { sigs =>
       // within-batch near-dups: the lower id is canonical, higher ids drop
       val withinDups = Dedup.signatureNearDups(sigs, minSim)
         .select(col("b_id").as("doc_id")).distinct()
@@ -158,9 +157,8 @@ object StreamingIngest {
         case None => withinDups.limit(0)
       }
       val dropIds = withinDups.union(vsIndexDups).distinct()
-      val (kept, keptBlocks) = graft.ops.Checkpoints.pin(
-        batch.join(dropIds, Seq("doc_id"), "left_anti"))
-      try {
+      graft.ops.Checkpoints.using(
+          batch.join(dropIds, Seq("doc_id"), "left_anti")) { kept =>
         // out FIRST, then index, each append atomic under its txn
         // marker. Crash shapes: mid-append → nothing visible, replay
         // recomputes cleanly; between the two → out's marker skips
@@ -186,8 +184,8 @@ object StreamingIngest {
               Some((TxnApp, batchId)))
             ()
           } catch { case _: graft.ops.TxTable.TxnAlreadyApplied => () }
-      } finally graft.ops.Checkpoints.release(spark, keptBlocks)
-    } finally graft.ops.Checkpoints.release(spark, sigBlocks)
+      }
+    }
   }
 
   /** The signature index, if any batch has committed one yet —

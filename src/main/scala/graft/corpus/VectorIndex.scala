@@ -43,9 +43,8 @@ object VectorIndex {
     val e0 =
       if (embeddings.columns.contains("nrm")) embeddings
       else embeddings.withColumn("nrm", VectorOps.normNative(col("v")))
-    val (e, blocks) = graft.ops.Checkpoints.pin(
-      e0.select(col("vec_id"), col("v"), col("nrm")))
-    try {
+    graft.ops.Checkpoints.using(
+        e0.select(col("vec_id"), col("v"), col("nrm"))) { e =>
       val cents = SimilarityQueries.kmeansCentroids(e)
       val celled = SimilarityQueries.assignCells(e, cents)
         .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
@@ -54,8 +53,9 @@ object VectorIndex {
           col("cv").as("v"), col("cn").as("nrm"))
           .withColumn("cell", lit(null).cast("long"))
           .withColumn("part", lit("cent")))
-      TxTable(spark, dir).overwriteAs(Tag, combined).version
-    } finally graft.ops.Checkpoints.release(spark, blocks)
+      try TxTable(spark, dir).overwriteAs(Tag, combined).version
+      finally graft.ops.Checkpoints.release(cents)
+    }
   }
 
   /** Top-3 cosine neighbors per query row (`q_id`, `qv`) against the

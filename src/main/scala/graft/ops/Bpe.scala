@@ -43,12 +43,10 @@ object Bpe {
     * it. Training stops early if no pair is left to merge. */
   def train(words: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    val spark = words.sparkSession
     // initial segmentation: one symbol per character
-    var seg = words.select(col("word"), col("freq"),
+    var seg = Checkpoints.pin(words.select(col("word"), col("freq"),
       expr("concat_ws(' ', transform(sequence(1, length(word)), " +
-        "i -> substring(word, i, 1)))").as("seg"))
-      .localCheckpoint()
+        "i -> substring(word, i, 1)))").as("seg")))
     val merges = Vector.newBuilder[Merge]
     var r = 1
     var exhausted = false
@@ -76,15 +74,15 @@ object Bpe {
         // doubled-space rewrite: each gap becomes two spaces so every
         // occurrence of the pair owns its boundaries; plain replace is
         // then exactly greedy-left non-overlapping merging
-        val old = seg
-        seg = seg.withColumn("seg",
+        val next = Checkpoints.pin(seg.withColumn("seg",
           trim(replace(replace(
             concat(lit(" "), replace(col("seg"), lit(" "), lit("  ")),
               lit(" ")),
             lit(s" $a  $b "), lit(s" $merged ")),
-            lit("  "), lit(" "))))
-          .localCheckpoint() // eager: safe to release the previous round
-        old.unpersist()
+            lit("  "), lit(" ")))))
+        // eager pin: the superseded round is never read again
+        Checkpoints.release(seg)
+        seg = next
         r += 1
       }
     }

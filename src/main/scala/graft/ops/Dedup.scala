@@ -342,7 +342,7 @@ object Dedup {
     // vanishes with the truncated lineage, so downstream consumers of
     // the checkpoint never re-fire it.
     val o = org.apache.spark.sql.Observation()
-    val p = pairs.observe(o, count(lit(1)).as("n")).localCheckpoint(true)
+    val p = Checkpoints.pin(pairs.observe(o, count(lit(1)).as("n")))
     val nPairs = o.get("n").asInstanceOf[Long]
     // ids stays lazy: it is a trivial scan of the checkpointed p, and a
     // checkpoint of its own would cost one more job than it saves
@@ -530,7 +530,6 @@ object Dedup {
     // rounds' checkpoint blocks are released via Checkpoints (clearCache
     // does not cover them); only the final labels stay pinned, and the
     // caller's action reads from those.
-    val spark = vertices.sparkSession
     // the convergence checksum rides the checkpoint's own
     // materialization job as an observe() metric — a separate agg
     // action per round would double the job count of the loop, and
@@ -538,12 +537,11 @@ object Dedup {
     // active sets (measured: 2 jobs/round ≈ 1.9 s at sf0.1, halved by
     // the fusion). The observe node vanishes with the truncated lineage,
     // so downstream consumers of the checkpoint never re-fire it.
-    def pinWithChecksum(df: DataFrame)
-        : (DataFrame, Set[Int], java.math.BigDecimal) = {
+    def pinWithChecksum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val o = org.apache.spark.sql.Observation()
-      val (pinned, ids) = Checkpoints.pin(
+      val pinned = Checkpoints.pin(
         df.observe(o, sum(col("label").cast("decimal(38,0)")).as("s")))
-      (pinned, ids, o.get("s").asInstanceOf[java.math.BigDecimal])
+      (pinned, o.get("s").asInstanceOf[java.math.BigDecimal])
     }
     // ROUND-1 FUSION (r17): with labels₀(id) = id, round 1's
     // labels₀ ∪ (labels₀ ⋈ edges) reduces algebraically to
@@ -555,7 +553,7 @@ object Dedup {
     // can never BE the fixpoint when edges exist (any mirrored edge
     // (a,b), a≠b, strictly lowers the larger endpoint's label), so
     // convergence checking starts at round 2, same as before.
-    var (labels, labelIds, sum0) = pinWithChecksum(
+    var (labels, sum0) = pinWithChecksum(
       edges.select(col("src").as("id"), col("src").as("label"))
         .union(edges.select(col("dst").as("id"), col("src").as("label")))
         .groupBy("id").agg(min("label").as("label")))
@@ -564,13 +562,12 @@ object Dedup {
     while (!converged && iters < maxIters) {
       val prop = labels.join(edges, col("id") === col("src"))
         .select(col("dst").as("id"), col("label"))
-      val (next, nextIds, sum1) = pinWithChecksum(
+      val (next, sum1) = pinWithChecksum(
         labels.union(prop).groupBy("id").agg(min("label").as("label")))
       converged = sum1.compareTo(sum0) == 0
       sum0 = sum1
-      Checkpoints.release(spark, labelIds)
+      Checkpoints.release(labels)
       labels = next
-      labelIds = nextIds
       iters += 1
     }
     edges.unpersist()
@@ -608,7 +605,6 @@ object Dedup {
     * @return (id, label) — label = min vertex id of the component */
   def connectedComponentsStar(
       vertices: DataFrame, pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val spark = vertices.sparkSession
     def directed(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
     def norm(df: DataFrame): DataFrame = df
@@ -630,7 +626,7 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .union(m.select(col("u"), col("m").as("v"))))
     }
-    def pinWithSig(df: DataFrame): (DataFrame, Set[Int], (Long, Any)) = {
+    def pinWithSig(df: DataFrame): (DataFrame, (Long, Any)) = {
       val o = org.apache.spark.sql.Observation()
       // edge-multiset signature = count + sum of per-edge xxhash64:
       // order-independent and free of STRUCTURED collisions. The earlier
@@ -641,22 +637,21 @@ object Dedup {
       // adversarial-random (~2^-64 per pair), not id-magnitude-driven.
       // decimal accumulator: a sum of random 64-bit hashes overflows
       // LongType under ANSI semantics
-      val (pinned, ids) = Checkpoints.pin(df.observe(o,
+      val pinned = Checkpoints.pin(df.observe(o,
         count(lit(1)).as("n"),
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("s")))
-      (pinned, ids, (o.get("n").asInstanceOf[Long], o.get("s")))
+      (pinned, (o.get("n").asInstanceOf[Long], o.get("s")))
     }
-    var (edges, edgeIds, sig0) = pinWithSig(
+    var (edges, sig0) = pinWithSig(
       norm(pairs.select(col("a_id").as("u"), col("b_id").as("v"))))
     var converged = sig0._1 == 0L // no edges
     var iters = 0
     while (!converged && iters < maxIters) {
-      val (next, nextIds, sig1) = pinWithSig(smallStar(largeStar(edges)))
+      val (next, sig1) = pinWithSig(smallStar(largeStar(edges)))
       converged = sig1 == sig0
       sig0 = sig1
-      Checkpoints.release(spark, edgeIds)
+      Checkpoints.release(edges)
       edges = next
-      edgeIds = nextIds
       iters += 1
     }
     if (!converged) throw new IllegalStateException(

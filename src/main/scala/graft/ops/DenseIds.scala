@@ -47,11 +47,10 @@ object DenseIds {
     // only for a deterministic df that survives block loss.
     val rangedPlan = df.repartitionByRange(n, order: _*)
       .withColumn("__pid", spark_partition_id())
-    val (ranged, rangedIds) =
+    val ranged =
       if (eager) Checkpoints.pin(rangedPlan)
-      else (rangedPlan.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-        Set.empty[Int])
+      else rangedPlan.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // phase 1: per-partition counts — a |partitions|-row aggregate
     val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -75,8 +74,8 @@ object DenseIds {
     // by plan audits that need to see the window/exchange structure.
     if (!eager) assigned
     else {
-      val (out, _) = Checkpoints.pin(assigned)
-      Checkpoints.release(df.sparkSession, rangedIds)
+      val out = Checkpoints.pin(assigned)
+      Checkpoints.release(ranged)
       out
     }
   }

@@ -36,7 +36,6 @@ object Graph {
   def pageRank(edges: DataFrame, iterations: Int = 3,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst"))
 
     // out-degree weighted transition edges, built once for all rounds;
@@ -46,10 +45,9 @@ object Graph {
     // lets it broadcast the rank vector below (a lazy persist measured
     // ~35% slower here: sizes unknown at plan time, no broadcasts)
     val deg = e.groupBy("src").agg(count(lit(1)).as("__outdeg"))
-    val weighted = e.join(deg, "src")
+    val weighted = Checkpoints.pin(e.join(deg, "src")
       .select(col("src"), col("dst"),
-        (lit(1.0) / col("__outdeg")).as("__w"))
-      .localCheckpoint()
+        (lit(1.0) / col("__outdeg")).as("__w")))
     // nodes with no out-edges: their rank mass has nowhere to go and
     // is teleported uniformly each round; a MIRRORED/regular graph has
     // none at all, and the empty case skips the per-round dangling-mass
@@ -65,12 +63,12 @@ object Graph {
     // the pinned vector. Replaces four setup jobs (distinct+checkpoint,
     // count, isEmpty anti-join probe, dangling checkpoint) with one.
     val o = org.apache.spark.sql.Observation()
-    val nodesAgg = e.select(col("src").as("node"), lit(1).as("__has_out"))
-      .union(e.select(col("dst").as("node"), lit(0).as("__has_out")))
-      .groupBy("node").agg(max(col("__has_out")).as("__has_out"))
-      .observe(o, count(lit(1)).as("n"),
-        sum(lit(1) - col("__has_out")).as("dang"))
-      .localCheckpoint()
+    val nodesAgg = Checkpoints.pin(
+      e.select(col("src").as("node"), lit(1).as("__has_out"))
+        .union(e.select(col("dst").as("node"), lit(0).as("__has_out")))
+        .groupBy("node").agg(max(col("__has_out")).as("__has_out"))
+        .observe(o, count(lit(1)).as("n"),
+          sum(lit(1) - col("__has_out")).as("dang")))
     val nodes = nodesAgg.select(col("node"))
     val n = o.get("n").asInstanceOf[Long].toDouble
     val hasDangling = Option(o.get("dang"))
@@ -119,9 +117,13 @@ object Graph {
         } else contribs.select(col("node"),
           (lit((1.0 - damping) / n) +
             lit(damping) * col("__c")).as("pr"))
-      ranks = blended.localCheckpoint()
+      val next = Checkpoints.pin(blended)
+      Checkpoints.release(ranks)
+      ranks = next
       round += 1
     }
+    // the final round reads none of the setup pins
+    Checkpoints.release(weighted, nodesAgg)
     ranks
   }
 
@@ -147,7 +149,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, iterations: Int = 3,
       packedLongLabels: Boolean = false): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val e = Checkpoints.pin(edges.select(col("src"), col("dst")))
     // node vector WITH per-node in-degree: the same single exchange the
     // old `distinct` paid (groupBy on the union ≡ distinct), and the
     // max in-degree rides the pin job as an observe() metric — it gates
@@ -173,9 +175,8 @@ object Graph {
     // checkpoint's own materialization job as observe() metrics (r17)
     // instead of separate jobs over the pinned vector.
     val ob = org.apache.spark.sql.Observation()
-    val nodesAgg = nodes
-      .observe(ob, count(lit(1)).as("n"), max(col("__in")).as("maxin"))
-      .localCheckpoint()
+    val nodesAgg = Checkpoints.pin(nodes
+      .observe(ob, count(lit(1)).as("n"), max(col("__in")).as("maxin")))
     val nodesPinned = nodesAgg.select(col("node"))
     val bcast = ob.get("n").asInstanceOf[Long] <= 5000000L
     // FUSED-EXCHANGE rounds (r18, packed path): HashPartitioning(node2)
@@ -209,7 +210,7 @@ object Graph {
       // a message-less node keeps it — the exact keep-own coalesce the
       // former labels-LEFT-JOIN-winner produced, without the per-round
       // join or winner broadcast.
-      labels = (if (packedLongLabels) {
+      val next = Checkpoints.pin(if (packedLongLabels) {
         // PACKED fast path (r17): min_by/max_by over a struct ordering
         // key cannot hash-aggregate (struct aggregation buffers are not
         // UnsafeRow-mutable), so the generic path's argmax drops both
@@ -257,9 +258,12 @@ object Graph {
           .union(labels.select(col("node"), col("label"), lit(0L).as("__n")))
           .groupBy(col("node"))
           .agg(expr("min_by(label, struct(-__n, label))").as("label"))
-      }).localCheckpoint()
+      })
+      Checkpoints.release(labels)
+      labels = next
       round += 1
     }
+    Checkpoints.release(e, nodesAgg)
     labels
   }
 }

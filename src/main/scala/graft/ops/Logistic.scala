@@ -50,8 +50,7 @@ object Logistic {
     // An RDD-scan checkpoint drops output partitioning — an explain
     // probe showed it, since removed and kept in git history — so
     // checkpoint cannot carry the layout either.)
-    val f = features.select(col("doc_id"), col("b"), col("x"))
-      .localCheckpoint()
+    val f = Checkpoints.pin(features.select(col("doc_id"), col("b"), col("x")))
     // r17: labels attach to the feature table ONCE (inner broadcast
     // join, pinned) instead of a per-round residual join — y rides the
     // margin aggregation as max(y) (constant per example), so each
@@ -63,8 +62,8 @@ object Logistic {
     // the old left-join no-gradient case did. The broadcast join
     // streams f's rows in order, so per-example margin summation order
     // — and with it the fitted trajectory — is unchanged.
-    val fl = f.join(broadcast(labels.select(col("doc_id"), col("y"))),
-      "doc_id").localCheckpoint()
+    val fl = Checkpoints.pin(
+      f.join(broadcast(labels.select(col("doc_id"), col("y"))), "doc_id"))
     // the +1/3 makes the divisor (and so every rounded gradient)
     // non-decimal: sums of the rational (σ−y)·x terms can land EXACTLY
     // on a decimal rounding tie, which Spark (half-up) and other
@@ -133,6 +132,8 @@ object Logistic {
       w = w.map { case (b, wv) => b -> (wv - lr * g.getOrElse(b, 0.0)) }
       round_ += 1
     }
+    // the returned local relation reads neither pin
+    Checkpoints.release(f, fl)
     wFrame(w)
   }
 

@@ -127,27 +127,22 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
       Some(mv.overwriteAs(s"$Tag$head",
         derive(fullAggregate(base.readAt(head)), None)))
     } else if (dcntCols.isEmpty) {
-      val (next, blocks) = fold(mv.read(), base.readChanges(w, head), head)
-      // blocks release only AFTER the commit materialized the frame
-      try Some(mv.overwriteAs(s"$Tag$head", derive(next, None)))
-      finally Checkpoints.release(spark, blocks)
+      fold(mv.read(), base.readChanges(w, head), head)(next =>
+        Some(mv.overwriteAs(s"$Tag$head", derive(next, None))))
     } else {
       // ONE base-CDF evaluation for the whole refresh: the aux folds,
       // the MV fold, and the touched-group scope all read this pinned
       // window (each unpinned consumer would re-read and re-shuffle
       // the base CDF — measured costing more than the from-scratch
       // pair aggregation: SCALE.md, "Round-17 (late): DcntProbe")
-      val (changes, cBlocks) = Checkpoints.pin(base.readChanges(w, head))
-      try {
+      Checkpoints.using(base.readChanges(w, head)) { changes =>
         syncAuxFrame(changes, head)
-        val (tg, tBlocks) = Checkpoints.pin(
-          changes.select(groupCols.map(col): _*).distinct())
-        try {
-          val (next, blocks) = fold(mv.read(), changes, head)
-          try Some(mv.overwriteAs(s"$Tag$head", derive(next, Some(tg))))
-          finally Checkpoints.release(spark, blocks)
-        } finally Checkpoints.release(spark, tBlocks)
-      } finally Checkpoints.release(spark, cBlocks)
+        Checkpoints.using(
+            changes.select(groupCols.map(col): _*).distinct()) { tg =>
+          fold(mv.read(), changes, head)(next =>
+            Some(mv.overwriteAs(s"$Tag$head", derive(next, Some(tg)))))
+        }
+      }
     }
   }
 
@@ -159,19 +154,15 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
     if (upTo <= w) None
     else {
       syncAuxFrame(changes, upTo)
-      val (touched, tBlocks) =
-        if (dcntCols.isEmpty || w < 0L) (None, Set.empty[Int])
-        else { // first batch: full count, no touched scope
-          val (tg, b) = Checkpoints.pin(
-            changes.select(groupCols.map(col): _*).distinct())
-          (Some(tg), b)
-        }
-      try {
+      def commit(touched: Option[DataFrame]): Option[TxTable.Commit] = {
         val cur = if (w < 0L) emptyState() else mv.read()
-        val (next, blocks) = fold(cur, changes, upTo)
-        try Some(mv.overwriteAs(s"$Tag$upTo", derive(next, touched)))
-        finally Checkpoints.release(spark, blocks)
-      } finally Checkpoints.release(spark, tBlocks)
+        fold(cur, changes, upTo)(next =>
+          Some(mv.overwriteAs(s"$Tag$upTo", derive(next, touched))))
+      }
+      // first batch: full count, no touched scope
+      if (dcntCols.isEmpty || w < 0L) commit(None)
+      else Checkpoints.using(changes.select(groupCols.map(col): _*)
+        .distinct())(tg => commit(Some(tg)))
     }
   }
 
@@ -256,9 +247,8 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
     // (emptiness, the duplicate-key guard, the pruning-bounds agg, the
     // staged rewrite itself) and each pass would otherwise re-read and
     // re-aggregate the base CDF window
-    val (d, blocks) = Checkpoints.pin(
-      delta.withColumnRenamed(PairRows, "__d").where(col("__d") =!= 0L))
-    try {
+    Checkpoints.using(delta.withColumnRenamed(PairRows, "__d")
+        .where(col("__d") =!= 0L)) { d =>
       val txn = Some((AuxTxnApp, upTo))
       if (d.isEmpty) { aux.append(aux.read().limit(0), 50, txn); () }
       else {
@@ -273,7 +263,7 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
           txn = txn)
         ()
       }
-    } finally Checkpoints.release(spark, blocks)
+    }
   }
 
   /** The aux table's applied-base-version watermark: its `txn-` marker
@@ -476,80 +466,55 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
     * the window is pure inserts and fall back to the BOUNDED recompute
     * when it deletes — only delete-touched groups re-aggregate from
     * the base at `upTo`, the untouched remainder keeps the fold.
-    * Returns the result plus the checkpoint block ids backing it; the
-    * CALLER releases them after materializing (a localCheckpoint has
-    * no lineage to recompute from once released). */
-  private def fold(current: DataFrame, changes: DataFrame,
-      upTo: Long): (DataFrame, Set[Int]) = {
-    if (!hasExtrema) return (combine(current, deltaAggregate(changes)),
-      Set.empty)
-    // pins release on ANY exit: the caller's finally covers the pinned
-    // ids only after this returns them, so a failure between the first
-    // pin and the return (the delGroups pin materializing, the isEmpty
-    // action, the prune-bounds head()) must release here or the blocks
-    // leak for the session
-    val (pinned, blocks) = Checkpoints.pin(changes)
-    try fold0(current, pinned, blocks, upTo)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        Checkpoints.release(spark, blocks)
-        throw e
-    }
-  }
-
-  private def fold0(current: DataFrame, pinned: DataFrame,
-      blocks: Set[Int], upTo: Long): (DataFrame, Set[Int]) = {
-    val (delGroups, dgBlocks) = Checkpoints.pin(
-      pinned.where(col("_change_type") === "delete")
-        .select(groupCols.map(col): _*).distinct())
-    val all = blocks ++ dgBlocks
-    try fold1(current, pinned, delGroups, all, upTo)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        Checkpoints.release(spark, dgBlocks)
-        throw e
-    }
-  }
-
-  private def fold1(current: DataFrame, pinned: DataFrame,
-      delGroups: DataFrame, all: Set[Int], upTo: Long)
-      : (DataFrame, Set[Int]) = {
-    val next =
-      if (delGroups.isEmpty) combine(current, deltaAggregate(pinned))
-      else {
-        // rename the touched-group keys so the null-safe membership
-        // joins below resolve unambiguously (NULL is a group in SQL)
-        val dg = groupCols.foldLeft(delGroups)((df, c) =>
-          df.withColumnRenamed(c, c + "_g"))
-        def touched(df: DataFrame, joinType: String): DataFrame =
-          df.join(dg, groupCols.map(c => col(c) <=> col(c + "_g"))
-            .reduce(_ && _), joinType)
-        // untouched groups: pure-insert remainder (any delete marked
-        // its group), so the homomorphic fold stays exact for extrema
-        val folded = combine(touched(current, "left_anti"),
-          deltaAggregate(touched(pinned, "left_anti")))
-        // touched groups: re-aggregate from the base at upTo, scoped
-        // two ways. (1) FILE level: a single-key grouping prunes base
-        // files through the logged stats via the touched keys'
-        // [min,max] — the engine's stats-pruned read, pure I/O
-        // reduction (NULL-keyed groups disable it: null never enters
-        // min/max stats, so a range could wrongly drop a null-bearing
-        // file). (2) ROW level: the semi-join below is the exact
-        // filter either way, broadcast under the scan when small.
-        val recomputeBase =
-          if (groupCols.size == 1) {
-            val g = groupCols.head
-            val r = delGroups.agg(min(col(g)), max(col(g)),
-              sum(when(col(g).isNull, 1L).otherwise(0L))).head()
-            if (r.getLong(2) == 0L && !r.isNullAt(0))
-              base.readPruned(upTo, Seq((g, Some(r.get(0)), Some(r.get(1)))))
-            else base.readAt(upTo)
-          } else base.readAt(upTo)
-        val recomputed = fullAggregate(touched(recomputeBase, "left_semi"))
-        folded.unionByName(recomputed)
+    * The folded frame may read pins, so it is handed to `commit`, which
+    * must materialize it; the pins release on every exit path once
+    * `commit` returns (a localCheckpoint has no lineage to recompute
+    * from once released). */
+  private def fold[T](current: DataFrame, changes: DataFrame,
+      upTo: Long)(commit: DataFrame => T): T =
+    if (!hasExtrema) commit(combine(current, deltaAggregate(changes)))
+    else Checkpoints.using(changes) { pinned =>
+      Checkpoints.using(pinned.where(col("_change_type") === "delete")
+          .select(groupCols.map(col): _*).distinct()) { delGroups =>
+        commit(foldExtrema(current, pinned, delGroups, upTo))
       }
-    (next, all)
-  }
+    }
+
+  private def foldExtrema(current: DataFrame, pinned: DataFrame,
+      delGroups: DataFrame, upTo: Long): DataFrame =
+    if (delGroups.isEmpty) combine(current, deltaAggregate(pinned))
+    else {
+      // rename the touched-group keys so the null-safe membership
+      // joins below resolve unambiguously (NULL is a group in SQL)
+      val dg = groupCols.foldLeft(delGroups)((df, c) =>
+        df.withColumnRenamed(c, c + "_g"))
+      def touched(df: DataFrame, joinType: String): DataFrame =
+        df.join(dg, groupCols.map(c => col(c) <=> col(c + "_g"))
+          .reduce(_ && _), joinType)
+      // untouched groups: pure-insert remainder (any delete marked
+      // its group), so the homomorphic fold stays exact for extrema
+      val folded = combine(touched(current, "left_anti"),
+        deltaAggregate(touched(pinned, "left_anti")))
+      // touched groups: re-aggregate from the base at upTo, scoped
+      // two ways. (1) FILE level: a single-key grouping prunes base
+      // files through the logged stats via the touched keys'
+      // [min,max] — the engine's stats-pruned read, pure I/O
+      // reduction (NULL-keyed groups disable it: null never enters
+      // min/max stats, so a range could wrongly drop a null-bearing
+      // file). (2) ROW level: the semi-join below is the exact
+      // filter either way, broadcast under the scan when small.
+      val recomputeBase =
+        if (groupCols.size == 1) {
+          val g = groupCols.head
+          val r = delGroups.agg(min(col(g)), max(col(g)),
+            sum(when(col(g).isNull, 1L).otherwise(0L))).head()
+          if (r.getLong(2) == 0L && !r.isNullAt(0))
+            base.readPruned(upTo, Seq((g, Some(r.get(0)), Some(r.get(1)))))
+          else base.readAt(upTo)
+        } else base.readAt(upTo)
+      val recomputed = fullAggregate(touched(recomputeBase, "left_semi"))
+      folded.unionByName(recomputed)
+    }
 
   /** Signed aggregate of a CDF frame: inserts +1, deletes -1 for the
     * COUNT/SUM class; plain min/max for extrema (callers only hand

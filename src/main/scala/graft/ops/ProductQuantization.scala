@@ -89,27 +89,25 @@ object ProductQuantization {
       s"PQ seeding expects vec_ids 0, $SeedStride, …, ${(K - 1) * SeedStride} " +
         s"present: got $nSeeds of ${M * K} seed subvectors; a non-dense " +
         "codebook would misalign pq_adc's flat m*K+c lookup")
-    val (fitted, _) = (1 to Iters)
-      .foldLeft((s0, Set.empty[Int])) { case ((cents, prior), _) =>
-        val means = assign(sub, cents)
-          .groupBy(col("m"), col("c").as("c_id"))
-          .agg(call_function("vec_sum", col("sv")).as("ssum"),
-            count(lit(1)).as("n"))
+    (1 to Iters).foldLeft(s0) { (cents, _) =>
+      val means = assign(sub, cents)
+        .groupBy(col("m"), col("c").as("c_id"))
+        .agg(call_function("vec_sum", col("sv")).as("ssum"),
+          count(lit(1)).as("n"))
+        .select(col("m"), col("c_id"),
+          transform(col("ssum"), x => round(x / col("n"), 6)).as("mcv"))
+      // pin per round: the fold otherwise nests each round's plan
+      // inside the next (triangular recomputation); superseded rounds'
+      // blocks are released immediately (see the IVF trainer)
+      val next = Checkpoints.pin(
+        cents.select(col("m"), col("c_id"), col("cv").as("pcv"))
+          .join(means, Seq("m", "c_id"), "left")
           .select(col("m"), col("c_id"),
-            transform(col("ssum"), x => round(x / col("n"), 6)).as("mcv"))
-        // pin per round: the fold otherwise nests each round's plan
-        // inside the next (triangular recomputation); superseded rounds'
-        // blocks are released immediately (see the IVF trainer)
-        val (next, ids) = Checkpoints.pin(
-          cents.select(col("m"), col("c_id"), col("cv").as("pcv"))
-            .join(means, Seq("m", "c_id"), "left")
-            .select(col("m"), col("c_id"),
-              coalesce(col("mcv"), col("pcv")).as("cv"))
-            .withColumn("cn2", VectorOps.dotNative(col("cv"), col("cv"))))
-        Checkpoints.release(e.sparkSession, prior)
-        (next, ids)
-      }
-    fitted
+            coalesce(col("mcv"), col("pcv")).as("cv"))
+          .withColumn("cn2", VectorOps.dotNative(col("cv"), col("cv"))))
+      Checkpoints.release(cents)
+      next
+    }
   }
 
   /** (vec_id, codes): each vector's M codebook ids, ordered by subspace —

@@ -70,7 +70,7 @@ object RuntimeFilters {
       fact: DataFrame, factKey: String,
       dim: DataFrame, dimKey: String,
       fpp: Double = 0.01): DataFrame = {
-    val (pinned, _) = Checkpoints.pin(dim)
+    val pinned = Checkpoints.pin(dim)
     val bytes = bloomBytes(pinned, dimKey, fpp)
     fact.where(mightContain(bytes, fact(factKey)))
       .join(pinned, fact(factKey) === pinned(dimKey))

@@ -44,20 +44,19 @@ object Scd2 {
     * `version` and opens the update's row; a key only in `updates`
     * opens a new chain; everything else is carried. `updates` must be
     * unique per key — the same refusal (and for the same reason) as
-    * MERGE's duplicate-source guard. */
+    * MERGE's duplicate-source guard.
+    *
+    * `updates` is read twice: by the duplicate-key guard (an eager
+    * action here) and again when the returned plan executes. Pass a
+    * pinned frame ([[Checkpoints.pin]]) when its derivation is costly
+    * or non-deterministic, and release it once the result is
+    * materialized — the operator pins nothing itself, so it leaves no
+    * blocks behind. */
   def apply(state: DataFrame, updates: DataFrame, keys: Seq[String],
       trackCols: Seq[String], version: Long): DataFrame = {
     require(keys.nonEmpty, "SCD2 needs at least one business key column")
     require(trackCols.nonEmpty, "SCD2 needs at least one tracked column")
-    // r18: the batch is pinned once (eager localCheckpoint) — the
-    // duplicate-key guard below is an eager action, and without the pin
-    // it re-runs the caller's whole batch derivation (joins, aggregates)
-    // a second time when the returned plan executes. A daily batch is
-    // small against the dimension by the operator's own contract, so
-    // the materialization is the cheap side of that trade (the same
-    // source-pinning discipline as TxTable.merge).
-    val u = updates.localCheckpoint()
-    val dupKeys = u.groupBy(keys.map(col): _*)
+    val dupKeys = updates.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n")).where(col("__n") > 1).limit(1).count()
     require(dupKeys == 0L,
       s"updates have duplicate rows per key ${keys.mkString(",")}: a " +
@@ -70,7 +69,7 @@ object Scd2 {
     // same pattern as MERGE's __tp/__sp (a null business key must not
     // silently demote a row to "unmatched")
     val open = state.where(col(Current)).withColumn("__tp", lit(1)).alias("t")
-    val s = u.withColumn("__sp", lit(1)).alias("s")
+    val s = updates.withColumn("__sp", lit(1)).alias("s")
     val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
     val joined = open.join(s, keyCond, "full_outer")
     val changed = trackCols

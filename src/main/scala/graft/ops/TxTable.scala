@@ -1745,10 +1745,9 @@ final class TxTable private (spark: SparkSession, dir: String,
             "cannot supply it (the engine allocates)")
       }
       val withPid = df1.withColumn("__pid", spark_partition_id())
-      val (pinned, blocks) = Checkpoints.pin(withPid)
       var staged: Seq[String] = Nil
       var committed: Option[Commit] = None
-      try {
+      Checkpoints.using(withPid) { pinned =>
         val counts = pinned.groupBy("__pid")
           .agg(count(lit(1)).as("__n"))
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1796,7 +1795,7 @@ final class TxTable private (spark: SparkSession, dir: String,
           }
           staged = Nil
         }
-      } finally Checkpoints.release(spark, blocks)
+      }
       committed.foreach(return _)
       attempt += 1
     }
@@ -3833,12 +3832,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     // source for every retry attempt — the same reason Delta's MERGE
     // materializes its source. Released on every exit path; the
     // staged parquet files, not the pinned blocks, carry the result.
-    val (src, srcBlocks) = Checkpoints.pin(source)
-    try mergePinned(src, keys, srcKeys, whenMatchedUpdate,
-      whenMatchedDelete, whenNotMatchedInsert, maxRetries, updateSet,
-      insertValues, whenNotMatchedBySourceUpdate,
-      whenNotMatchedBySourceDelete, widenBy, txn, nullSafeKeys)
-    finally Checkpoints.release(spark, srcBlocks)
+    Checkpoints.using(source)(mergePinned(_, keys, srcKeys,
+      whenMatchedUpdate, whenMatchedDelete, whenNotMatchedInsert,
+      maxRetries, updateSet, insertValues, whenNotMatchedBySourceUpdate,
+      whenNotMatchedBySourceDelete, widenBy, txn, nullSafeKeys))
   }
 
   /** [[merge]]'s body over the pinned source — see the pin note

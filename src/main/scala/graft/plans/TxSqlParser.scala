@@ -798,15 +798,14 @@ case class TxReplaceAsSelect(query: LogicalPlan, nameParts: Seq[String],
       // through saveAsTable so the re-created table stays MANAGED
       // (DROP keeps reclaiming its directory) and partitionBy rides
       // the writer's own channel — no parser dependence
-      val (pinned, blocks) = graft.ops.Checkpoints.pin(df)
-      try {
+      graft.ops.Checkpoints.using(df) { pinned =>
         pinned.count() // force evaluation before anything drops
         if (exists) TxSqlParser.dropRealTable(sparkSession, nameParts)
         var w = pinned.write.format("txtable")
         if (partitionCols.nonEmpty)
           w = w.partitionBy(partitionCols: _*)
         w.saveAsTable(quoted)
-      } finally graft.ops.Checkpoints.release(sparkSession, blocks)
+      }
     }
     if (clusterBy.nonEmpty)
       TxSql(sparkSession).resolveParts(nameParts).setProperties(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 
 /** Link-analysis queries over graphs derived from the testdata. The
   * supplier↔part incidence graph (distinct `lineitem` pairs, mirrored
@@ -34,13 +34,15 @@ object GraphQueries {
       // PageRank never compares node ids beyond equality, so the
       // bijection is invisible to the arithmetic and the display
       // strings are rebuilt once, on the O(nodes) result vector.
-      val base = Tables.lineitem(s, d)
+      val base = Checkpoints.pin(Tables.lineitem(s, d)
         .select((col("l_suppkey") * 2).as("src"),
           (col("l_partkey") * 2 + 1).as("dst"))
-        .distinct().localCheckpoint()
+        .distinct())
       val edges = base.union(
         base.select(col("dst").as("src"), col("src").as("dst")))
       val ranks = Graph.pageRank(edges, iterations = 3, damping = 0.85)
+      // ranks reads its own pin, not the edges
+      Checkpoints.release(base)
       // the returned vector is materialized — N is a cheap count of it
       val n = ranks.count().toDouble
       ranks.select(
@@ -129,19 +131,20 @@ object GraphQueries {
   private val labelProp = GraftQuery(
     "x_graph_label_prop",
     (s, d) => {
-      val base = Tables.lineitem(s, d)
+      val base = Checkpoints.pin(Tables.lineitem(s, d)
         .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
         .distinct()
         .select(encKey(sPrefix = true, col("sk")).as("src"),
-          encKey(sPrefix = false, col("pk")).as("dst"))
-        .localCheckpoint()
+          encKey(sPrefix = false, col("pk")).as("dst")))
       val edges = base.union(
         base.select(col("dst").as("src"), col("src").as("dst")))
       // encKey values are < 2·10¹⁰·16 < 2³⁹, inside the packed-argmax
       // domain — the round's two aggregates stay HashAggregates
-      Graph.labelPropagation(edges, iterations = 3, packedLongLabels = true)
-        .select(decKey(col("node")).as("node"),
-          decKey(col("label")).as("label"))
+      val labels =
+        Graph.labelPropagation(edges, iterations = 3, packedLongLabels = true)
+      Checkpoints.release(base)
+      labels.select(decKey(col("node")).as("node"),
+        decKey(col("label")).as("label"))
     },
     Some {
       val prelude = """WITH b AS (SELECT DISTINCT 's' || l_suppkey AS src,

@@ -236,27 +236,25 @@ object SimilarityQueries {
   private[graft] def kmeansCentroids(e: DataFrame): DataFrame = {
     val seeds = e.where(col("vec_id") % seedStride(e) === 0)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val (fitted, _) = (1 to IvfIters)
-      .foldLeft((seeds, Set.empty[Int])) { case ((cents, priorIds), _) =>
-        // localCheckpoint per iteration: the fold otherwise nests each
-        // round's plan inside the next, re-running iteration 1's
-        // assignment three times (triangular recomputation) — the
-        // centroid table is ~|corpus|/50 rows, trivially cheap to pin.
-        // Superseded rounds' checkpoint blocks are released immediately
-        // (clearCache never frees them); the final round stays pinned
-        // for the assign/probe consumers.
-        val (next, ids) = graft.ops.Checkpoints.pin(
-          assignCells(e, cents)
-            .groupBy("cell")
-            .agg(call_function("vec_sum", col("v")).as("sv"),
-              count(lit(1)).as("n"))
-            .select(col("cell").as("c_id"),
-              transform(col("sv"), x => round(x / col("n"), 6)).as("cv"))
-            .withColumn("cn", VectorOps.normNative(col("cv"))))
-        graft.ops.Checkpoints.release(e.sparkSession, priorIds)
-        (next, ids)
-      }
-    fitted
+    (1 to IvfIters).foldLeft(seeds) { (cents, _) =>
+      // localCheckpoint per iteration: the fold otherwise nests each
+      // round's plan inside the next, re-running iteration 1's
+      // assignment three times (triangular recomputation) — the
+      // centroid table is ~|corpus|/50 rows, trivially cheap to pin.
+      // Superseded rounds' checkpoint blocks are released immediately
+      // (clearCache never frees them); the final round stays pinned
+      // for the assign/probe consumers.
+      val next = graft.ops.Checkpoints.pin(
+        assignCells(e, cents)
+          .groupBy("cell")
+          .agg(call_function("vec_sum", col("v")).as("sv"),
+            count(lit(1)).as("n"))
+          .select(col("cell").as("c_id"),
+            transform(col("sv"), x => round(x / col("n"), 6)).as("cv"))
+          .withColumn("cn", VectorOps.normNative(col("cv"))))
+      graft.ops.Checkpoints.release(cents)
+      next
+    }
   }
 
   /** IVF (inverted-file) ANN: k-means centroids (deterministic Lloyd

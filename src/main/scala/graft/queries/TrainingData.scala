@@ -1132,17 +1132,15 @@ object TrainingData {
       // for its loop) and the final score pass consume f — without the
       // checkpoint the explode + two-aggregate derivation re-runs per
       // consumer (score was recomputing the whole chain)
-      val f = posted.groupBy("doc_id", "b")
+      val f = graft.ops.Checkpoints.pin(posted.groupBy("doc_id", "b")
         .agg(count(lit(1)).as("cnt"))
         .join(tot, "doc_id")
         .select(col("doc_id"), col("b"),
-          (col("cnt") / (col("nt") + lit(1.0 / 3.0))).as("x"))
-        .localCheckpoint()
-      val l = Tables.documents(s, d)
+          (col("cnt") / (col("nt") + lit(1.0 / 3.0))).as("x")))
+      val l = graft.ops.Checkpoints.pin(Tables.documents(s, d)
         .join(tot.select("doc_id"), "doc_id")
         .select(col("doc_id"),
-          when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
-        .localCheckpoint()
+          when(col("lang") === "en", 1.0).otherwise(0.0).as("y")))
       val w = graft.ops.Logistic.train(f, l, lr = 1.0 / 3.0,
         iterations = 3)
       graft.ops.Logistic.score(f, w)

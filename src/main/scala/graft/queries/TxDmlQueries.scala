@@ -953,8 +953,10 @@ object TxDmlQueries {
         col("c_custkey") === col("o_custkey"), "left_anti")
       val updates = changed.unionByName(fresh).unionByName(unchanged)
       val state = graft.ops.Scd2.init(customer, version = 1L)
-      graft.ops.Scd2(state, updates, Seq("c_custkey"),
-          Seq("c_acctbal", "c_mktsegment"), version = 2L)
+      // pinned for Scd2's two reads; the pin lives as long as the
+      // returned plan
+      graft.ops.Scd2(state, graft.ops.Checkpoints.pin(updates),
+          Seq("c_custkey"), Seq("c_acctbal", "c_mktsegment"), version = 2L)
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           round(col("c_acctbal"), 2).as("c_acctbal"), col("c_mktsegment"),
           col("_valid_from"), col("_valid_to"),

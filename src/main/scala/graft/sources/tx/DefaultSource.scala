@@ -328,8 +328,7 @@ final class DefaultSource extends StreamSourceProvider with DataSourceRegister
           // DEFAULT allocation and the GENERATED-ALWAYS refusal
           // mid-statement — both passes must see ONE materialization
           // (the same discipline as appendWithIdentity's pin)
-          val (pinned, blocks) = graft.ops.Checkpoints.pin(data)
-          try {
+          graft.ops.Checkpoints.using(data) { pinned =>
             val nn = pinned.agg(
               org.apache.spark.sql.functions.count(
                 org.apache.spark.sql.functions.col(idCols.head)),
@@ -344,7 +343,7 @@ final class DefaultSource extends StreamSourceProvider with DataSourceRegister
             } else if (insertPartCols.nonEmpty) {
               t.appendPartitioned(cleaned, insertPartCols); ()
             } else { t.append(cleaned); () }
-          } finally graft.ops.Checkpoints.release(ctx.sparkSession, blocks)
+          }
         }
       }
       override def buildScan(requiredColumns: Array[String],
@@ -963,14 +962,13 @@ final class TxTableSink(
       }
       // pin: the merge evaluates the source several times (dup probe,
       // bounds agg, join) — one materialization for all passes
-      val (pinned, blocks) = graft.ops.Checkpoints.pin(latest)
       // STATS-PRUNED latest-wins: update every matched row, insert
       // every unmatched one. merge() bounds the rewrite to files whose
       // logged key ranges overlap the batch — per-trigger cost is
       // O(touched files), where a full upsert would rewrite the WHOLE
       // table every micro-batch (the difference between a CDC sink
       // that scales to 100 TB and one that does not)
-      try {
+      graft.ops.Checkpoints.using(latest) { pinned =>
         t.merge(pinned, mergeKeys,
           whenMatchedUpdate =
             Some(org.apache.spark.sql.functions.lit(true)),
@@ -978,7 +976,7 @@ final class TxTableSink(
             Some(org.apache.spark.sql.functions.lit(true)),
           txn = txn)
         ()
-      } finally graft.ops.Checkpoints.release(batch.sparkSession, blocks)
+      }
     } else if (mode == OutputMode.Complete()) {
       t.overwriteAs("overwrite", batch, layout = partitionCols,
         txn = txn); ()

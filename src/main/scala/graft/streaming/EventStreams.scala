@@ -317,11 +317,10 @@ object EventStreams {
         // re-reads the parquet snapshot, never this frame, and under a
         // continuous trigger unreleased blocks accumulate for the life
         // of the app.
-        val (merged, blocks) = graft.ops.Checkpoints.pin(
-          graft.ops.Upsert.latestWins(target, latest, Seq(keyCol)))
-        try merged.write.mode("overwrite").parquet(snapshotDir)
-        finally graft.ops.Checkpoints.release(spark, blocks)
-        ()
+        graft.ops.Checkpoints.using(
+          graft.ops.Upsert.latestWins(target, latest, Seq(keyCol))) {
+          _.write.mode("overwrite").parquet(snapshotDir)
+        }
       }
       .start()
   }
@@ -415,10 +414,14 @@ object EventStreams {
           if (empty) 1L
           else state.agg(max(col(graft.ops.Scd2.ValidFrom)))
             .head().getLong(0) + 1L
-        // no pinning dance: overwrite STAGES the new content while the
-        // old version's files are still live (vacuum, not overwrite,
-        // reclaims them) — the protocol removes read-your-own-delete
-        t.overwrite(graft.ops.Scd2(state, latest, keys, trackCols, version))
+        // no pinning dance for the state: overwrite STAGES the new
+        // content while the old version's files are still live (vacuum,
+        // not overwrite, reclaims them) — the protocol removes
+        // read-your-own-delete. The batch is pinned for Scd2's two reads
+        // and released once the overwrite has committed.
+        graft.ops.Checkpoints.using(latest) { u =>
+          t.overwrite(graft.ops.Scd2(state, u, keys, trackCols, version))
+        }
         ()
       }
       .start()
@@ -461,13 +464,12 @@ object EventStreams {
         val prior =
           if (hasData) spark.read.parquet(snapshotDir).where(lit(true))
           else fresh.limit(0)
-        val (merged, blocks) = graft.ops.Checkpoints.pin(
+        graft.ops.Checkpoints.using(
           prior.unionByName(fresh)
             .groupBy("day", "event_type")
-            .agg(expr("hll_union_agg(sk)").as("sk")))
-        try merged.write.mode("overwrite").parquet(snapshotDir)
-        finally graft.ops.Checkpoints.release(spark, blocks)
-        ()
+            .agg(expr("hll_union_agg(sk)").as("sk"))) {
+          _.write.mode("overwrite").parquet(snapshotDir)
+        }
       }
       .start()
   }
@@ -627,10 +629,9 @@ object EventStreams {
           case n => lit(null).cast(f.dataType).as(n)
         }
       }: _*)
-      val (pinned, blocks) = graft.ops.Checkpoints.pin(
-        stamped.unionByName(markerRows))
-      try pinned.write.mode("overwrite").parquet(snapshotDir)
-      finally graft.ops.Checkpoints.release(spark, blocks)
+      graft.ops.Checkpoints.using(stamped.unionByName(markerRows)) {
+        _.write.mode("overwrite").parquet(snapshotDir)
+      }
     }
   }
 
