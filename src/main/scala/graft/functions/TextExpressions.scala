@@ -4,10 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,7 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `h2` = hex chars 17-30 = top 56 bits of digest bytes 8-15;
   *  - MinHash component i = min over shingles of `h1 + i*h2`
   *    (Kirsch–Mitzenhacker double hashing; max < 2^61, no overflow);
-  *  - SimHash token hash = first 8 hex chars = digest bytes 0-3.
+  *  - SimHash token hash = first 16 hex chars = digest bytes 0-7;
+  *  - hashed-bucket token hash = first 8 hex chars = digest bytes 0-3 as
+  *    an unsigned 32-bit value (`PortableHash.hash32`), taken `% buckets`.
   */
 object DedupKernels {
 
@@ -226,6 +228,52 @@ object DedupKernels {
     }
     sig
   }
+
+  /** Hashed-bucket weighted fold: `acc = 0.0; acc += w(hash32(t) % buckets)`
+    * over the tokens in order — the strict left fold of the interpreted
+    * `aggregate(toks, 0.0, (acc, t) -> acc + element_at(map, ...))`, so
+    * the sum is bit-identical to it. The model is `keys` (distinct
+    * buckets, ascending) with `weights` aligned to them; each token costs
+    * one md5 and one binary search, O(log B). Null (as the fold's lookup
+    * gives) for a null token, a bucket absent from `keys`, or a null
+    * weight. */
+  def hashedBucketFold(toks: ArrayData, keys: ArrayData, weights: ArrayData,
+      buckets: Int): java.lang.Double = {
+    require(keys.numElements() == weights.numElements(),
+      s"hashed_bucket_fold: ${keys.numElements()} buckets but " +
+        s"${weights.numElements()} weights")
+    val md = mdLocal.get()
+    val n = toks.numElements()
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (toks.isNullAt(i)) return null
+      val d = md.digest(toks.getUTF8String(i).getBytes)
+      val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
+        ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
+      val at = findBucket(keys, h % buckets)
+      if (at < 0 || weights.isNullAt(at)) return null
+      acc += weights.getDouble(at)
+      i += 1
+    }
+    acc
+  }
+
+  /** Index of `b` in the ascending `keys`, or -1 when absent (a null key
+    * on the search path also reads as absent). */
+  private def findBucket(keys: ArrayData, b: Long): Int = {
+    var lo = 0
+    var hi = keys.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      if (keys.isNullAt(mid)) return -1
+      val k = keys.getLong(mid)
+      if (k < b) lo = mid + 1
+      else if (k > b) hi = mid - 1
+      else return mid
+    }
+    -1
+  }
 }
 
 /** `ws_tokens(string) -> array<string>`: lower-cased whitespace tokens,
@@ -355,6 +403,66 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
 object SimHash64 {
   val info = new ExpressionInfo(classOf[SimHash64].getName, "simhash64")
+}
+
+/** `hashed_bucket_fold(tokens array<string>, keys array<bigint>,
+  * weights array<double>, n) -> double`: the summed bucket weights of a
+  * token array under a hashed-linear model (see
+  * [[DedupKernels.hashedBucketFold]]). `keys` must hold distinct buckets
+  * in ascending order with `weights` aligned to them, as the `key` and
+  * `value` fields of `sort_array(map_entries(model))` are; `n` is a
+  * literal int bucket count >= 1. */
+case class HashedBucketFold(toks: Expression, keys: Expression,
+    weights: Expression, bucketsExpr: Expression) extends QuaternaryExpression {
+
+  override def first: Expression = toks
+  override def second: Expression = keys
+  override def third: Expression = weights
+  override def fourth: Expression = bucketsExpr
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "hashed_bucket_fold"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (toks.dataType, keys.dataType, weights.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(LongType, _),
+          ArrayType(DoubleType, _)) =>
+        if (bucketsExpr.dataType == IntegerType && bucketsExpr.foldable &&
+            bucketsExpr.eval() != null && bucketsExpr.eval().asInstanceOf[Int] >= 1)
+          TypeCheckResult.TypeCheckSuccess
+        else TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires a literal int bucket count >= 1")
+      case (t, k, w) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (array<string>, array<bigint>, array<double>, " +
+          s"literal int n), got (${t.sql}, ${k.sql}, ${w.sql}, " +
+          s"${bucketsExpr.dataType.sql})")
+    }
+
+  override def nullSafeEval(t: Any, k: Any, w: Any, n: Any): Any =
+    DedupKernels.hashedBucketFold(t.asInstanceOf[ArrayData],
+      k.asInstanceOf[ArrayData], w.asInstanceOf[ArrayData], n.asInstanceOf[Int])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (t, k, w, n) => {
+      val r = ctx.freshName("raw")
+      s"""
+         |java.lang.Double $r =
+         |  graft.functions.DedupKernels.hashedBucketFold($t, $k, $w, $n);
+         |${ev.isNull} = $r == null;
+         |if (!${ev.isNull}) ${ev.value} = $r.doubleValue();
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression,
+      newFourth: Expression): HashedBucketFold =
+    copy(toks = newFirst, keys = newSecond, weights = newThird,
+      bucketsExpr = newFourth)
+}
+
+object HashedBucketFold {
+  val info =
+    new ExpressionInfo(classOf[HashedBucketFold].getName, "hashed_bucket_fold")
 }
 
 /** `nfc_normalize(string) -> string`: Unicode NFC canonical form

@@ -49,6 +49,8 @@ object VectorExpressions {
       c => MinHashSigFast(c(0), c(1), c(2))),
     (FunctionIdentifier("simhash64"), SimHash64.info,
       c => SimHash64(c.head)),
+    (FunctionIdentifier("hashed_bucket_fold"), HashedBucketFold.info,
+      c => HashedBucketFold(c(0), c(1), c(2), c(3))),
     (FunctionIdentifier("nfc_normalize"), NfcNormalize.info,
       c => NfcNormalize(c.head)),
     (FunctionIdentifier("morton2"), Morton2.info,

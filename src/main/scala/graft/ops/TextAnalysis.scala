@@ -94,33 +94,51 @@ object TextAnalysis {
     *
     * `weights` is the model artifact — a (b: bucket id, w: weight)
     * table covering every bucket in [0, B). It is collapsed to a SINGLE
-    * map row and broadcast, so scoring is a scan-side array fold over
-    * each document's tokens: inference pays ZERO corpus-side shuffle
-    * and stays embarrassingly parallel at 100 TB (contrast
+    * row ([[linearModel]]) and broadcast, so a bad table fails once,
+    * while the row is built: a duplicate bucket raises
+    * `DUPLICATED_MAP_KEY`, and a null bucket or weight leaves key and
+    * value lists of different lengths. Scoring is the native
+    * `hashed_bucket_fold` ([[graft.functions.HashedBucketFold]]) over
+    * each document's tokens: one md5 and one binary search per token,
+    * O(log B), in a strict left fold from 0.0 in token order (not a map
+    * lookup: `element_at` on a map scans its keys, linear in B per
+    * token). A bucket missing from the model gives a null margin;
+    * `buckets` < 1 fails analysis. Inference pays ZERO corpus-side
+    * shuffle and stays embarrassingly parallel at 100 TB (contrast
     * `x_dsir_weights`, which must shuffle (doc, bucket) counts because
     * it FITS its model on the corpus — applying a model needs no such
-    * pass). The map row is O(B) bytes; a 2^20-bucket production model
-    * broadcasts at ~8 MB, the same ballpark as a Bloom runtime filter.
+    * pass). The model row is 16 bytes per bucket; a 2^20-bucket
+    * production model broadcasts at ~16 MB, the same ballpark as a
+    * Bloom runtime filter.
     *
     * The margin rounds to 6 dp BEFORE the sigmoid so an external
     * engine's floating sum order cannot flip `keep` or the 6-dp score. */
   def linearQualityScore(docs: DataFrame, weights: DataFrame,
       buckets: Int): DataFrame = {
-    val model = weights.agg(map_from_arrays(
-      collect_list(col("b")), collect_list(col("w"))).as("wmap"))
     docs
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 1)
-      .crossJoin(broadcast(model))
+      .crossJoin(broadcast(linearModel(weights)))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
-        aggregate(col("toks"), lit(0.0), (acc, t) =>
-          acc + element_at(col("wmap"),
-            PortableHash.hash32(t) % buckets)).as("raw"))
+        call_function("hashed_bucket_fold", col("toks"), col("keys"),
+          col("weights"), lit(buckets)).as("raw"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("raw") / col("n_tokens"), 6).as("margin"))
       .select(col("doc_id"), col("n_tokens"), col("margin"),
         round(lit(1.0) / (lit(1.0) + exp(-col("margin"))), 6).as("score"),
         (col("margin") > 0).as("keep"))
   }
+
+  /** A (b, w) bucket-weight table as the one-row model
+    * [[linearQualityScore]] broadcasts: `keys` (bigint buckets, ascending)
+    * and `weights` (double) aligned to them, sorted once here so each
+    * lookup can binary-search. */
+  def linearModel(weights: DataFrame): DataFrame =
+    weights
+      .agg(map_from_arrays(collect_list(col("b")), collect_list(col("w")))
+        .as("wmap"))
+      .select(sort_array(map_entries(col("wmap"))).as("e"))
+      .select(col("e.key").cast("array<bigint>").as("keys"),
+        col("e.value").cast("array<double>").as("weights"))
 }

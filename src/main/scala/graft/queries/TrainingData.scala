@@ -971,7 +971,7 @@ object TrainingData {
     * so the oracle rebuilds it bit-for-bit); in production it is the
     * trained artifact loaded from a table. Unlike `x_dsir_weights`
     * (model FITTING — pays a (doc, bucket) shuffle), inference collapses
-    * the weights to one broadcast map row and scores scan-side: zero
+    * the weights to one broadcast model row and scores scan-side: zero
     * corpus shuffle, the only plan shape that holds at 100 TB. */
   private val qualityLinear = GraftQuery(
     "x_quality_linear",
@@ -985,20 +985,24 @@ object TrainingData {
     // defect, found r17; the ENGINE's output is unchanged — this fixes
     // the oracle's side only). Two mechanisms, both required:
     //  1. fold order — the engine folds each document's weights in
-    //     token order (row-local `aggregate(toks, 0.0, acc + w)`);
+    //     token order (`hashed_bucket_fold`, a strict left fold from
+    //     0.0, bit-equal to the `aggregate(toks, 0.0, acc + w)` before);
     //     the old unnest-JOIN-SUM summed in DuckDB's arbitrary order,
     //     and a margin one ulp from an exact 6-decimal tie (the
     //     2-decimal weights make ties REAL: 0.0184375 at sf0.001,
     //     0.0934375 at sf0.01) rounds apart under a different order.
     //     list_reduce over a 0.0-prepended list is the same strict
     //     left fold (verified raw-bit-equal on every doc, both SFs).
-    //  2. rounding — Spark's round() is HALF_UP over the double's
-    //     EXACT decimal expansion (BigDecimal); DuckDB's ROUND
-    //     multiplies by 1e6 first, whose own rounding can cross the
-    //     tie (observed: 0.09343749999999999·1e6 = 93437.5 exactly).
-    //     printf('%.6f') is the correctly-rounded conversion, and no
-    //     double is an exact odd multiple of 1e-7 (1e-7 is not
-    //     dyadic), so half-even-on-exact == Spark's HALF_UP always.
+    //  2. rounding — Spark's round() on a double is HALF_UP over its
+    //     SHORTEST decimal string (`BigDecimal.valueOf` parses
+    //     `Double.toString`), not over its exact binary value: the
+    //     double nearest -1.43/32 prints as -0.0446875 and rounds to
+    //     -0.044688, though its exact value is a hair nearer zero.
+    //     DuckDB's double-to-VARCHAR cast is the same shortest string
+    //     and its DECIMAL ROUND is also half away from zero, so the
+    //     oracle rounds that string as a DECIMAL. (DuckDB's ROUND on
+    //     the DOUBLE multiplies by 1e6 first, whose own rounding can
+    //     cross the tie: 0.09343749999999999·1e6 = 93437.5 exactly.)
     Some("""WITH toks AS (SELECT doc_id,
               list_filter(str_split_regex(lower(text), '\s+'),
                           t -> t <> '') AS toks
@@ -1016,11 +1020,12 @@ object TrainingData {
                 (acc, x) -> acc + x) AS raw
             FROM toks, warr WHERE len(toks) >= 1),
             scored AS (SELECT doc_id, n_tokens,
-              CAST(printf('%.6f', raw / n_tokens) AS DOUBLE) AS margin
+              CAST(ROUND(CAST(CAST(raw / n_tokens AS VARCHAR)
+                AS DECIMAL(38, 20)), 6) AS DOUBLE) AS margin
             FROM folded)
             SELECT doc_id, n_tokens, margin,
-              CAST(printf('%.6f', 1.0 / (1.0 + exp(-margin))) AS DOUBLE)
-                AS score,
+              CAST(ROUND(CAST(CAST(1.0 / (1.0 + exp(-margin)) AS VARCHAR)
+                AS DECIMAL(38, 20)), 6) AS DOUBLE) AS score,
               margin > 0 AS keep
             FROM scored"""))
 

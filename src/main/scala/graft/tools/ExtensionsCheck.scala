@@ -27,6 +27,8 @@ object ExtensionsCheck {
       "SELECT size(minhash_sig(array('x', 'y'), 12))" -> 12,
       "SELECT size(minhash_sig_fast('a b c d', 3, 12))" -> 12,
       "SELECT simhash64('') " -> 0L,
+      // md5('a') is odd -> bucket 1 (0.25), md5('b') even -> bucket 0 (0.5)
+      "SELECT hashed_bucket_fold(array('a', 'b'), array(0L, 1L), array(0.5d, 0.25d), 2)" -> 0.75,
       "SELECT size(topk_pairs(s, i, 2)) FROM VALUES (1.0d, 1L), (2.0d, 2L), (3.0d, 3L) AS t(s, i)" -> 2,
       // r17: the bounded bucket-membership aggregate — k smallest kept
       "SELECT collect_min_k(i, 2)[0] FROM VALUES (5L), (1L), (3L) AS t(i)" -> 1L,

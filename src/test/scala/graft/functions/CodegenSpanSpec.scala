@@ -59,6 +59,28 @@ class CodegenSpanSpec extends SparkTestBase {
     // bloom_might_contain's codegen is pinned by BloomSemiJoinSpec
   }
 
+  test("x_quality_linear: hashed_bucket_fold codegens, no map-lookup fold left") {
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "false")
+      val df = graft.queries.Registry.byName("x_quality_linear")
+        .build(spark, sf("sf0.001"))
+      // the model broadcast puts the query under AQE: the codegen spans
+      // show in the final plan, so run first
+      assert(df.collect().length > 0)
+      val planStr = df.queryExecution.executedPlan.toString
+      val projLine = planStr.linesIterator
+        .find(_.contains("hashed_bucket_fold")).getOrElse("")
+      assert(projLine.dropWhile(" +-:".contains(_)).startsWith("*("),
+        s"projection not codegen'd:\n$planStr")
+      // the per-token map lookup was a linear scan of the model's keys
+      assert(!planStr.contains("element_at") &&
+        !planStr.contains("aggregate(") && !planStr.contains("lambda"),
+        s"interpreted fold in plan:\n$planStr")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("round-3 expressions codegen too: nfc_normalize, morton2, jaro_winkler") {
     val key = "spark.sql.codegen.fallback"
     val prev = spark.conf.get(key)

@@ -1,8 +1,8 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.ops.{Dedup, TextFunctions}
-import org.apache.spark.sql.Column
+import graft.ops.{Dedup, PortableHash, TextAnalysis, TextFunctions}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -65,6 +65,45 @@ class TextExpressionsSpec extends SparkTestBase {
       lit(0L), (a, x) => a.bitwiseOR(x))
   }
 
+  /** The interpreted hashed-bucket fold `hashed_bucket_fold` replaced:
+    * a map lookup per token, summed left to right from 0.0. */
+  private def foldBuckets(toks: Column, wmap: Column, buckets: Int): Column =
+    aggregate(toks, lit(0.0), (acc, t) =>
+      acc + element_at(wmap, PortableHash.hash32(t) % buckets))
+
+  private def foldModel(weights: DataFrame): DataFrame =
+    weights.agg(map_from_arrays(
+      collect_list(col("b")), collect_list(col("w"))).as("wmap"))
+
+  /** Per sf0.001 document: (doc_id, native raw, fold raw), the native
+    * side reading the model row `model` (`keys`, `weights`) and the fold
+    * the one-row map `wmap`. */
+  private def bucketRaws(model: DataFrame, wmap: DataFrame, buckets: Int)
+      : Array[(Long, Option[Double], Option[Double])] =
+    docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
+      .crossJoin(wmap).crossJoin(model)
+      .select(col("doc_id"),
+        call_function("hashed_bucket_fold", col("toks"), col("keys"),
+          col("weights"), lit(buckets)).as("native"),
+        foldBuckets(col("toks"), col("wmap"), buckets).as("fold"))
+      .collect()
+      .map(r => (r.getLong(0),
+        if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+
+  /** [[bucketRaws]] for a `(b, w)` table: [[TextAnalysis.linearModel]]
+    * against the map the interpreted fold built from it. */
+  private def tableRaws(weights: DataFrame, buckets: Int) =
+    bucketRaws(TextAnalysis.linearModel(weights), foldModel(weights), buckets)
+
+  private def bits(v: Option[Double]): Option[Long] =
+    v.map(java.lang.Double.doubleToRawLongBits)
+
+  /** x_quality_linear's 4096-bucket model, `b` cast to `keyType`. */
+  private def qualityWeights(keyType: String): DataFrame =
+    spark.range(4096).select(col("id").cast(keyType).as("b"),
+      round(((col("id") * 37 + 11) % 201 - 100) / 100.0, 2).as("w"))
+
   private lazy val docs =
     spark.read.parquet(sf("sf0.001") + "/documents.parquet")
 
@@ -113,6 +152,75 @@ class TextExpressionsSpec extends SparkTestBase {
     assert(bad.count() === 0)
   }
 
+  test("hashed_bucket_fold matches the interpreted map-lookup fold bit-for-bit") {
+    def sameBits(got: Array[(Long, Option[Double], Option[Double])]): Unit =
+      got.foreach { case (id, native, fold) =>
+        assert(bits(native) === bits(fold), s"doc $id")
+      }
+    // dense 4096-bucket model, bigint and int keyed: every doc scores
+    for (keyType <- Seq("bigint", "int")) {
+      val got = tableRaws(qualityWeights(keyType), 4096)
+      assert(got.length === 500 && got.forall(_._3.isDefined), keyType)
+      sameBits(got)
+    }
+    // sparse model (every 64th bucket absent): a doc touching a missing
+    // bucket scores null, as the fold's lookup does
+    val sparse = tableRaws(qualityWeights("bigint").where(col("b") % 64 =!= 0), 4096)
+    assert(sparse.exists(_._3.isEmpty) && sparse.exists(_._3.isDefined))
+    sameBits(sparse)
+    // a null weight (every 64th bucket from 1) in the model row: null too.
+    // (A (b, w) table cannot carry one this far: collect_list drops the
+    // null and the map build fails — see the guards test.)
+    val model = TextAnalysis.linearModel(qualityWeights("bigint"))
+      .select(col("keys"), transform(col("weights"), (w, i) =>
+        when(i % 64 =!= 1, w)).as("weights"))
+    val holes = bucketRaws(model,
+      model.select(map_from_arrays(col("keys"), col("weights")).as("wmap")), 4096)
+    assert(holes.exists(_._3.isEmpty) && holes.exists(_._3.isDefined))
+    sameBits(holes)
+  }
+
+  test("hashed_bucket_fold: model guards and null tokens behave as the fold did") {
+    // a bad (b, w) table fails while building the model, with the same
+    // error condition on the native path as on the interpreted fold
+    def condition(f: => Any): String =
+      intercept[Exception](f) match {
+        case e: org.apache.spark.SparkThrowable => e.getCondition
+        case e => fail(s"not a SparkThrowable: $e")
+      }
+    val few = docs.limit(5)
+    val fewToks = few.select(TextFunctions.tokens(col("text")).as("toks"))
+    for ((bad, want) <- Seq(
+        Seq((Option(0L), Option(1.0)), (Option(1L), Option(-1.0)),
+          (Option(1L), Option(0.5))) -> Some("DUPLICATED_MAP_KEY"),
+        // collect_list drops a null bucket or weight, so the key and
+        // value lists differ in length
+        Seq((Option(0L), Option(1.0)), (None, Option(-1.0))) -> None,
+        Seq((Option(0L), Option(1.0)), (Option(1L), None)) -> None)) {
+      val weights = spark.createDataFrame(bad).toDF("b", "w")
+      val native = condition(
+        TextAnalysis.linearQualityScore(few, weights, 2).collect())
+      val fold = condition(fewToks.crossJoin(foldModel(weights))
+        .select(foldBuckets(col("toks"), col("wmap"), 2)).collect())
+      assert(native === fold)
+      want.foreach(w => assert(native === w))
+    }
+    // a null token nulls the sum; a bucket count < 1 and misaligned
+    // keys and weights are refused
+    assert(spark.sql("SELECT hashed_bucket_fold(array('a', NULL), " +
+      "array(0L, 1L), array(0.5d, 0.25d), 2)").head().isNullAt(0))
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      "SELECT hashed_bucket_fold(array('a'), array(0L), array(1.0d), 0)"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      TextAnalysis.linearQualityScore(few, qualityWeights("bigint"), 0))
+    val misaligned = intercept[Exception](spark.sql(
+      "SELECT hashed_bucket_fold(array('a'), array(0L, 1L), array(1.0d), 2)")
+      .collect())
+    assert(Iterator.iterate[Throwable](misaligned)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("2 buckets but 1 weights")))
+  }
+
   test("minhash_sig skips null array elements instead of crashing the task") {
     // SQL-exposed function: array(...NULL...) has containsNull=true; a
     // null entry must contribute nothing to the component minima
@@ -142,10 +250,13 @@ class TextExpressionsSpec extends SparkTestBase {
       """SELECT ws_tokens('A  b') AS t,
         |       shingle_set('a b c d', 3) AS s,
         |       minhash_sig(array('x'), 2) AS m,
-        |       simhash64('hello') AS h64""".stripMargin).head()
+        |       simhash64('hello') AS h64,
+        |       hashed_bucket_fold(array('a', 'b'), array(0L, 1L),
+        |         array(0.5d, 0.25d), 2) AS hb""".stripMargin).head()
     assert(r.getSeq[String](0) === Seq("a", "b"))
     assert(r.getSeq[String](1) === Seq("a b c", "b c d"))
     assert(r.getSeq[Long](2).length === 2)
     assert(r.getLong(3) === 0x5d41402abc4b2a76L) // md5('hello') bytes 0-7
+    assert(r.getDouble(4) === 0.75) // md5('a') odd -> 0.25, 'b' even -> 0.5
   }
 }
