@@ -171,7 +171,7 @@ object StreamingIngest {
         // partition-discovery tricks.
         if (!out.txnVersion(TxnApp).exists(_ >= batchId))
           try {
-            out.append(kept.withColumn("batch", lit(batchId)), 50,
+            out.append(kept.withColumn("batch", lit(batchId)),
               Some((TxnApp, batchId)))
             ()
           } catch { case _: graft.ops.TxTable.TxnAlreadyApplied => () }
@@ -180,7 +180,7 @@ object StreamingIngest {
           try {
             idx.append(
               newBands.join(kept.select("doc_id"), Seq("doc_id"),
-                "left_semi").withColumn("batch", lit(batchId)), 50,
+                "left_semi").withColumn("batch", lit(batchId)),
               Some((TxnApp, batchId)))
             ()
           } catch { case _: graft.ops.TxTable.TxnAlreadyApplied => () }

@@ -250,7 +250,7 @@ final class MaterializedView private (spark: SparkSession, base: TxTable,
     Checkpoints.using(delta.withColumnRenamed(PairRows, "__d")
         .where(col("__d") =!= 0L)) { d =>
       val txn = Some((AuxTxnApp, upTo))
-      if (d.isEmpty) { aux.append(aux.read().limit(0), 50, txn); () }
+      if (d.isEmpty) { aux.append(aux.read().limit(0), txn); () }
       else {
         aux.merge(d, keys,
           whenMatchedUpdate = Some(expr(s"t.$PairRows + s.__d > 0")),

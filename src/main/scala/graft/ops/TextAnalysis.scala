@@ -96,8 +96,8 @@ object TextAnalysis {
     * table covering every bucket in [0, B). It is collapsed to a SINGLE
     * row ([[linearModel]]) and broadcast, so a bad table fails once,
     * while the row is built: a duplicate bucket raises
-    * `DUPLICATED_MAP_KEY`, and a null bucket or weight leaves key and
-    * value lists of different lengths. Scoring is the native
+    * `DUPLICATED_MAP_KEY`, and a null bucket or weight raises an error
+    * that counts the null rows. Scoring is the native
     * `hashed_bucket_fold` ([[graft.functions.HashedBucketFold]]) over
     * each document's tokens: one md5 and one binary search per token,
     * O(log B), in a strict left fold from 0.0 in token order (not a map
@@ -133,12 +133,19 @@ object TextAnalysis {
   /** A (b, w) bucket-weight table as the one-row model
     * [[linearQualityScore]] broadcasts: `keys` (bigint buckets, ascending)
     * and `weights` (double) aligned to them, sorted once here so each
-    * lookup can binary-search. */
-  def linearModel(weights: DataFrame): DataFrame =
+    * lookup can binary-search. A row with a null bucket or weight fails
+    * the build by name, counted in the same aggregate (`collect_list`
+    * would drop the null and leave the lists misaligned). */
+  def linearModel(weights: DataFrame): DataFrame = {
+    val nulls = count(when(col("b").isNull || col("w").isNull, lit(1)))
     weights
-      .agg(map_from_arrays(collect_list(col("b")), collect_list(col("w")))
+      .agg(when(nulls > 0, raise_error(concat(lit("linear model: "),
+          nulls.cast("string"),
+          lit(" row(s) with a null bucket or weight")))).otherwise(
+          map_from_arrays(collect_list(col("b")), collect_list(col("w"))))
         .as("wmap"))
       .select(sort_array(map_entries(col("wmap"))).as("e"))
       .select(col("e.key").cast("array<bigint>").as("keys"),
         col("e.value").cast("array<double>").as("weights"))
+  }
 }

@@ -398,7 +398,7 @@ final class TxSql(spark: SparkSession) {
     val cond = unqualify(
       Option(d.condition).getOrElse(Literal(true)), names)
     val r = summary(t.deleteCore(
-      TxPredicates.bounds(cond), ColumnShim.column(cond), 20))
+      TxPredicates.bounds(cond), ColumnShim.column(cond)))
     refreshCatalog(parts)
     r
   }
@@ -417,7 +417,7 @@ final class TxSql(spark: SparkSession) {
       key -> ColumnShim.column(unqualify(a.value, names))
     }.toMap
     val r = summary(t.updateCore(
-      TxPredicates.bounds(cond), ColumnShim.column(cond), set, 20))
+      TxPredicates.bounds(cond), ColumnShim.column(cond), set))
     refreshCatalog(parts)
     r
   }

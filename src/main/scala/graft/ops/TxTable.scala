@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, concat, 
   *    (`If-None-Match: *`) that the store arbitrates. Losing the race
   *    means another writer owns that version: re-read the log and
   *    retry — an append rebases as-is, a rewrite re-derives from the
-  *    new head (optimistic concurrency). Readers can never observe a
+  *    new head (optimistic concurrency, run by the one commit loop
+  *    [[TxTable.optimistic]]). Readers can never observe a
   *    half-written entry: the LogStore contract requires full content
   *    to be visible the instant the path is;
   *  - a snapshot is the replay of log entries 0..N: active files =
@@ -141,6 +142,19 @@ object TxTable {
       else spark.read.option("basePath", base)
         .option("mergeSchema", merged.toString).parquet(files: _*)
   }
+
+  /** One commit attempt: the entry's action and add/remove lists, the
+    * stats sidecar lines of its data files, and the files this attempt
+    * staged for itself (discarded if it loses the race). */
+  private final case class Proposal(action: String, add: Seq[String],
+      remove: Seq[String] = Nil, stats: Seq[String] = Nil,
+      staged: Seq[String] = Nil)
+
+  /** A staging that may outlive a lost race ([[TxTable.restaging]]): its
+    * files, whether it still holds at a later head, and the proposal it
+    * makes at a head. */
+  private final case class Staged(files: Seq[String],
+      holds: Snapshot => Boolean, propose: Snapshot => Proposal)
 
   /** Is `rel` (a table-relative name, possibly partition-qualified) a
     * deletion-vector file? DV files flow through the commit log's
@@ -782,29 +796,20 @@ final class TxTable private (spark: SparkSession, dir: String,
     * gate (column mapping) upgrades automatically in its own commit —
     * this is the explicit form for operators preparing a fleet
     * migration. */
-  def upgradeProtocol(minReader: Int, minWriter: Int,
-      maxRetries: Int = 20): Commit = {
+  def upgradeProtocol(minReader: Int, minWriter: Int): Commit = {
     require(minReader <= TxTable.CurrentReader &&
       minWriter <= TxTable.CurrentWriter,
       s"cannot require ($minReader, $minWriter): this engine itself " +
         s"supports only (${TxTable.CurrentReader}, ${TxTable.CurrentWriter})")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("upgradeProtocol") { head =>
       val (r0, w0) = protocolOf(head)
       require(minReader >= r0 && minWriter >= w0,
         s"protocol downgrade refused: table requires ($r0, $w0)")
       require(minReader > r0 || minWriter > w0,
         s"table already requires ($r0, $w0)")
-      val c = Commit(head.version + 1, "protocol",
-        Seq(TxTable.encodePv(minReader, minWriter)),
-        head.cms.filter(TxTable.isPvName),
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("protocol", Seq(TxTable.encodePv(minReader, minWriter)),
+        head.cms.filter(TxTable.isPvName))
     }
-    sys.error(s"upgradeProtocol contention: lost $maxRetries races in $logDir")
   }
 
   /** DESCRIBE HISTORY: one row per commit, newest first — version,
@@ -919,16 +924,13 @@ final class TxTable private (spark: SparkSession, dir: String,
     * attempt's head: a concurrent append of violating rows either
     * lands first (and fails THIS validation) or second (and fails its
     * own write-path enforcement) — never both. */
-  def addConstraint(name: String, expression: String,
-      maxRetries: Int = 20): Commit = {
+  def addConstraint(name: String, expression: String): Commit = {
     require(name.matches("[A-Za-z0-9_-]+"),
       s"constraint name must be [A-Za-z0-9_-]+: '$name'")
     // syntactic guard up front: a malformed expression should fail the
     // ALTER, not every future writer
     spark.sessionState.sqlParser.parseExpression(expression)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = snapshot()
+    commitLoop("addConstraint") { base =>
       require(!ctMap(base).contains(name),
         s"constraint '$name' already exists: ${ctMap(base)(name)}")
       if (base.files.nonEmpty)
@@ -936,35 +938,21 @@ final class TxTable private (spark: SparkSession, dir: String,
             .limit(1).count() == 0L,
           s"cannot add CHECK constraint '$name' ($expression): existing " +
             "rows violate it")
-      val c = Commit(base.version + 1, "constraint",
-        Seq(encodeCt(name, expression)), Nil,
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("constraint", Seq(encodeCt(name, expression)))
     }
-    sys.error(s"addConstraint contention: lost $maxRetries races in $logDir")
   }
 
   /** DROP CONSTRAINT: metadata-only removal of the named constraint's
     * token; history keeps it, time travel before the drop still shows
     * it active. */
-  def dropConstraint(name: String, maxRetries: Int = 20): Commit = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = snapshot()
+  def dropConstraint(name: String): Commit =
+    commitLoop("dropConstraint") { base =>
       val token = base.cts.find(t => decodeCt(t)._1 == name)
       require(token.isDefined,
         s"no CHECK constraint '$name' (active: " +
           s"${ctMap(base).keys.toSeq.sorted.mkString(", ")})")
-      val c = Commit(base.version + 1, "constraint", Nil, Seq(token.get),
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("constraint", Nil, Seq(token.get))
     }
-    sys.error(s"dropConstraint contention: lost $maxRetries races in $logDir")
-  }
 
   /** Does expression `e` (a CHECK predicate or a generated-column
     * derivation) still ANALYZE against `df`'s schema with `without`
@@ -1035,12 +1023,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     * `oldName` (the expression would silently stop resolving). The
     * streaming source treats a rename like any non-append commit —
     * fail by default, `skipChangeCommits` to ride past. */
-  def renameColumn(oldName: String, newName: String,
-      maxRetries: Int = 20): Commit = {
+  def renameColumn(oldName: String, newName: String): Commit = {
     require(oldName != newName, s"rename to the same name: $oldName")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("renameColumn") { head =>
       require(head.files.nonEmpty, "cannot rename on an empty table")
       val logicalDf = toLogical(head.read(spark), head)
       val logical = logicalDf.schema.fieldNames.toSet
@@ -1092,17 +1077,12 @@ final class TxTable private (spark: SparkSession, dir: String,
             else TxTable.ExistsDefaultPrefix
           tok -> TxTable.encodeTp(prefix + newName, v)
         }
-      val c = Commit(head.version + 1, "rename",
+      Proposal("rename",
         Seq(TxTable.encodeCm(newName, phys)) ++ pvAdd ++
           clusterSwap.map(_._2) ++ defaultSwap.map(_._2),
         m.get(oldName).map(_ => TxTable.encodeCm(oldName, phys)).toSeq ++
-          pvRemove ++ clusterSwap.map(_._1) ++ defaultSwap.map(_._1),
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+          pvRemove ++ clusterSwap.map(_._1) ++ defaultSwap.map(_._1))
     }
-    sys.error(s"renameColumn contention: lost $maxRetries races in $logDir")
   }
 
   /** DROP COLUMN as a METADATA-ONLY commit: the physical column stays
@@ -1114,10 +1094,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * dropped data under it) — rename the new column instead. Refused
     * when the column does not exist, is the table's last column, or an
     * active CHECK constraint references it. */
-  def dropColumn(name: String, maxRetries: Int = 20): Commit = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+  def dropColumn(name: String): Commit =
+    commitLoop("dropColumn") { head =>
       require(head.files.nonEmpty, "cannot drop a column on an empty table")
       val logicalDf = toLogical(head.read(spark), head)
       val logical = logicalDf.schema.fieldNames.toSet
@@ -1152,17 +1130,10 @@ final class TxTable private (spark: SparkSession, dir: String,
       val defaultDrop = head.cms.filter(t => TxTable.isTpName(t) &&
         TxTable.defaultKeyCol(TxTable.decodeTp(t)._1)
           .exists(_.equalsIgnoreCase(name)))
-      val c = Commit(head.version + 1, "dropcol",
-        Seq(TxTable.encodeCmx(phys)) ++ pvAdd,
+      Proposal("dropcol", Seq(TxTable.encodeCmx(phys)) ++ pvAdd,
         m.get(name).map(_ => TxTable.encodeCm(name, phys)).toSeq ++
-          pvRemove ++ defaultDrop,
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+          pvRemove ++ defaultDrop)
     }
-    sys.error(s"dropColumn contention: lost $maxRetries races in $logDir")
-  }
 
   /** [[TxTable.convert]]'s work: adopt the directory's existing
     * parquet files under ONE atomic v0 commit. Discovery is a FULL
@@ -1430,12 +1401,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     * the generated invariant, while readers need no gc awareness —
     * Delta gates generated columns behind a writer version the same
     * way). */
-  def addGeneratedColumn(name: String, expression: String,
-      maxRetries: Int = 20): Commit = {
+  def addGeneratedColumn(name: String, expression: String): Commit = {
     spark.sessionState.sqlParser.parseExpression(expression)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("addGeneratedColumn") { head =>
       require(!gcMap(head).contains(name),
         s"generated column '$name' already declared: ${gcMap(head)(name)}")
       // the mirror of setColumnDefault's guard: a defaulted column
@@ -1469,14 +1437,9 @@ final class TxTable private (spark: SparkSession, dir: String,
             "rows violate the equality")
       }
       val (pvAdd, pvRemove) = gencolUpgrade(head)
-      val c = Commit(head.version + 1, "gencol",
-        Seq(TxTable.encodeGc(name, expression)) ++ pvAdd, pvRemove,
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("gencol", Seq(TxTable.encodeGc(name, expression)) ++ pvAdd,
+        pvRemove)
     }
-    sys.error(s"addGeneratedColumn contention: lost $maxRetries races in $logDir")
   }
 
   /** Generated columns are protocol-gated WRITER-side at 2: the
@@ -1492,23 +1455,15 @@ final class TxTable private (spark: SparkSession, dir: String,
 
   /** Remove a generated-column declaration (metadata-only); the column
     * itself stays, it just stops being computed/enforced. */
-  def dropGeneratedColumn(name: String, maxRetries: Int = 20): Commit = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+  def dropGeneratedColumn(name: String): Commit =
+    commitLoop("dropGeneratedColumn") { head =>
       val token = head.cms.find(t =>
         TxTable.isGcName(t) && TxTable.decodeGc(t)._1 == name)
       require(token.isDefined,
         s"no generated column '$name' (declared: " +
           s"${gcMap(head).keys.toSeq.sorted.mkString(", ")})")
-      val c = Commit(head.version + 1, "gencol", Nil, Seq(token.get),
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("gencol", Nil, Seq(token.get))
     }
-    sys.error(s"dropGeneratedColumn contention: lost $maxRetries races in $logDir")
-  }
 
   // ------------------------------------------------- identity columns
   /** Active identity declarations: name → (start, step, highWater). */
@@ -1556,44 +1511,29 @@ final class TxTable private (spark: SparkSession, dir: String,
     * (action `properties`) — existing keys' tokens swap out, other
     * keys untouched. Content-neutral everywhere: CDF-silent, streams
     * ride through, checkpoints carry the tokens. */
-  def setProperties(kvs: Map[String, String],
-      maxRetries: Int = 20): Commit = {
+  def setProperties(kvs: Map[String, String]): Commit = {
     require(kvs.nonEmpty, "SET TBLPROPERTIES needs at least one pair")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("setProperties") { head =>
       val keysLower = kvs.keySet.map(_.toLowerCase)
       val stale = head.cms.filter(t => TxTable.isTpName(t) &&
         keysLower.contains(TxTable.decodeTp(t)._1.toLowerCase))
-      val c = Commit(head.version + 1, "properties",
+      Proposal("properties",
         kvs.toSeq.sortBy(_._1).map { case (k, v) =>
           TxTable.encodeTp(k, v) },
-        stale, System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+        stale)
     }
-    sys.error(s"setProperties contention: lost $maxRetries races in $logDir")
   }
 
   /** UNSET TBLPROPERTIES: drop `keys`' tokens (missing keys are a
     * no-op per key, like Spark's IF EXISTS form). */
-  def unsetProperties(keys: Seq[String],
-      maxRetries: Int = 20): Commit = {
+  def unsetProperties(keys: Seq[String]): Commit = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("unsetProperties") { head =>
       val keysLower = keys.map(_.toLowerCase).toSet
       val stale = head.cms.filter(t => TxTable.isTpName(t) &&
         keysLower.contains(TxTable.decodeTp(t)._1.toLowerCase))
-      val c = Commit(head.version + 1, "properties", Nil, stale,
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("properties", Nil, stale)
     }
-    sys.error(s"unsetProperties contention: lost $maxRetries races in $logDir")
   }
 
   /** The (add, remove) token pair a `txn`-carrying commit must fold
@@ -1634,12 +1574,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     * cannot allocate (overwrite, upsert, MERGE INSERT) refuse on
     * identity tables; DELETE/UPDATE/compaction carry rows and ids
     * unchanged. */
-  def addIdentityColumn(name: String, start: Long = 1L, step: Long = 1L,
-      maxRetries: Int = 20): Commit = {
+  def addIdentityColumn(name: String, start: Long = 1L,
+      step: Long = 1L): Commit = {
     require(step != 0L, "identity step must be non-zero")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("addIdentityColumn") { head =>
       require(!identMap(head).contains(name),
         s"identity column '$name' already declared")
       require(!gcMap(head).contains(name),
@@ -1666,17 +1604,11 @@ final class TxTable private (spark: SparkSession, dir: String,
               org.apache.spark.sql.types.LongType))))
         }
       val (pvAdd, pvRemove) = identityUpgrade(head)
-      val c = Commit(head.version + 1,
-        if (carrier.nonEmpty) "evolve" else "identity",
+      Proposal(if (carrier.nonEmpty) "evolve" else "identity",
         carrier ++ Seq(TxTable.encodeId(name, start, step,
           start - step)) ++ pvAdd,
-        pvRemove, System.currentTimeMillis())
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      carrier.foreach(n => new File(dir, n).delete())
-      attempt += 1
+        pvRemove, staged = carrier)
     }
-    sys.error(s"addIdentityColumn contention: lost $maxRetries races in $logDir")
   }
 
   /** Identity is protocol-gated WRITER-side at 3 (generated columns
@@ -1692,23 +1624,15 @@ final class TxTable private (spark: SparkSession, dir: String,
 
   /** Remove an identity declaration (metadata-only); the column and
     * its allocated values stay, it just stops being engine-owned. */
-  def dropIdentityColumn(name: String, maxRetries: Int = 20): Commit = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+  def dropIdentityColumn(name: String): Commit =
+    commitLoop("dropIdentityColumn") { head =>
       val token = head.cms.find(t =>
         TxTable.isIdName(t) && TxTable.decodeId(t)._1 == name)
       require(token.isDefined,
         s"no identity column '$name' (declared: " +
           s"${identMap(head).keys.toSeq.sorted.mkString(", ")})")
-      val c = Commit(head.version + 1, "identity", Nil, Seq(token.get),
-        System.currentTimeMillis(), bytes = 0L, rmBytes = 0L)
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("identity", Nil, Seq(token.get))
     }
-    sys.error(s"dropIdentityColumn contention: lost $maxRetries races in $logDir")
-  }
 
   /** The append family on a table WITH identity columns: per outer
     * attempt, read the head's high-water marks, refuse user-supplied
@@ -1722,13 +1646,11 @@ final class TxTable private (spark: SparkSession, dir: String,
     * high-water atomically with the data. A lost race renumbers from
     * the winner's high-water and restages — allocation uniqueness
     * rides the commit CAS, never a lock. */
-  private def appendWithIdentity(df: DataFrame, maxRetries: Int,
+  private def appendWithIdentity(df: DataFrame,
       evolve: Boolean, partitionCols: Seq[String],
       txn: Option[(String, Long)] = None): Commit = {
     import org.apache.spark.sql.expressions.Window
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("identity append", BlindBudget) { head =>
       val cts = ctMap(head)
       val gcs = gcMap(head)
       val idm = identMap(head)
@@ -1745,8 +1667,6 @@ final class TxTable private (spark: SparkSession, dir: String,
             "cannot supply it (the engine allocates)")
       }
       val withPid = df1.withColumn("__pid", spark_partition_id())
-      var staged: Seq[String] = Nil
-      var committed: Option[Commit] = None
       Checkpoints.using(withPid) { pinned =>
         val counts = pinned.groupBy("__pid")
           .agg(count(lit(1)).as("__n"))
@@ -1771,7 +1691,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         if (evolve) guardSchemaEvolve(head, df2)
         else guardSchema(head, df2)
         val phys = toPhysical(enforced(df2, cts), head)
-        staged =
+        val staged =
           if (partitionCols.nonEmpty)
             stagePartitioned(phys, partitionCols.map(physName(head, _)))
           else stageLike(head, phys)
@@ -1783,23 +1703,11 @@ final class TxTable private (spark: SparkSession, dir: String,
             TxTable.encodeId(n, st, sp, hw))
         }
         val (txnAdd, txnRm) = txnSwap(head, txn)
-        val c = Commit(head.version + 1,
-          if (evolve) "evolve" else "append",
+        Proposal(if (evolve) "evolve" else "append",
           staged ++ tokenSwap.map(_._1) ++ txnAdd,
-          tokenSwap.map(_._2) ++ txnRm,
-          System.currentTimeMillis())
-        committed = tryCommit(c, stats)
-        if (committed.isEmpty) {
-          staged.foreach { n =>
-            new File(dir, n).delete(); dropBlooms(n)
-          }
-          staged = Nil
-        }
+          tokenSwap.map(_._2) ++ txnRm, stats, staged)
       }
-      committed.foreach(return _)
-      attempt += 1
     }
-    sys.error(s"identity append contention: lost $maxRetries races in $logDir")
   }
 
   /** Active generated-column declarations of the head snapshot. */
@@ -2280,6 +2188,85 @@ final class TxTable private (spark: SparkSession, dir: String,
       } catch { case scala.util.control.NonFatal(_) => () }
       maybeCheckpoint(c.version)
       Some(c)
+    }
+  }
+
+  // ------------------------------------------------- optimistic commits
+  /** Attempt budgets of [[optimistic]]. */
+  private val BlindBudget = 50
+  private val RederiveBudget = 20
+
+  /** Delete never-committed staged files and their bloom sidecars. */
+  private def discard(files: Seq[String]): Unit =
+    files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+
+  /** The optimistic-concurrency protocol (Delta's, over the
+    * [[LogStore]] CAS) and the one place a write claims a log version.
+    * Each attempt resolves the head snapshot and hands it to `attempt`,
+    * which re-runs the guards the operation owes that head and returns
+    * its proposal (None: nothing to commit), or throws to abort. The
+    * proposal is claimed as version `head + 1` through [[tryCommit]],
+    * which stamps the in-commit timestamp. A lost claim discards the
+    * attempt's own staged files and retries on the new head, up to
+    * `budget` attempts. The append family (plain, evolving,
+    * partitioned, identity-allocating), the overwrites and ADD COLUMNS
+    * get [[BlindBudget]]: they commute with any writer that leaves
+    * their schema alone, so a lost race there is lost sequencing, never
+    * a conflict, and giving up early would fail a write that cannot
+    * conflict. Every other write gets [[RederiveBudget]]: it
+    * re-validates or re-stages per attempt, and a run of losses more
+    * likely means real contention worth surfacing. `reclaim` names
+    * files staged ahead of the attempts; they are discarded when the
+    * loop ends without a win, by abort, no-op or exhaustion. */
+  private def optimistic(op: String, budget: Int = RederiveBudget,
+      reclaim: => Seq[String] = Nil)(
+      attempt: Snapshot => Option[Proposal]): Option[Commit] = {
+    @scala.annotation.tailrec
+    def go(left: Int): Option[Commit] = {
+      val (head, proposal) =
+        try { val h = snapshot(); (h, attempt(h)) }
+        catch { case scala.util.control.NonFatal(e) =>
+          discard(reclaim); throw e
+        }
+      proposal match {
+        case None => discard(reclaim); None
+        case Some(p) =>
+          val won = tryCommit(Commit(head.version + 1, p.action, p.add,
+            p.remove, 0L), p.stats)
+          if (won.isDefined) won
+          else {
+            discard(p.staged)
+            if (left > 1) go(left - 1)
+            else {
+              discard(reclaim)
+              sys.error(s"$op contention: lost $budget races in $logDir")
+            }
+          }
+      }
+    }
+    go(budget)
+  }
+
+  /** [[optimistic]] for an operation that always has something to
+    * commit. */
+  private def commitLoop(op: String, budget: Int = RederiveBudget,
+      reclaim: => Seq[String] = Nil)(attempt: Snapshot => Proposal): Commit =
+    optimistic(op, budget, reclaim)(h => Some(attempt(h))).get
+
+  /** [[optimistic]] for a staging that may be re-committed after a lost
+    * race: an attempt reuses the live staging while it `holds` at the
+    * new head, and otherwise discards it and calls `restage` (None:
+    * nothing left to do). */
+  private def restaging(op: String)(
+      restage: Snapshot => Option[Staged]): Option[Commit] = {
+    var live: Option[Staged] = None
+    optimistic(op, reclaim = live.toSeq.flatMap(_.files)) { head =>
+      if (!live.exists(_.holds(head))) {
+        live.foreach(s => discard(s.files))
+        live = None
+        live = restage(head)
+      }
+      live.map(_.propose(head))
     }
   }
 
@@ -3115,58 +3102,43 @@ final class TxTable private (spark: SparkSession, dir: String,
     }
 
   private def commitAppend(files: Seq[String], df: DataFrame,
-      maxRetries: Int, evolve: Boolean = false,
+      evolve: Boolean = false,
       enforcedCts: Map[String, String] = Map.empty,
       enforcedGcs: Map[String, String] = Map.empty,
       txn: Option[(String, Long)] = None): Commit = {
     val stats = fileStats(files)
     buildBlooms(files)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = snapshot()
+    commitLoop("append", BlindBudget, reclaim = files) { base =>
       if (evolve) guardSchemaEvolve(base, df) else guardSchema(base, df)
       guardConstraints(base, enforcedCts, files, enforcedGcs)
       val (txnAdd, txnRm) = txnSwap(base, txn)
-      val c = Commit(base.version + 1,
-        if (evolve) "evolve" else "append", files ++ txnAdd, txnRm,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal(if (evolve) "evolve" else "append", files ++ txnAdd, txnRm,
+        stats)
     }
-    // retry exhaustion: the staged files will never be referenced —
-    // reclaim them now instead of leaving them for vacuum's age guard
-    files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"append contention: lost $maxRetries races in $logDir")
   }
 
   /** Append `df` — never conflicts; rebases onto any winner's head.
     * The incoming schema must match the table's (same name → type map;
     * column order is free — parquet readers resolve by name): a silent
     * schema drift would otherwise surface as reader-dependent column
-    * soup long after the writing job exited. The guard runs inside the
-    * retry loop against each attempt's head snapshot (see
-    * [[guardSchema]]), so a concurrent overwrite that changes the
-    * table's schema cannot let a now-mismatched append land. */
-  def append(df: DataFrame, maxRetries: Int = 50): Commit =
-    append(df, maxRetries, None)
-
-  /** [[append]] carrying a transaction identity: the commit swaps the
-    * app's `txn-` marker atomically with the data (see
-    * [[TxTable.encodeTxn]]) — the idempotent-writes handshake the
+    * soup long after the writing job exited. The guard re-runs against
+    * each commit attempt's head snapshot (see [[guardSchema]]), so a
+    * concurrent overwrite that changes the table's schema cannot let a
+    * now-mismatched append land. `txn` carries a transaction identity:
+    * the commit swaps the app's `txn-` marker atomically with the data
+    * (see [[TxTable.encodeTxn]]) — the idempotent-writes handshake the
     * streaming sink rides. */
-  def append(df: DataFrame, maxRetries: Int,
-      txn: Option[(String, Long)]): Commit = {
+  def append(df: DataFrame, txn: Option[(String, Long)] = None): Commit = {
     val s0 = snapshot()
     if (identMap(s0).nonEmpty)
-      return appendWithIdentity(df, maxRetries, evolve = false, Nil, txn)
+      return appendWithIdentity(df, evolve = false, Nil, txn)
     val cts = ctMap(s0)
     val df2 = applyGenerated(df, s0)
     // layout-aware: appending to a hive-partitioned table re-stages
     // under its partition directories automatically (a flat file next
     // to partitioned ones would break path-based inference)
     commitAppend(stageLike(s0, toPhysical(enforced(df2, cts), s0)), df2,
-      maxRetries, enforcedCts = cts, enforcedGcs = gcMap(s0), txn = txn)
+      enforcedCts = cts, enforcedGcs = gcMap(s0), txn = txn)
   }
 
   /** Schema-EVOLVING append (Delta's `mergeSchema` write): the batch
@@ -3179,15 +3151,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     * an evolve like any other non-append change: fail by default,
     * skippable via `skipChangeCommits` — a schema change mid-stream is
     * never silent. */
-  def appendEvolve(df: DataFrame, maxRetries: Int = 50): Commit = {
+  def appendEvolve(df: DataFrame): Commit = {
     val s0 = snapshot()
     if (identMap(s0).nonEmpty)
-      return appendWithIdentity(df, maxRetries, evolve = true, Nil)
+      return appendWithIdentity(df, evolve = true, Nil)
     val cts = ctMap(s0)
     val df2 = applyGenerated(df, s0)
     commitAppend(stageLike(s0, toPhysical(enforced(df2, cts), s0)), df2,
-      maxRetries, evolve = true, enforcedCts = cts,
-      enforcedGcs = gcMap(s0))
+      evolve = true, enforcedCts = cts, enforcedGcs = gcMap(s0))
   }
 
   /** IDEMPOTENT FILE INGEST (Delta's `COPY INTO`): load the files
@@ -3206,7 +3177,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * (driver-side, checkpoint-compacted); the load reads ONLY the
     * fresh files; commit cost is one entry. */
   def copyInto(srcDir: String, format: String = "parquet",
-      pattern: String = "*", maxRetries: Int = 20): Option[Commit] = {
+      pattern: String = "*"): Option[Commit] = {
     val fs = new File(srcDir)
     require(fs.isDirectory, s"COPY INTO source is not a directory: $srcDir")
     val matcher = java.nio.file.FileSystems.getDefault
@@ -3217,51 +3188,39 @@ final class TxTable private (spark: SparkSession, dir: String,
         !f.getName.startsWith(".") &&
         matcher.matches(Paths.get(f.getName)))
       .map(_.getAbsolutePath).sorted
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    def ledger(s: Snapshot): Set[String] =
+      s.cms.filter(TxTable.isCpName).map(TxTable.decodeCp).toSet
+    restaging("COPY INTO") { head =>
       require(identMap(head).isEmpty,
         "COPY INTO on a table with identity columns is not supported " +
           "(loaded rows need engine allocation — use append)")
-      val loaded = head.cms.filter(TxTable.isCpName)
-        .map(TxTable.decodeCp).toSet
-      val fresh = listSrc().filterNot(loaded)
-      if (fresh.isEmpty) return None
-      val cts = ctMap(head)
-      val df = applyGenerated(
-        spark.read.format(format).load(fresh: _*), head)
-      guardSchema(head, df)
-      val staged = stageLike(head, toPhysical(enforced(df, cts), head))
-      guardConstraints(head, cts, staged, gcMap(head))
-      val stats = fileStats(staged)
-      buildBlooms(staged)
-      // re-resolve at commit time: a racing COPY that recorded any of
-      // OUR files must force a re-derive, or both would land the rows;
-      // and the guards re-run against THIS base — a constraint or
-      // schema change committed since `head` must refuse here exactly
-      // as commitAppend's per-attempt re-guard does, never land
-      // rows validated against a stale snapshot
-      val base = snapshot()
-      val nowLoaded = base.cms.filter(TxTable.isCpName)
-        .map(TxTable.decodeCp).toSet
-      val raced = fresh.exists(nowLoaded.contains) || {
-        guardSchema(base, df)
-        // cts/gcs are what STAGING enforced (head's sets) — the guard
-        // scans staged files against any set added since
-        guardConstraints(base, cts, staged, gcMap(head))
-        val c = Commit(base.version + 1, "copy",
-          staged ++ fresh.map(TxTable.encodeCp), Nil,
-          System.currentTimeMillis())
-        val cc = tryCommit(c, stats)
-        if (cc.isDefined) return cc
-        true
+      val fresh = listSrc().filterNot(ledger(head))
+      if (fresh.isEmpty) None
+      else {
+        val cts = ctMap(head)
+        val gcs = gcMap(head)
+        val df = applyGenerated(
+          spark.read.format(format).load(fresh: _*), head)
+        guardSchema(head, df)
+        val staged = stageLike(head, toPhysical(enforced(df, cts), head))
+        val stats = fileStats(staged)
+        buildBlooms(staged)
+        Some(Staged(staged,
+          // a racing COPY that recorded any of OUR files must force a
+          // re-derive, or both would land the rows
+          base => !fresh.exists(ledger(base)), { base =>
+            // the guards re-run against THIS base — a constraint or
+            // schema change committed since staging must refuse here
+            // exactly as commitAppend's per-attempt re-guard does;
+            // cts/gcs are what STAGING enforced, and the guard scans
+            // staged files against any set added since
+            guardSchema(base, df)
+            guardConstraints(base, cts, staged, gcs)
+            Proposal("copy", staged ++ fresh.map(TxTable.encodeCp),
+              stats = stats)
+          }))
       }
-      if (raced) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-      }
-      attempt += 1
     }
-    sys.error(s"COPY INTO contention: lost $maxRetries races in $logDir")
   }
 
   /** Schema-widening DDL (Delta's `ALTER TABLE … ADD COLUMNS`): add
@@ -3277,12 +3236,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     * directory with the partition-path columns dropped — a flat
     * carrier at the root would make path-based partition inference
     * ill-defined for every later read. */
-  def addColumns(cols: org.apache.spark.sql.types.StructType,
-      maxRetries: Int = 50): Commit = {
+  def addColumns(cols: org.apache.spark.sql.types.StructType): Commit = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("addColumns", BlindBudget) { head =>
       require(head.files.nonEmpty,
         "ADD COLUMNS needs an existing table with at least one file " +
           "(the schema lives in parquet footers)")
@@ -3291,14 +3247,8 @@ final class TxTable private (spark: SparkSession, dir: String,
       cols.foreach { f => require(!have.contains(f.name.toLowerCase),
         s"column ${f.name} already exists") }
       val staged = stageCarrier(head, cols)
-      val c = Commit(head.version + 1, "evolve", staged, Nil,
-        System.currentTimeMillis())
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      staged.foreach(n => new File(dir, n).delete())
-      attempt += 1
+      Proposal("evolve", staged, staged = staged)
     }
-    sys.error(s"addColumns contention: lost $maxRetries races in $logDir")
   }
 
   /** `ALTER TABLE t ADD COLUMN name type DEFAULT expr` — ONE atomic
@@ -3314,12 +3264,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     * that casts to `dataType` and does not evaluate to NULL. */
   def addColumnWithDefault(name: String,
       dataType: org.apache.spark.sql.types.DataType,
-      default: String, maxRetries: Int = 50): Commit = {
+      default: String): Commit = {
     val bound = bindDefault(default, dataType)
     val live = s"CAST(($default) AS ${dataType.sql})"
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("addColumnWithDefault", BlindBudget) { head =>
       require(head.files.nonEmpty,
         "ADD COLUMN needs an existing table with at least one file " +
           "(the schema lives in parquet footers)")
@@ -3337,15 +3285,8 @@ final class TxTable private (spark: SparkSession, dir: String,
       val toks = Seq(
         TxTable.encodeTp(TxTable.DefaultPrefix + name, live),
         TxTable.encodeTp(TxTable.ExistsDefaultPrefix + name, bound))
-      val c = Commit(head.version + 1, "evolve", staged ++ toks, stale,
-        System.currentTimeMillis())
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      staged.foreach(n => new File(dir, n).delete())
-      attempt += 1
+      Proposal("evolve", staged ++ toks, stale, staged = staged)
     }
-    sys.error(
-      s"addColumnWithDefault contention: lost $maxRetries races in $logDir")
   }
 
   /** `ALTER TABLE t ALTER COLUMN name SET DEFAULT expr` — declare (or
@@ -3353,8 +3294,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * that omit the column compute the expression at write time
     * (`current_date()` stays live, Delta's contract); reads and
     * existing rows are untouched. Metadata-only property commit. */
-  def setColumnDefault(name: String, default: String,
-      maxRetries: Int = 20): Commit = {
+  def setColumnDefault(name: String, default: String): Commit = {
     val head = snapshot()
     require(head.files.nonEmpty,
       "SET DEFAULT needs an existing table with at least one file " +
@@ -3363,16 +3303,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     val field = cur.fields.find(_.name.equalsIgnoreCase(name))
       .getOrElse(sys.error(s"no column '$name' (table has " +
         s"${cur.fieldNames.sorted.mkString(", ")})"))
-    setColumnDefaultDeclared(field.name, default, field.dataType,
-      maxRetries)
+    setColumnDefaultDeclared(field.name, default, field.dataType)
   }
 
   /** [[setColumnDefault]] with the column's type DECLARED by the
     * caller — the CREATE-TABLE-with-DEFAULT flow, where the column
     * type is known from the DDL before any data file exists. */
   def setColumnDefaultDeclared(name: String, default: String,
-      dataType: org.apache.spark.sql.types.DataType,
-      maxRetries: Int = 20): Commit = {
+      dataType: org.apache.spark.sql.types.DataType): Commit = {
     val head = snapshot()
     // an engine-computed column can never be "omitted and filled":
     // generated columns compute, identity columns allocate — a default
@@ -3383,19 +3321,19 @@ final class TxTable private (spark: SparkSession, dir: String,
         "a DEFAULT is meaningless there")
     validateDefault(default, dataType)
     setProperties(Map(TxTable.DefaultPrefix + name ->
-      s"CAST(($default) AS ${dataType.sql})"), maxRetries)
+      s"CAST(($default) AS ${dataType.sql})"))
   }
 
   /** `ALTER TABLE t ALTER COLUMN name DROP DEFAULT` — future writes
     * must supply the column again. The EXISTS default (if the column
     * was added with one) keeps filling pre-evolve rows on read —
     * dropping the current default never rewrites history. */
-  def dropColumnDefault(name: String, maxRetries: Int = 20): Commit = {
+  def dropColumnDefault(name: String): Commit = {
     val ks = properties.keys.filter(k =>
       k.startsWith(TxTable.DefaultPrefix) &&
         k.stripPrefix(TxTable.DefaultPrefix).equalsIgnoreCase(name)).toSeq
     require(ks.nonEmpty, s"no DEFAULT declared on column '$name'")
-    unsetProperties(ks, maxRetries)
+    unsetProperties(ks)
   }
 
   /** Evaluate-and-freeze `default` as a typed SQL literal (the
@@ -3469,28 +3407,18 @@ final class TxTable private (spark: SparkSession, dir: String,
   def appendPartitioned(df: DataFrame, partitionCol: String): Commit =
     appendPartitioned(df, Seq(partitionCol))
 
-  def appendPartitioned(df: DataFrame, partitionCol: String,
-      maxRetries: Int): Commit =
-    appendPartitioned(df, Seq(partitionCol), maxRetries)
-
   /** Multi-key variant: files nest `c1=v1/c2=v2/…/` in `partitionCols`
     * order (the reference's own fact layout is three-level —
     * `etl.py:71-74` partitions by entry_year/entry_month/port_code).
     * Every pruning surface ([[readPartitions]], [[partitionKeep]])
-    * matches per-segment, so a bound on ANY of the keys prunes. */
+    * matches per-segment, so a bound on ANY of the keys prunes. `txn`
+    * is [[append]]'s transaction identity. */
   def appendPartitioned(df: DataFrame, partitionCols: Seq[String],
-      maxRetries: Int = 50): Commit =
-    appendPartitioned(df, partitionCols, maxRetries, None)
-
-  /** Multi-key partitioned append carrying a transaction identity —
-    * the partitioned twin of the txn [[append]] overload. */
-  def appendPartitioned(df: DataFrame, partitionCols: Seq[String],
-      maxRetries: Int, txn: Option[(String, Long)]): Commit = {
+      txn: Option[(String, Long)] = None): Commit = {
     val s0 = snapshot()
     if (identMap(s0).nonEmpty) {
       require(partitionCols.nonEmpty, "partitionCols must be non-empty")
-      return appendWithIdentity(df, maxRetries, evolve = false,
-        partitionCols, txn)
+      return appendWithIdentity(df, evolve = false, partitionCols, txn)
     }
     val cts = ctMap(s0)
     // generation runs BEFORE the partition-column check and the
@@ -3503,8 +3431,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     commitAppend(
       stagePartitioned(toPhysical(enforced(df2, cts), s0),
         partitionCols.map(physName(s0, _))),
-      df2, maxRetries, enforcedCts = cts, enforcedGcs = gcMap(s0),
-      txn = txn)
+      df2, enforcedCts = cts, enforcedGcs = gcMap(s0), txn = txn)
   }
 
   /** Manifest-pruned partition read: the snapshot's file list is
@@ -3551,15 +3478,11 @@ final class TxTable private (spark: SparkSession, dir: String,
   def overwritePartitions(df: DataFrame, partitionCol: String): Commit =
     overwritePartitions(df, Seq(partitionCol))
 
-  def overwritePartitions(df: DataFrame, partitionCol: String,
-      maxRetries: Int): Commit =
-    overwritePartitions(df, Seq(partitionCol), maxRetries)
-
   /** Multi-key variant: the overwrite unit is the LEAF partition (the
     * full `c1=v1/…/cn=vn` directory path) — exactly Spark's dynamic
     * partition overwrite granularity, made atomic. */
-  def overwritePartitions(df: DataFrame, partitionCols: Seq[String],
-      maxRetries: Int = 50): Commit = {
+  def overwritePartitions(df: DataFrame,
+      partitionCols: Seq[String]): Commit = {
     val s0 = snapshot()
     val cts0 = ctMap(s0)
     // generation runs FIRST (a generated partition key may be omitted,
@@ -3576,26 +3499,17 @@ final class TxTable private (spark: SparkSession, dir: String,
     // full leaf-directory prefixes (all segments up to the file name)
     def leaf(f: String) = f.take(f.lastIndexOf('/') max 0)
     val touched = files.map(leaf).toSet
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = snapshot()
+    commitLoop("overwritePartitions", BlindBudget, reclaim = files) { base =>
       guardSchema(base, df2)
       guardConstraints(base, cts0, files, gcMap(s0))
       val replaced = base.files.map(_.stripPrefix(s"$dir/"))
         .filter(f => touched.contains(leaf(f)))
-      val c = Commit(base.version + 1, "overwrite", files, replaced,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("overwrite", files, replaced, stats)
     }
-    files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"overwritePartitions contention: lost $maxRetries races in $logDir")
   }
 
   /** Replace the table's content with `df` in one atomic commit. */
-  def overwrite(df: DataFrame, maxRetries: Int = 50): Commit =
-    overwriteAs("overwrite", df, maxRetries)
+  def overwrite(df: DataFrame): Commit = overwriteAs("overwrite", df)
 
   /** [[overwrite]] with a caller-chosen action TAG recorded as the
     * commit's action — the hook that lets a consumer make its own
@@ -3611,8 +3525,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * [[overwritePartitions]], used by the writer/CTAS face when
     * `partitionBy`/`PARTITIONED BY` accompanies an overwrite. Empty =
     * preserve the base snapshot's layout ([[stageLike]]). */
-  def overwriteAs(tag: String, df: DataFrame,
-      maxRetries: Int = 50, layout: Seq[String] = Nil,
+  def overwriteAs(tag: String, df: DataFrame, layout: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Commit = {
     require(tag.nonEmpty && !tag.contains('"'), s"bad action tag: $tag")
     val s0 = snapshot()
@@ -3636,58 +3549,26 @@ final class TxTable private (spark: SparkSession, dir: String,
       else stageLike(s0, staged0)
     val stats = fileStats(files)
     buildBlooms(files)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = snapshot()
+    commitLoop("overwrite", BlindBudget, reclaim = files) { base =>
       guardConstraints(base, cts0, files, gcs0)
       val (txnAdd, txnRm) = txnSwap(base, txn)
-      val c = Commit(base.version + 1, tag, files ++ txnAdd,
+      Proposal(tag, files ++ txnAdd,
         (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/")) ++ txnRm,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+        stats)
     }
-    files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"overwrite contention: lost $maxRetries races in $logDir")
   }
 
   /** MERGE: latest-wins upsert of `updates` on `keys`
-    * ([[Upsert.latestWins]] semantics) as an atomic rewrite. Optimistic:
-    * derives from the head snapshot; losing the commit race discards
-    * the stale staged rewrite (never referenced) and re-derives against
-    * the new head. */
+    * ([[Upsert.latestWins]] semantics) as an atomic rewrite. `txn` is
+    * the CDC-apply identity the streaming sink's merge mode commits per
+    * micro-batch (see [[append]]). */
   def upsert(updates: DataFrame, keys: Seq[String],
-      maxRetries: Int = 20): Commit =
-    upsert(updates, keys, maxRetries, None)
-
-  /** [[upsert]] carrying a transaction identity — the CDC-apply shape
-    * the streaming sink's merge mode commits per micro-batch. */
-  def upsert(updates: DataFrame, keys: Seq[String],
-      maxRetries: Int, txn: Option[(String, Long)]): Commit = {
-    lastRewriteStagings = 0
-    var attempt = 0
-    var stagedKeep: Seq[String] = Nil
-    var stagedStats: Seq[String] = Nil
-    var removed: Seq[String] = Nil
-    var baseV = -1L
-    while (attempt < maxRetries) {
-      val base = snapshot()
-      // upsert is a FULL-TABLE rewrite (ourRemoves = every base file
-      // and vector), so a lost race rebases only over windows whose
-      // winners touched no data at all — txn-marker swaps, properties,
-      // copy-ledger bookkeeping. Anything with rows re-derives.
-      if (baseV >= 0 &&
-          rewriteRebasable(baseV, base, removed.toSet, Nil)) {
-        val (txnAdd, txnRm) = txnSwap(base, txn)
-        beforeDmlCommitHook()
-        val c = Commit(base.version + 1, "upsert", stagedKeep ++ txnAdd,
-          removed ++ txnRm, System.currentTimeMillis())
-        val cc = tryCommit(c, stagedStats)
-        if (cc.isDefined) return cc.get
-        attempt += 1
-      } else {
-      stagedKeep.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+      txn: Option[(String, Long)] = None): Commit =
+    // upsert is a FULL-TABLE rewrite (it reads every base file and
+    // vector) with no bounds, so a lost race rebases only over windows
+    // whose winners touched no data at all — txn-marker swaps,
+    // properties, copy-ledger bookkeeping. Anything with rows re-derives.
+    rewrite("upsert", Nil, txn) { base =>
       require(identMap(base).isEmpty,
         "upsert on a table with identity columns is not supported " +
           "(inserted rows need engine allocation — use append for new " +
@@ -3700,28 +3581,15 @@ final class TxTable private (spark: SparkSession, dir: String,
       // TOCTOU window to guard. applyGenerated computes an omitted gc
       // for incoming rows and enforces the equality on supplied ones;
       // carried rows satisfy it by their own write-time enforcement.
-      stagedKeep = stageLike(base, toPhysical(
+      val staged = stageLike(base, toPhysical(
         enforced(applyGenerated(merged, base), ctMap(base)), base))
       // a full rewrite retires the deletion vectors too: their targets
       // are all removed, and the rewrite read them applied
-      removed =
+      val removed =
         (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/"))
-      stagedStats = fileStats(stagedKeep)
-      buildBlooms(stagedKeep)
-      baseV = base.version
-      lastRewriteStagings += 1
-      val (txnAdd, txnRm) = txnSwap(base, txn)
-      beforeDmlCommitHook()
-      val c = Commit(base.version + 1, "upsert", stagedKeep ++ txnAdd,
-        removed ++ txnRm, System.currentTimeMillis())
-      val cc = tryCommit(c, stagedStats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
-      }
+      buildBlooms(staged)
+      (Proposal("upsert", staged, removed, fileStats(staged)), removed)
     }
-    stagedKeep.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"upsert contention: lost $maxRetries races in $logDir")
-  }
 
   /** Conditional MERGE — the full Delta/ANSI MERGE clause surface, the
     * CDC-apply shape real pipelines run:
@@ -3771,9 +3639,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * read nor mentioned in the commit. Candidates are read with
     * deletion vectors APPLIED (a DV-deleted row neither matches nor
     * resurrects); the vectors stay active for the files that remain.
-    * Optimistic like every rewrite: losing the CAS discards the staged
-    * files and re-derives (and re-prunes) against the new head. The
-    * committed action is a rewrite, so [[readChanges]] emits the net
+    * The committed action is a rewrite, so [[readChanges]] emits the net
     * row changes (an update as its delete + insert pair, carried rows
     * not at all) with no merge-specific CDC code. */
   /** `widenBy` (MERGE WITH SCHEMA EVOLUTION): columns to add to the
@@ -3796,7 +3662,6 @@ final class TxTable private (spark: SparkSession, dir: String,
       whenMatchedUpdate: Option[Column] = None,
       whenMatchedDelete: Option[Column] = None,
       whenNotMatchedInsert: Option[Column] = None,
-      maxRetries: Int = 20,
       updateSet: Option[Map[String, Column]] = None,
       insertValues: Option[Map[String, Column]] = None,
       whenNotMatchedBySourceUpdate: Option[(Column, Map[String, Column])] = None,
@@ -3834,7 +3699,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     // staged parquet files, not the pinned blocks, carry the result.
     Checkpoints.using(source)(mergePinned(_, keys, srcKeys,
       whenMatchedUpdate, whenMatchedDelete, whenNotMatchedInsert,
-      maxRetries, updateSet, insertValues, whenNotMatchedBySourceUpdate,
+      updateSet, insertValues, whenNotMatchedBySourceUpdate,
       whenNotMatchedBySourceDelete, widenBy, txn, nullSafeKeys))
   }
 
@@ -3845,7 +3710,6 @@ final class TxTable private (spark: SparkSession, dir: String,
       whenMatchedUpdate: Option[Column],
       whenMatchedDelete: Option[Column],
       whenNotMatchedInsert: Option[Column],
-      maxRetries: Int,
       updateSet: Option[Map[String, Column]],
       insertValues: Option[Map[String, Column]],
       whenNotMatchedBySourceUpdate: Option[(Column, Map[String, Column])],
@@ -3903,33 +3767,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     val rebaseBounds =
       if (hasNms) Nil
       else bounds
-    lastRewriteStagings = 0
-    var attempt = 0
-    var stagedKeep: Seq[String] = Nil
-    var carrierKeep: Seq[String] = Nil
-    var stagedStats: Seq[String] = Nil
-    var removed: Seq[String] = Nil
-    var actionKeep = "merge"
-    var baseV = -1L
-    while (attempt < maxRetries) {
-      val head = snapshot()
-      if (baseV >= 0 &&
-          rewriteRebasable(baseV, head, removed.toSet, rebaseBounds)) {
-        // rebase (see [[rewriteRebasable]]): the staged rewrite and
-        // its widening carrier are still serially correct at this
-        // head; only the txn-marker swap re-derives against it
-        val (txnAdd, txnRm) = txnSwap(head, txn)
-        beforeDmlCommitHook()
-        val c = Commit(head.version + 1, actionKeep,
-          carrierKeep ++ stagedKeep ++ txnAdd, removed ++ txnRm,
-          System.currentTimeMillis())
-        val cc = tryCommit(c, stagedStats)
-        if (cc.isDefined) return cc.get
-        attempt += 1
-      } else {
-      (carrierKeep ++ stagedKeep).foreach { n =>
-        new File(dir, n).delete(); dropBlooms(n)
-      }
+    // a rebase re-commits the staged rewrite and its widening carrier
+    // unchanged; only the txn-marker swap re-derives against the head
+    rewrite("merge", rebaseBounds, txn) { head =>
       // identity columns: rows may be carried/updated/deleted (ids
       // travel with their rows) but never INSERTED here — allocation
       // lives in the append family — and never assigned
@@ -4154,28 +3994,12 @@ final class TxTable private (spark: SparkSession, dir: String,
         if (widen.isEmpty) Nil
         else stageCarrier(head,
           org.apache.spark.sql.types.StructType(widen))
-      stagedKeep = staged
-      carrierKeep = carrier
-      removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      actionKeep = if (widen.isEmpty) "merge" else "merge-evolve"
-      stagedStats = fileStats(staged)
+      val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
+      val stats = fileStats(staged)
       buildBlooms(staged)
-      baseV = head.version
-      lastRewriteStagings += 1
-      val (txnAdd, txnRm) = txnSwap(head, txn)
-      beforeDmlCommitHook()
-      val c = Commit(head.version + 1, actionKeep,
-        carrierKeep ++ stagedKeep ++ txnAdd, removed ++ txnRm,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stagedStats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
-      }
+      (Proposal(if (widen.isEmpty) "merge" else "merge-evolve",
+        carrier ++ staged, removed, stats), removed)
     }
-    (carrierKeep ++ stagedKeep).foreach { n =>
-      new File(dir, n).delete(); dropBlooms(n)
-    }
-    sys.error(s"merge contention: lost $maxRetries races in $logDir")
   }
 
   /** DELETE WHERE `column` BETWEEN `lo` AND `hi`, Delta-style: the
@@ -4183,18 +4007,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     * matching rows; ONLY those are read and rewritten with the negated
     * predicate — untouched files are neither read nor mentioned in the
     * commit entry, so a point delete on a z-ordered table rewrites a
-    * handful of files, not the table. Optimistic like [[upsert]]:
-    * losing the CAS discards the staged rewrite (never referenced) and
-    * re-derives against the new head, which also re-prunes — a
-    * concurrent append of matching rows lands either before this
-    * delete's base (and is deleted) or after its commit (and
-    * survives), never half-applied. An empty candidate set still
-    * commits a no-op entry so the deletion is visible to time travel
-    * and audit. */
-  def deleteBetween(column: String, lo: Any, hi: Any,
-      maxRetries: Int = 20): Commit =
+    * handful of files, not the table. A concurrent append of matching
+    * rows lands either before this delete's base (and is deleted) or
+    * after its commit (and survives), never half-applied. An empty
+    * candidate set still commits a no-op entry so the deletion is
+    * visible to time travel and audit. */
+  def deleteBetween(column: String, lo: Any, hi: Any): Commit =
     deleteCore(Seq((column, Option(lo), Option(hi))),
-      col(column) >= lit(lo) && col(column) <= lit(hi), maxRetries)
+      col(column) >= lit(lo) && col(column) <= lit(hi))
 
   /** DELETE WHERE <arbitrary SQL predicate> — the general form of
     * [[deleteBetween]]: any boolean SQL expression over the table's
@@ -4205,10 +4025,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     * and simply keep all candidates, conservative like every pruning
     * path here). SQL WHERE semantics: a NULL predicate does not match
     * (the row survives). */
-  def deleteExpr(predicate: String, maxRetries: Int = 20): Commit = {
+  def deleteExpr(predicate: String): Commit = {
     val e = spark.sessionState.sqlParser.parseExpression(predicate)
     deleteCore(TxPredicates.bounds(e),
-      org.apache.spark.sql.graft.ColumnShim.column(e), maxRetries)
+      org.apache.spark.sql.graft.ColumnShim.column(e))
   }
 
   /** Commit actions a lost-CAS rewrite may REBASE over (see
@@ -4295,54 +4115,57 @@ final class TxTable private (spark: SparkSession, dir: String,
         bounds).files.isEmpty)
   }
 
-  private[ops] def deleteCore(
-      bounds: Seq[(String, Option[Any], Option[Any])], matches: Column,
-      maxRetries: Int): Commit = {
+  /** The rewrite DMLs' commit loop: [[restaging]] whose staging holds
+    * while [[rewriteRebasable]] proves every commit since its base
+    * commutes with it. `restage(head)` stages the rewrite against
+    * `head` and returns its proposal with the files it READ (a winner
+    * rewriting any of them forbids the rebase); `bounds` is the
+    * predicate's per-column range, empty for a full-table rewrite.
+    * Each attempt re-derives the `txn` marker swap against its own
+    * head. Counts [[lastRewriteStagings]]. */
+  private def rewrite(op: String,
+      bounds: Seq[(String, Option[Any], Option[Any])],
+      txn: Option[(String, Long)] = None)(
+      restage: Snapshot => (Proposal, Seq[String])): Commit = {
     lastRewriteStagings = 0
-    var attempt = 0
-    var staged: Seq[String] = Nil
-    var stagedStats: Seq[String] = Nil
-    var removed: Seq[String] = Nil
-    var baseV = -1L
-    while (attempt < maxRetries) {
-      val head = snapshot()
-      if (baseV < 0 ||
-          !rewriteRebasable(baseV, head, removed.toSet, bounds)) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-        val pruned = pruneFiles(head, bounds)
-        // keep every row where the predicate is NOT TRUE — a NULL match
-        // predicate must not silently delete its row, so the negation
-        // goes through coalesce
-        // the rewrite reads the pruned files with deletion vectors
-        // APPLIED, or it would resurrect DV-deleted rows; the vectors
-        // stay active (entries for the removed files are inert — file
-        // names never recur) until compaction retires them
-        staged =
-          if (pruned.files.isEmpty) Nil
-          else stageLike(pruned, toPhysical(readSnapshot(pruned)
-            .where(!coalesce(matches, lit(false))), pruned))
-        removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-        stagedStats = fileStats(staged)
-        buildBlooms(staged)
-        baseV = head.version
-        lastRewriteStagings += 1
-      }
-      beforeDmlCommitHook()
-      val c = Commit(head.version + 1, "delete", staged, removed,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stagedStats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
-    }
-    staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"delete contention: lost $maxRetries races in $logDir")
+    restaging(op) { base =>
+      val (p, reads) = restage(base)
+      lastRewriteStagings += 1
+      Some(Staged(p.add,
+        rewriteRebasable(base.version, _, reads.toSet, bounds), { head =>
+          val (txnAdd, txnRm) = txnSwap(head, txn)
+          beforeDmlCommitHook()
+          p.copy(add = p.add ++ txnAdd, remove = p.remove ++ txnRm)
+        }))
+    }.get
   }
+
+  private[ops] def deleteCore(
+      bounds: Seq[(String, Option[Any], Option[Any])],
+      matches: Column): Commit =
+    rewrite("delete", bounds) { head =>
+      val pruned = pruneFiles(head, bounds)
+      // keep every row where the predicate is NOT TRUE — a NULL match
+      // predicate must not silently delete its row, so the negation
+      // goes through coalesce
+      // the rewrite reads the pruned files with deletion vectors
+      // APPLIED, or it would resurrect DV-deleted rows; the vectors
+      // stay active (entries for the removed files are inert — file
+      // names never recur) until compaction retires them
+      val staged =
+        if (pruned.files.isEmpty) Nil
+        else stageLike(pruned, toPhysical(readSnapshot(pruned)
+          .where(!coalesce(matches, lit(false))), pruned))
+      val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
+      val stats = fileStats(staged)
+      buildBlooms(staged)
+      (Proposal("delete", staged, removed, stats), removed)
+    }
 
   /** Point DELETE with the same file-skipping contract as
     * [[deleteBetween]]. */
-  def deleteWhere(column: String, value: Any,
-      maxRetries: Int = 20): Commit =
-    deleteBetween(column, value, value, maxRetries)
+  def deleteWhere(column: String, value: Any): Commit =
+    deleteBetween(column, value, value)
 
   /** Copy-on-write UPDATE — the third leg of the DML triangle next to
     * [[deleteBetween]] and [[merge]]: rows where `column` BETWEEN `lo`
@@ -4365,35 +4188,15 @@ final class TxTable private (spark: SparkSession, dir: String,
     * is the increment shape); they evaluate against the PRE-update
     * row, all-at-once like SQL `SET a = b, b = a`. */
   def updateBetween(column: String, lo: Any, hi: Any,
-      set: Map[String, Column], maxRetries: Int = 20): Commit =
+      set: Map[String, Column]): Commit =
     updateCore(Seq((column, Option(lo), Option(hi))),
-      col(column) >= lit(lo) && col(column) <= lit(hi), set, maxRetries)
+      col(column) >= lit(lo) && col(column) <= lit(hi), set)
 
   private[ops] def updateCore(
       bounds: Seq[(String, Option[Any], Option[Any])], matches: Column,
-      set: Map[String, Column], maxRetries: Int): Commit = {
+      set: Map[String, Column]): Commit = {
     require(set.nonEmpty, "UPDATE with no assignments is a no-op")
-    lastRewriteStagings = 0
-    var attempt = 0
-    var stagedKeep: Seq[String] = Nil
-    var stagedStats: Seq[String] = Nil
-    var removed: Seq[String] = Nil
-    var baseV = -1L
-    while (attempt < maxRetries) {
-      val head = snapshot()
-      if (baseV >= 0 &&
-          rewriteRebasable(baseV, head, removed.toSet, bounds)) {
-        // rebase: every intervening commit provably commutes with the
-        // staged rewrite (see [[rewriteRebasable]]) — re-commit it at
-        // the new head, no re-read, no re-write
-        beforeDmlCommitHook()
-        val c = Commit(head.version + 1, "update", stagedKeep, removed,
-          System.currentTimeMillis())
-        val cc = tryCommit(c, stagedStats)
-        if (cc.isDefined) return cc.get
-        attempt += 1
-      } else {
-      stagedKeep.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+    rewrite("update", bounds) { head =>
       // generated columns derive, they are never assigned: refuse the
       // direct assignment (Delta's contract) and RECOMPUTE every
       // declared gc after the assignments apply, so an update to a
@@ -4452,28 +4255,17 @@ final class TxTable private (spark: SparkSession, dir: String,
           }
           stageLike(head, toPhysical(enforced(regen, ctMap(head)), head))
         }
-      stagedKeep = staged
-      removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      stagedStats = fileStats(staged)
+      val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
+      val stats = fileStats(staged)
       buildBlooms(staged)
-      baseV = head.version
-      lastRewriteStagings += 1
-      beforeDmlCommitHook()
-      val c = Commit(head.version + 1, "update", stagedKeep, removed,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stagedStats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
-      }
+      (Proposal("update", staged, removed, stats), removed)
     }
-    stagedKeep.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"update contention: lost $maxRetries races in $logDir")
   }
 
   /** Point UPDATE; same file-skipping contract as [[updateBetween]]. */
-  def updateWhere(column: String, value: Any, set: Map[String, Column],
-      maxRetries: Int = 20): Commit =
-    updateBetween(column, value, value, set, maxRetries)
+  def updateWhere(column: String, value: Any,
+      set: Map[String, Column]): Commit =
+    updateBetween(column, value, value, set)
 
   /** Predicate OVERWRITE (Delta's `replaceWhere`): atomically replace
     * exactly the rows where `column` BETWEEN `lo` AND `hi` with `df`,
@@ -4490,8 +4282,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * backfill: recompute one day / key range and swap it in without
     * touching the rest of a 100 TB table — rerunning the same backfill
     * converges instead of duplicating. */
-  def replaceBetween(df: DataFrame, column: String, lo: Any, hi: Any,
-      maxRetries: Int = 20): Commit = {
+  def replaceBetween(df: DataFrame, column: String, lo: Any,
+      hi: Any): Commit = {
     require(identMap(snapshot()).isEmpty,
       "replaceBetween on a table with identity columns is not " +
         "supported (replacement rows would carry caller-chosen ids)")
@@ -4503,27 +4295,9 @@ final class TxTable private (spark: SparkSession, dir: String,
             s"[$lo, $hi]: "),
           to_json(struct(df.columns.toIndexedSeq.map(col): _*)))))
         .otherwise(lit(true)))
-    lastRewriteStagings = 0
-    var attempt = 0
-    var stagedKeep: Seq[String] = Nil
-    var stagedStats: Seq[String] = Nil
-    var removed: Seq[String] = Nil
-    var baseV = -1L
     val rbBounds = Seq((column, Option(lo), Option(hi)))
-    while (attempt < maxRetries) {
-      val head = snapshot()
-      if (baseV >= 0 &&
-          rewriteRebasable(baseV, head, removed.toSet, rbBounds)) {
-        // rebase (see [[rewriteRebasable]]): a winner provably outside
-        // [lo, hi] commutes with the replacement
-        beforeDmlCommitHook()
-        val c = Commit(head.version + 1, "replace", stagedKeep, removed,
-          System.currentTimeMillis())
-        val cc = tryCommit(c, stagedStats)
-        if (cc.isDefined) return cc.get
-        attempt += 1
-      } else {
-      stagedKeep.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+    // a winner provably outside [lo, hi] commutes with the replacement
+    rewrite("replace", rbBounds) { head =>
       // generated columns: computed when the incoming frame omits them
       // (so the schema guard below sees the full shape), enforced
       // when supplied — per attempt against this head's declarations
@@ -4538,23 +4312,13 @@ final class TxTable private (spark: SparkSession, dir: String,
         case Some(k) => k.unionByName(scoped2)
         case None    => scoped2
       }
-      stagedKeep = stageLike(head,
+      val staged = stageLike(head,
         toPhysical(enforced(out, ctMap(head)), head))
-      removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      stagedStats = fileStats(stagedKeep)
-      buildBlooms(stagedKeep)
-      baseV = head.version
-      lastRewriteStagings += 1
-      beforeDmlCommitHook()
-      val c = Commit(head.version + 1, "replace", stagedKeep, removed,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stagedStats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
-      }
+      val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
+      val stats = fileStats(staged)
+      buildBlooms(staged)
+      (Proposal("replace", staged, removed, stats), removed)
     }
-    stagedKeep.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"replace contention: lost $maxRetries races in $logDir")
   }
 
   /** MERGE-ON-READ delete — the deletion-vector half of the
@@ -4571,39 +4335,21 @@ final class TxTable private (spark: SparkSession, dir: String,
     * and retires the vectors. Rows an earlier vector already deleted
     * are excluded from the new one, so vectors never double-count and
     * the union of active vectors stays exactly the live-row
-    * complement. Optimistic like every rewrite: losing the CAS
-    * re-derives (and re-prunes) against the new head. */
-  def deleteVectorBetween(column: String, lo: Any, hi: Any,
-      maxRetries: Int = 20): Commit = {
-    lastRewriteStagings = 0
-    var attempt = 0
-    var stagedKeep: Seq[String] = Nil
-    var targeted: Seq[String] = Nil
-    var baseV = -1L
+    * complement. */
+  def deleteVectorBetween(column: String, lo: Any, hi: Any): Commit = {
     val rbBounds = Seq((column, Option(lo), Option(hi)))
-    while (attempt < maxRetries) {
-      val head = snapshot()
-      // rebase note: the vector's (file, pos) keys reference the
-      // TARGETED files' content, so `targeted` (not removed by this
-      // commit) rides the helper's disjointness check — a winner that
-      // rewrote any of them invalidates the positions; a winner DV is
-      // blocked wholesale (overlapping positions would double-count)
-      if (baseV >= 0 &&
-          rewriteRebasable(baseV, head, targeted.toSet, rbBounds)) {
-        beforeDmlCommitHook()
-        val c = Commit(head.version + 1, "dvdelete", stagedKeep, Nil,
-          System.currentTimeMillis())
-        val cc = tryCommit(c)
-        if (cc.isDefined) return cc.get
-        attempt += 1
-      } else {
-      stagedKeep.foreach(n => new File(dir, n).delete())
+    // rebase note: the vector's (file, pos) keys reference the TARGETED
+    // files' content, so those (not removed by this commit) ride the
+    // disjointness check — a winner that rewrote any of them
+    // invalidates the positions; a winner DV is blocked wholesale
+    // (overlapping positions would double-count)
+    rewrite("deleteVector", rbBounds) { head =>
       val pruned = pruneFiles(head, rbBounds)
       // the position scan reads RAW files — predicate on the PHYSICAL
       // name (identical to the logical one on unmapped tables)
       val p = physName(pruned, column)
       val matches = col(p) >= lit(lo) && col(p) <= lit(hi)
-      stagedKeep =
+      val staged =
         if (pruned.files.isEmpty) Nil
         else stage(
           antiDvs(withPos(pruned.files, merged = pruned.merged),
@@ -4615,26 +4361,15 @@ final class TxTable private (spark: SparkSession, dir: String,
             // output file keeps the read side's broadcast list short
             .repartition(1),
           prefix = "dv")
-      targeted = pruned.files.map(_.stripPrefix(s"$dir/"))
-      baseV = head.version
-      lastRewriteStagings += 1
-      beforeDmlCommitHook()
-      val c = Commit(head.version + 1, "dvdelete", stagedKeep, Nil,
-        System.currentTimeMillis())
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
-      }
+      (Proposal("dvdelete", staged),
+        pruned.files.map(_.stripPrefix(s"$dir/")))
     }
-    stagedKeep.foreach(n => new File(dir, n).delete())
-    sys.error(s"deleteVector contention: lost $maxRetries races in $logDir")
   }
 
   /** Point merge-on-read delete; same contract as
     * [[deleteVectorBetween]]. */
-  def deleteVectorWhere(column: String, value: Any,
-      maxRetries: Int = 20): Commit =
-    deleteVectorBetween(column, value, value, maxRetries)
+  def deleteVectorWhere(column: String, value: Any): Commit =
+    deleteVectorBetween(column, value, value)
 
   /** Delta-style RESTORE: make the table's content equal to `version`
     * again via a NEW commit — nothing is rewritten (the old files are
@@ -4643,7 +4378,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * any file of the target version was already vacuumed — restore
     * reaches only as far back as the retention window, the same
     * contract Delta documents. */
-  def restore(version: Long, maxRetries: Int = 20): Commit = {
+  def restore(version: Long): Commit = {
     val target = snapshotAt(version)
     require(target.version == version,
       s"version $version does not exist (log is at ${snapshot().version})")
@@ -4651,9 +4386,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(missing.isEmpty,
       s"restore to $version impossible: ${missing.size} file(s) already " +
         s"vacuumed (first: ${missing.headOption.getOrElse("")})")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = snapshot()
+    commitLoop("restore") { base =>
       // constraints are NOT restored (they are active table POLICY, not
       // content) — instead the restored content must satisfy the
       // currently active set, or the restore refuses loudly
@@ -4672,15 +4405,10 @@ final class TxTable private (spark: SparkSession, dir: String,
       }
       // the target's deletion vectors come back with it — restored
       // content is the target's CONTENT, vectors applied
-      val c = Commit(base.version + 1, "restore",
+      Proposal("restore",
         (target.files ++ target.dvs).map(_.stripPrefix(s"$dir/")),
-        (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/")),
-        System.currentTimeMillis())
-      val cc = tryCommit(c)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+        (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/")))
     }
-    sys.error(s"restore contention: lost $maxRetries races in $logDir")
   }
 
   // ------------------------------------------------------------- clone
@@ -4760,25 +4488,22 @@ final class TxTable private (spark: SparkSession, dir: String,
 
   /** Compact the current snapshot to `targetFiles` files — content
     * identical, file count bounded. */
-  def compact(targetFiles: Int = 1, maxRetries: Int = 20): Commit =
-    compactLayout(_.repartition(targetFiles), maxRetries)
+  def compact(targetFiles: Int = 1): Commit =
+    compactLayout(_.repartition(targetFiles))
 
   /** Compaction that also Z-ORDER-clusters the rewrite on (a, b)
     * ([[Layout.zordered]]): min/max file stats come out tight in both
     * dimensions, so post-compaction scans data-skip on either
     * predicate. Same conflict semantics as [[compact]]. */
-  def compactZOrdered(a: String, b: String, targetFiles: Int = 8,
-      maxRetries: Int = 20): Commit =
-    compactLayout(Layout.zordered(_, a, b, targetFiles), maxRetries)
+  def compactZOrdered(a: String, b: String, targetFiles: Int = 8): Commit =
+    compactLayout(Layout.zordered(_, a, b, targetFiles))
 
   /** N-dimensional variant ([[Layout.zorderedN]]): `ZORDER BY
     * (c1, …, cn)` with the same compaction protocol. */
-  def compactZOrdered(dims: Seq[String]): Commit =
-    compactZOrdered(dims, 8, 20)
+  def compactZOrdered(dims: Seq[String]): Commit = compactZOrdered(dims, 8)
 
-  def compactZOrdered(dims: Seq[String], targetFiles: Int,
-      maxRetries: Int): Commit =
-    compactLayout(Layout.zorderedN(_, dims, targetFiles), maxRetries)
+  def compactZOrdered(dims: Seq[String], targetFiles: Int): Commit =
+    compactLayout(Layout.zorderedN(_, dims, targetFiles))
 
   /** Shared compaction protocol: replace EXACTLY the base snapshot's
     * files with their `layout` rewrite. A concurrent APPEND is no
@@ -4787,8 +4512,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * (base ∪ appended). A concurrent REWRITE (upsert/overwrite) that
     * removed any base file aborts with an error: the rewrite already
     * subsumed or dropped rows this compaction would resurrect. */
-  private[ops] def compactLayout(
-      layout: DataFrame => DataFrame, maxRetries: Int): Commit = {
+  private[ops] def compactLayout(layout: DataFrame => DataFrame): Commit = {
     val base = snapshot()
     // the rewrite reads CONTENT (vectors applied) — compaction is also
     // the operation that MATERIALIZES merge-on-read deletes and
@@ -4798,31 +4522,19 @@ final class TxTable private (spark: SparkSession, dir: String,
     buildBlooms(files)
     val baseNames = (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/"))
     val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    commitLoop("compaction", reclaim = files) { head =>
       val nowActive = (head.files ++ head.dvs)
         .map(_.stripPrefix(s"$dir/")).toSet
-      if (!baseNames.forall(nowActive.contains)) {
-        files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+      if (!baseNames.forall(nowActive.contains))
         sys.error("compaction base was rewritten concurrently — rerun compact()")
-      }
       // a deletion vector that landed AFTER the base was read targets
       // base data files this commit removes: committing would silently
       // resurrect its deleted rows — abort instead (same class as the
       // rewrite conflict above; an append stays conflict-free)
-      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs) {
-        files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs)
         sys.error("a deletion vector landed during compaction — rerun compact()")
-      }
-      val c = Commit(head.version + 1, "compact", files, baseNames,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc.get
-      attempt += 1
+      Proposal("compact", files, baseNames, stats)
     }
-    files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"compaction contention: lost $maxRetries races in $logDir")
   }
 
   /** Validate a partition filter and derive the `col=value` path
@@ -4875,7 +4587,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * selects nothing. */
   def compactZOrderedWhere(dims: Seq[String],
       partitionFilter: Seq[(String, Any)],
-      targetFiles: Int = 8, maxRetries: Int = 20): Option[Commit] = {
+      targetFiles: Int = 8): Option[Commit] = {
     require(dims.length >= 2,
       s"ZORDER BY needs at least two columns; got ${dims.length}")
     require(partitionFilter.nonEmpty,
@@ -4894,26 +4606,14 @@ final class TxTable private (spark: SparkSession, dir: String,
     val stats = fileStats(staged)
     buildBlooms(staged)
     val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    Some(commitLoop("scoped z-order", reclaim = staged) { head =>
       val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
-      if (!selected.forall(nowActive.contains)) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+      if (!selected.forall(nowActive.contains))
         sys.error("scoped z-order input was rewritten concurrently — rerun")
-      }
-      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs)
         sys.error("a deletion vector landed during scoped z-order — rerun")
-      }
-      val c = Commit(head.version + 1, "compact", staged, selected,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc
-      attempt += 1
-    }
-    staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"scoped z-order contention: lost $maxRetries races in $logDir")
+      Proposal("compact", staged, selected, stats)
+    })
   }
 
   /** INCREMENTAL RECLUSTER — the device behind bare `OPTIMIZE` on a
@@ -4952,120 +4652,101 @@ final class TxTable private (spark: SparkSession, dir: String,
   def compactZOrderedIncremental(dims: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024,
       smallBytes: Long = 0L,
-      maxRetries: Int = 20,
       force: Boolean = false): Option[Commit] = {
     require(dims.length >= 2,
       s"recluster needs at least two dims; got ${dims.length}")
-    // fail BEFORE staging: an exhausted retry budget (consecutive
-    // interleaved appends restarting selection) must not pay a full
-    // rewrite only to delete it and error
-    if (maxRetries <= 0)
-      sys.error("recluster contention: interleaved commits exhausted " +
-        s"the retry budget in $logDir")
-    val base = snapshot()
-    if (base.files.isEmpty) return None
     val rcKey = "txtable.lastRecluster"
-    val watermark = base.cms.filter(TxTable.isTpName)
-      .map(TxTable.decodeTp)
-      .collectFirst { case (k, v) if k.equalsIgnoreCase(rcKey) => v }
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-    val activeRel = base.files.map(_.stripPrefix(s"$dir/"))
-    val selected: Seq[String] = watermark match {
-      case _ if force => activeRel // OPTIMIZE FULL: re-sort the world
-      case None => activeRel // first recluster: the whole table
-      case Some(w) =>
-        val window = commitsBetween(w, base.version)
-        if (window.size != base.version - w) activeRel // cleaned window
-        else {
-          val sinceAdds = window.flatMap(_.add)
-            .filterNot(n => TxTable.isMetaToken(n) || TxTable.isDvName(n))
-            .toSet
-          val fresh = activeRel.filter(sinceAdds.contains)
-          if (fresh.isEmpty) Nil
-          else if (smallBytes <= 0L) fresh
+    restaging("recluster") { base =>
+      val watermark = base.cms.filter(TxTable.isTpName)
+        .map(TxTable.decodeTp)
+        .collectFirst { case (k, v) if k.equalsIgnoreCase(rcKey) => v }
+        .flatMap(v => scala.util.Try(v.toLong).toOption)
+      val activeRel = base.files.map(_.stripPrefix(s"$dir/"))
+      val selected: Seq[String] = watermark match {
+        case _ if force => activeRel // OPTIMIZE FULL: re-sort the world
+        case None => activeRel // first recluster: the whole table
+        case Some(w) =>
+          val window = commitsBetween(w, base.version)
+          if (window.size != base.version - w) activeRel // cleaned window
           else {
-            // fold undersized clustered stragglers into the rewrite —
-            // only when new data is being rewritten anyway
-            val freshSet = fresh.toSet
-            fresh ++ activeRel.filter(n => !freshSet.contains(n) &&
-              new File(dir, n).length() < smallBytes)
+            val sinceAdds = window.flatMap(_.add)
+              .filterNot(n => TxTable.isMetaToken(n) || TxTable.isDvName(n))
+              .toSet
+            val fresh = activeRel.filter(sinceAdds.contains)
+            if (fresh.isEmpty) Nil
+            else if (smallBytes <= 0L) fresh
+            else {
+              // fold undersized clustered stragglers into the rewrite —
+              // only when new data is being rewritten anyway
+              val freshSet = fresh.toSet
+              fresh ++ activeRel.filter(n => !freshSet.contains(n) &&
+                new File(dir, n).length() < smallBytes)
+            }
           }
-        }
+      }
+      if (selected.isEmpty) None
+      else {
+        // retire deletion vectors this rewrite makes INERT: selected files
+        // are read with vectors APPLIED (deletes materialize into the
+        // staged output), so a vector whose every target is selected must
+        // leave the active set with them — otherwise inert dv tokens
+        // accumulate on every bare OPTIMIZE of a DV-bearing CLUSTER BY
+        // table (unbounded snapshot growth, dv files VACUUM can never
+        // reclaim). A vector also covering an UNSELECTED file stays: its
+        // deletes there are still live. Driver-side dv reads, file-name
+        // scale, memoized like every touched-file lookup.
+        val selectedSet = selected.toSet
+        val retiredDvs: Seq[String] =
+          if (base.dvs.isEmpty) Nil
+          else if (selected.size == activeRel.size)
+            base.dvs.map(_.stripPrefix(s"$dir/")) // full rewrite: all inert
+          else base.dvs.map(_.stripPrefix(s"$dir/")).filter { dvRel =>
+            touchedFiles(Seq(s"$dir/$dvRel")).forall(selectedSet.contains)
+          }
+        val sub = Snapshot(base.version, selected.map(n => s"$dir/$n"),
+          base.dvs, dir, base.merged, base.cts, base.cms)
+        val bytes = selected.map(n => new File(dir, n).length()).sum
+        // a FULL recluster keeps [[compactZOrdered]]'s 8-way fan-out floor
+        // (narrow per-file ranges even on small tables); incremental
+        // windows size purely by bytes — a small delta lands as one
+        // z-ordered file, not eight shards
+        val floor = if (selected.size == activeRel.size) 8L else 1L
+        val targetFiles = math.max(floor,
+          (bytes + targetBytes - 1) / targetBytes).toInt
+        val staged = stageLike(base, toPhysical(
+          Layout.zorderedN(readSnapshot(sub), dims, targetFiles), base))
+        val stats = fileStats(staged)
+        buildBlooms(staged)
+        val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
+        Some(Staged(staged, { head =>
+          val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
+          if (!selected.forall(nowActive.contains))
+            sys.error("recluster input was rewritten concurrently — rerun")
+          if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs)
+            sys.error("a deletion vector landed during recluster — rerun")
+          // the watermark stamps this commit's OWN version, so every data
+          // file that landed between the base snapshot and the commit
+          // would sit at-or-below it WITHOUT having been rewritten —
+          // permanently escaping the induction invariant. An interleaved
+          // DATA add therefore restarts the whole selection against the
+          // new head (token-only interleavers — properties, markers —
+          // are watermark-safe and ride through).
+          head.version == base.version ||
+            !commitsBetween(base.version, head.version).exists(_.add
+              .exists(n => !TxTable.isMetaToken(n) && !TxTable.isDvName(n)))
+        }, { head =>
+          beforeDmlCommitHook() // race seam, same as every rewrite path
+          // the watermark property swaps IN the recluster commit: the new
+          // token records this commit's own version, the old (any case
+          // variant) retires with the rewritten files
+          val oldRc = head.cms.filter(t => TxTable.isTpName(t) &&
+            TxTable.decodeTp(t)._1.equalsIgnoreCase(rcKey))
+          Proposal("compact",
+            staged :+ TxTable.encodeTp(rcKey, (head.version + 1).toString),
+            selected ++ oldRc ++ retiredDvs, stats)
+        }))
+      }
     }
-    if (selected.isEmpty) return None
-    // retire deletion vectors this rewrite makes INERT: selected files
-    // are read with vectors APPLIED (deletes materialize into the
-    // staged output), so a vector whose every target is selected must
-    // leave the active set with them — otherwise inert dv tokens
-    // accumulate on every bare OPTIMIZE of a DV-bearing CLUSTER BY
-    // table (unbounded snapshot growth, dv files VACUUM can never
-    // reclaim). A vector also covering an UNSELECTED file stays: its
-    // deletes there are still live. Driver-side dv reads, file-name
-    // scale, memoized like every touched-file lookup.
-    val selectedSet = selected.toSet
-    val retiredDvs: Seq[String] =
-      if (base.dvs.isEmpty) Nil
-      else if (selected.size == activeRel.size)
-        base.dvs.map(_.stripPrefix(s"$dir/")) // full rewrite: all inert
-      else base.dvs.map(_.stripPrefix(s"$dir/")).filter { dvRel =>
-        touchedFiles(Seq(s"$dir/$dvRel")).forall(selectedSet.contains)
-      }
-    val sub = Snapshot(base.version, selected.map(n => s"$dir/$n"),
-      base.dvs, dir, base.merged, base.cts, base.cms)
-    val bytes = selected.map(n => new File(dir, n).length()).sum
-    // a FULL recluster keeps [[compactZOrdered]]'s 8-way fan-out floor
-    // (narrow per-file ranges even on small tables); incremental
-    // windows size purely by bytes — a small delta lands as one
-    // z-ordered file, not eight shards
-    val floor = if (selected.size == activeRel.size) 8L else 1L
-    val targetFiles = math.max(floor,
-      (bytes + targetBytes - 1) / targetBytes).toInt
-    val staged = stageLike(base, toPhysical(
-      Layout.zorderedN(readSnapshot(sub), dims, targetFiles), base))
-    val stats = fileStats(staged)
-    buildBlooms(staged)
-    val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
-    var attempt = 0
-    while (attempt < maxRetries) {
-      beforeDmlCommitHook() // race seam, same as every rewrite path
-      val head = snapshot()
-      val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
-      if (!selected.forall(nowActive.contains)) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-        sys.error("recluster input was rewritten concurrently — rerun")
-      }
-      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-        sys.error("a deletion vector landed during recluster — rerun")
-      }
-      // the watermark stamps this commit's OWN version, so every data
-      // file that landed between the base snapshot and the commit
-      // would sit at-or-below it WITHOUT having been rewritten —
-      // permanently escaping the induction invariant. An interleaved
-      // DATA add therefore restarts the whole selection against the
-      // new head (token-only interleavers — properties, markers —
-      // are watermark-safe and ride through).
-      if (head.version != base.version &&
-          commitsBetween(base.version, head.version).exists(_.add
-            .exists(n => !TxTable.isMetaToken(n) && !TxTable.isDvName(n)))) {
-        staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-        return compactZOrderedIncremental(dims, targetBytes, smallBytes,
-          maxRetries - attempt - 1, force)
-      }
-      // the watermark property swaps IN the recluster commit: the new
-      // token records this commit's own version, the old (any case
-      // variant) retires with the rewritten files
-      val oldRc = head.cms.filter(t => TxTable.isTpName(t) &&
-        TxTable.decodeTp(t)._1.equalsIgnoreCase(rcKey))
-      val c = Commit(head.version + 1, "compact",
-        staged :+ TxTable.encodeTp(rcKey, (head.version + 1).toString),
-        selected ++ oldRc ++ retiredDvs, System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc
-      attempt += 1
-    }
-    staged.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"recluster contention: lost $maxRetries races in $logDir")
   }
 
   /** BIN-PACKING compaction — Delta's OPTIMIZE shape, the only
@@ -5098,7 +4779,6 @@ final class TxTable private (spark: SparkSession, dir: String,
     * inference and manifest pruning are untouched — and flat files
     * pack at the root, all under ONE atomic commit. */
   def compactBinPack(targetBytes: Long = 128L * 1024 * 1024,
-      maxRetries: Int = 20,
       partitionFilter: Seq[(String, Any)] = Nil): Option[Commit] = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
@@ -5150,27 +4830,15 @@ final class TxTable private (spark: SparkSession, dir: String,
     val files = stagedB.result()
     val stats = fileStats(files)
     buildBlooms(files)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = snapshot()
+    Some(commitLoop("bin-pack", reclaim = files) { head =>
       val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
-      if (!selected.forall(nowActive.contains)) {
-        files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+      if (!selected.forall(nowActive.contains))
         sys.error("bin-pack input was rewritten concurrently — rerun compactBinPack()")
-      }
       if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet !=
-          base.dvs.map(_.stripPrefix(s"$dir/")).toSet) {
-        files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
+          base.dvs.map(_.stripPrefix(s"$dir/")).toSet)
         sys.error("a deletion vector landed during bin-packing — rerun compactBinPack()")
-      }
-      val c = Commit(head.version + 1, "compact", files, selected,
-        System.currentTimeMillis())
-      val cc = tryCommit(c, stats)
-      if (cc.isDefined) return cc
-      attempt += 1
-    }
-    files.foreach { n => new File(dir, n).delete(); dropBlooms(n) }
-    sys.error(s"bin-pack contention: lost $maxRetries races in $logDir")
+      Proposal("compact", files, selected, stats)
+    })
   }
 
   /** Delete data files that no snapshot ≥ `retainVersion` references.

@@ -982,8 +982,8 @@ final class TxTableSink(
         txn = txn); ()
     } else {
       if (partitionCols.nonEmpty) {
-        t.appendPartitioned(batch, partitionCols, 50, txn); ()
-      } else { t.append(batch, 50, txn); () }
+        t.appendPartitioned(batch, partitionCols, txn); ()
+      } else { t.append(batch, txn); () }
     }
   }
 

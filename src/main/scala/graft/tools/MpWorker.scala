@@ -196,7 +196,7 @@ object MpWorker {
         val s = session()
         val t = mkTable(s, table)
         try {
-          t.append(rows(s, lo.toLong, hi.toLong), 50,
+          t.append(rows(s, lo.toLong, hi.toLong),
             Some((appId, batchId.toLong)))
           s.stop()
           sys.exit(0)

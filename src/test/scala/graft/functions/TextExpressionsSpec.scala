@@ -181,29 +181,32 @@ class TextExpressionsSpec extends SparkTestBase {
   }
 
   test("hashed_bucket_fold: model guards and null tokens behave as the fold did") {
-    // a bad (b, w) table fails while building the model, with the same
-    // error condition on the native path as on the interpreted fold
-    def condition(f: => Any): String =
+    // a bad (b, w) table fails while building the model: a duplicate
+    // bucket with the same error condition on the native path as on the
+    // interpreted fold, a null bucket or weight with an error naming it
+    def thrown(f: => Any): Exception with org.apache.spark.SparkThrowable =
       intercept[Exception](f) match {
-        case e: org.apache.spark.SparkThrowable => e.getCondition
+        case e: Exception with org.apache.spark.SparkThrowable => e
         case e => fail(s"not a SparkThrowable: $e")
       }
     val few = docs.limit(5)
     val fewToks = few.select(TextFunctions.tokens(col("text")).as("toks"))
-    for ((bad, want) <- Seq(
-        Seq((Option(0L), Option(1.0)), (Option(1L), Option(-1.0)),
-          (Option(1L), Option(0.5))) -> Some("DUPLICATED_MAP_KEY"),
-        // collect_list drops a null bucket or weight, so the key and
-        // value lists differ in length
-        Seq((Option(0L), Option(1.0)), (None, Option(-1.0))) -> None,
-        Seq((Option(0L), Option(1.0)), (Option(1L), None)) -> None)) {
-      val weights = spark.createDataFrame(bad).toDF("b", "w")
-      val native = condition(
-        TextAnalysis.linearQualityScore(few, weights, 2).collect())
-      val fold = condition(fewToks.crossJoin(foldModel(weights))
-        .select(foldBuckets(col("toks"), col("wmap"), 2)).collect())
-      assert(native === fold)
-      want.foreach(w => assert(native === w))
+    def table(rows: (Option[Long], Option[Double])*) =
+      spark.createDataFrame(rows).toDF("b", "w")
+    val dup = table((Some(0L), Some(1.0)), (Some(1L), Some(-1.0)),
+      (Some(1L), Some(0.5)))
+    val native = thrown(
+      TextAnalysis.linearQualityScore(few, dup, 2).collect()).getCondition
+    val fold = thrown(fewToks.crossJoin(foldModel(dup))
+      .select(foldBuckets(col("toks"), col("wmap"), 2)).collect())
+      .getCondition
+    assert(native === "DUPLICATED_MAP_KEY")
+    assert(fold === native)
+    for (bad <- Seq(table((Some(0L), Some(1.0)), (None, Some(-1.0))),
+        table((Some(0L), Some(1.0)), (Some(1L), None)))) {
+      val err = thrown(TextAnalysis.linearQualityScore(few, bad, 2).collect())
+      assert(err.getMessage.contains(
+        "linear model: 1 row(s) with a null bucket or weight"), err.getMessage)
     }
     // a null token nulls the sum; a bucket count < 1 and misaligned
     // keys and weights are refused

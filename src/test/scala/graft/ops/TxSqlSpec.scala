@@ -873,20 +873,20 @@ class TxSqlSpec extends SparkTestBase {
 
   test("zombie txn writer: an already-recorded (app, version) aborts the write") {
     val (t, _) = mkTable()
-    t.append(df(0 until 5), 50, Some(("appZ", 7L)))
+    t.append(df(0 until 5), Some(("appZ", 7L)))
     assert(t.txnVersion("appZ") === Some(7L))
     // the same batch committed again (the zombie-attempt shape, past
     // any caller-side entry guard): the engine itself must refuse —
     // swapping the identical marker and landing the rows twice is the
     // exactly-once failure
     intercept[graft.ops.TxTable.TxnAlreadyApplied](
-      t.append(df(0 until 5), 50, Some(("appZ", 7L))))
+      t.append(df(0 until 5), Some(("appZ", 7L))))
     assert(t.read().count() === 5)
     // a LOWER version too (stale zombie of an older batch)
     intercept[graft.ops.TxTable.TxnAlreadyApplied](
-      t.append(df(0 until 5), 50, Some(("appZ", 6L))))
+      t.append(df(0 until 5), Some(("appZ", 6L))))
     // a fresh version proceeds
-    t.append(df(5 until 8), 50, Some(("appZ", 8L)))
+    t.append(df(5 until 8), Some(("appZ", 8L)))
     assert(t.read().count() === 8)
   }
 

@@ -153,7 +153,7 @@ class TxTableMultiProcessSpec extends SparkTestBase {
 
     test(s"[$kind] txn marker refuses a replayed batch from another process") {
       val (t, path) = mkTable("txn")
-      t.append(df(0 until 5), 50, Some(("mp-app", 3L)))
+      t.append(df(0 until 5), Some(("mp-app", 3L)))
       // a second process re-delivering the SAME (appId, batchId) — the
       // zombie-restart shape — must be refused by the marker in the
       // table itself (no sink memory crosses processes)

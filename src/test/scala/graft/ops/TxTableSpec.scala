@@ -445,17 +445,84 @@ class TxTableSpec extends SparkTestBase {
     assert(t.read().count() === 10)
   }
 
-  test("append with exhausted retries reclaims its staged files") {
-    val (t, dir) = mkTable()
-    t.append(df(0 until 5))
-    val before = new File(dir).listFiles()
-      .count(_.getName.startsWith("data-"))
-    intercept[RuntimeException](t.append(df(10 until 15), maxRetries = 0))
-    val after = new File(dir).listFiles()
-      .count(_.getName.startsWith("data-"))
-    assert(after === before)
-    assert(t.read().count() === 5)
+  /** A [[LogStore]] that, once armed, loses every version race — the
+    * deterministic form of unbounded contention. Counts the CAS
+    * attempts it refused. */
+  private final class Contended(under: LogStore) extends LogStore {
+    @volatile var armed = false
+    val refused = new java.util.concurrent.atomic.AtomicInteger
+    def putIfAbsent(target: File, content: Array[Byte]): Boolean =
+      if (armed) { refused.incrementAndGet(); false }
+      else under.putIfAbsent(target, content)
+    override def staleHorizonMs: Long = under.staleHorizonMs
   }
+
+  /** Every data, vector and bloom file under `root`, partitions and the
+    * bloom sidecar directory included. */
+  private def stagedFiles(root: File): Set[String] =
+    Option(root.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) stagedFiles(f)
+      else if (f.getName.startsWith("data-") || f.getName.startsWith("dv-") ||
+          f.getParentFile.getName == "bloom") Seq(f.getPath)
+      else Nil
+    }.toSet
+
+  private def partitioned(range: Range) =
+    df(range).withColumn("part", (col("id") % 3).cast("int"))
+
+  // (operation, error prefix, attempt budget, seed, op); the seed runs
+  // before the store is armed
+  private val exhaustion: Seq[(String, String, Int, TxTable => Any,
+      TxTable => Any)] = {
+    val flat = (t: TxTable) => t.append(df(0 until 20).repartition(2))
+    Seq(
+      ("append", "append", 50, flat, _.append(df(20 until 25))),
+      ("appendPartitioned", "append", 50,
+        _.appendPartitioned(partitioned(0 until 20), Seq("part")),
+        _.appendPartitioned(partitioned(20 until 25), Seq("part"))),
+      ("overwrite", "overwrite", 50, flat, _.overwrite(df(100 until 105))),
+      ("upsert", "upsert", 20, flat, _.upsert(df(15 until 25), Seq("id"))),
+      ("merge", "merge", 20, flat, _.merge(df(15 until 25), Seq("id"),
+        whenMatchedUpdate = Some(lit(true)),
+        whenNotMatchedInsert = Some(lit(true)))),
+      ("deleteWhere", "delete", 20, flat, _.deleteWhere("id", 3L)),
+      ("updateWhere", "update", 20, flat,
+        _.updateWhere("id", 3L, Map("payload" -> lit("patched")))),
+      ("deleteVectorWhere", "deleteVector", 20, flat,
+        _.deleteVectorWhere("id", 3L)),
+      ("copyInto", "COPY INTO", 20, flat, { t =>
+        val src = Files.createTempDirectory("graft-copy-src-").toString
+        df(50 until 55).write.mode("overwrite").parquet(src)
+        t.copyInto(src)
+      }),
+      ("compact", "compaction", 20, flat, _.compact()),
+      ("compactZOrderedIncremental", "recluster", 20, flat,
+        _.compactZOrderedIncremental(Seq("id", "id"))),
+      ("addConstraint", "addConstraint", 20, flat,
+        _.addConstraint("id_nonneg", "id >= 0")),
+      ("setProperties", "setProperties", 20, flat,
+        _.setProperties(Map("owner" -> "etl"))))
+  }
+
+  for ((name, errOp, budget, seed, op) <- exhaustion)
+    test(s"$name with exhausted retries reclaims its staged files") {
+      val dir = Files.createTempDirectory("graft-tx-").toString
+      val store = new Contended(logStore)
+      val t = TxTable(spark, dir, store).bloomIndex(Seq("id"))
+      seed(t)
+      val version = t.snapshot().version
+      val rows = t.read().collect().map(_.toString).sorted.toSeq
+      val files = stagedFiles(new File(dir))
+      store.armed = true
+      val err = intercept[RuntimeException](op(t))
+      store.armed = false
+      assert(err.getMessage.contains(
+        s"$errOp contention: lost $budget races in"), err.getMessage)
+      assert(store.refused.get === budget)
+      assert(stagedFiles(new File(dir)) === files)
+      assert(t.snapshot().version === version)
+      assert(t.read().collect().map(_.toString).sorted.toSeq === rows)
+    }
 
   test("commit-log codec roundtrips") {
     val c = TxTable.Commit(7, "upsert",
@@ -544,8 +611,7 @@ class TxTableSpec extends SparkTestBase {
     // the layout callback runs while compaction stages, BEFORE the
     // commit loop — a deterministic stand-in for a racing DV writer
     val err = intercept[RuntimeException] {
-      t.compactLayout(d => { t.deleteVectorWhere("id", 5L); d.repartition(1) },
-        maxRetries = 20)
+      t.compactLayout(d => { t.deleteVectorWhere("id", 5L); d.repartition(1) })
     }
     assert(err.getMessage.contains("deletion vector"))
     assert(t.read().count() === 99) // the vector delete is intact

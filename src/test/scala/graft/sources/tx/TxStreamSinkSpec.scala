@@ -53,7 +53,7 @@ class TxStreamSinkSpec extends SparkTestBase {
     assert(legacyId !== newId)
     val t = TxTable(spark, dir)
     // the pre-upgrade job committed batch 7 under the LEGACY id
-    t.append(Seq((1L, "b7")).toDF("id", "payload"), 50,
+    t.append(Seq((1L, "b7")).toDF("id", "payload"),
       Some((legacyId, 7L)))
     assert(t.txnVersion(legacyId) === Some(7L))
     // a sink resuming that checkpoint post-upgrade must look the
