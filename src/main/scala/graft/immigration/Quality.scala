@@ -1,6 +1,7 @@
 package graft.immigration
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Data-quality checks (ref `etl.py:360-411`).
   *
@@ -9,11 +10,11 @@ import org.apache.spark.sql.DataFrame
   * Its referential check is also logically inverted for three of the five
   * code columns (the inner-join fact can only LOSE dim codes, so
   * `distinct(fact.code) != distinct(dim)` is the expected state, not an
-  * anomaly). We reimplement the same check QUERIES faithfully but make
-  * failure behavior explicit: warn mode (default — observable parity
-  * with the reference: log and continue) and strict mode (throws on the
-  * non-empty checks; the referential comparisons stay report-only
-  * because, as published, they'd abort every healthy run).
+  * anomaly). The same counts come from ONE fact aggregate and a collect
+  * per dim, not 17 actions; failure behavior is explicit: warn mode
+  * (default — the reference's observable log-and-continue) and strict mode
+  * (throws on the non-empty checks; the referential comparisons stay
+  * report-only because, as published, they'd abort every healthy run).
   */
 object Quality {
 
@@ -21,39 +22,38 @@ object Quality {
 
   final class QualityCheckFailure(msg: String) extends RuntimeException(msg)
 
-  def nonEmpty(name: String, df: DataFrame): CheckResult = {
-    val n = df.count()
-    CheckResult(s"non_empty_$name", n > 0, s"$name has $n rows")
-  }
+  def nonEmpty(name: String, rows: Long): CheckResult =
+    CheckResult(s"non_empty_$name", rows > 0, s"$name has $rows rows")
 
-  /** The reference's referential-consistency comparison, verbatim:
-    * distinct fact codes vs distinct dim ROWS (its `dim.distinct().count()`
-    * counts whole rows, another preserved quirk). */
-  def referential(name: String, fact: DataFrame, factCol: String,
-      dim: DataFrame): CheckResult = {
-    val factDistinct = fact.select(factCol).distinct().count()
-    val dimDistinct = dim.distinct().count()
+  /** The reference's referential comparison, verbatim: distinct fact codes
+    * vs distinct dim ROWS (its `dim.distinct()` counts whole rows, a quirk). */
+  def referential(name: String, factCol: String, factDistinct: Long,
+      dimDistinct: Long): CheckResult =
     CheckResult(s"referential_$name", factDistinct == dimDistinct,
       s"fact.$factCol distinct=$factDistinct vs dim distinct=$dimDistinct")
-  }
 
-  def runAll(
-      fact: DataFrame, cityDemographics: DataFrame, countries: DataFrame,
+  def runAll(fact: DataFrame, cityDemographics: DataFrame, countries: DataFrame,
       states: DataFrame, ports: DataFrame, travelModes: DataFrame,
-      visaCategories: DataFrame): Seq[CheckResult] =
-    Seq(
-      nonEmpty("fact_immigrations", fact),
-      nonEmpty("dim_city_demographics", cityDemographics),
-      nonEmpty("dim_ports", ports),
-      nonEmpty("dim_country", countries),
-      nonEmpty("dim_us_state", states),
-      nonEmpty("dim_visa_category", visaCategories),
-      nonEmpty("dim_travel_mode", travelModes),
-      referential("visa_category", fact, "visa_category_code", visaCategories),
-      referential("travel_mode", fact, "travel_mode_code", travelModes),
-      referential("port", fact, "port_code", ports),
-      referential("country", fact, "origin_country_code", countries),
-      referential("us_state", fact, "us_state_code", states))
+      visaCategories: DataFrame): Seq[CheckResult] = {
+    // (table, dim, referential check, fact code column), non-empty order
+    val dims = Seq(("dim_ports", ports, "port", "port_code"),
+      ("dim_country", countries, "country", "origin_country_code"),
+      ("dim_us_state", states, "us_state", "us_state_code"),
+      ("dim_visa_category", visaCategories, "visa_category", "visa_category_code"),
+      ("dim_travel_mode", travelModes, "travel_mode", "travel_mode_code"))
+    // struct(c) keeps NULL as one value, as select(c).distinct() does
+    val f = fact.agg(count(lit(1)),
+      dims.map(d => count_distinct(struct(col(d._4)))): _*).head()
+    // 3–660 rows each; on all-string rows `Row` equality is Spark's distinct
+    require(dims.forall(_._2.schema.forall(_.dataType.typeName == "string")))
+    val rows = dims.map(_._2.collect())
+    val refs = dims.indices.map(i =>
+      referential(dims(i)._3, dims(i)._4, f.getLong(i + 1), rows(i).distinct.length))
+    Seq(nonEmpty("fact_immigrations", f.getLong(0)),
+      nonEmpty("dim_city_demographics", cityDemographics.count())) ++
+      dims.indices.map(i => nonEmpty(dims(i)._1, rows(i).length)) ++
+      refs.drop(3) ++ refs.take(3) // the reference checks visa and mode first
+  }
 
   /** Warn mode logs failures and continues (the reference's observable
     * behavior); strict mode throws on any failed NON-EMPTY check. */

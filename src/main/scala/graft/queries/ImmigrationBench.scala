@@ -58,6 +58,7 @@ object ImmigrationBench {
       o.cityDemographics.write.mode("overwrite").parquet(s"$dir/city_demo")
       o.countries.write.mode("overwrite").parquet(s"$dir/countries")
       o.fact.unpersist(blocking = false)
+      o.cityDemographics.unpersist(blocking = false)
       // golden top-10 asserts against the WRITTEN tables — exactly what
       // the timed thunks read
       def top(df: DataFrame, keyIdx: Int, cntIdx: Int): Seq[(String, Long)] =
