@@ -1,5 +1,7 @@
 package graft.immigration
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -53,12 +55,19 @@ object Cleaning {
   def cleanDemographics(df: DataFrame): DataFrame =
     df.dropDuplicates().na.drop()
 
-  def cleanPorts(df: DataFrame): DataFrame =
-    df.withColumn("city", portCity(col("port_name")))
+  /** The projection runs in Catalyst (Spark's `trim`); over the label
+    * `LocalRelation` it folds to a local relation, so the `collect()`
+    * launches no job. The rows are deduplicated on the driver and wrapped
+    * back as a local relation: `dropDuplicates()` would make every
+    * consumer re-run a shuffle aggregate. */
+  def cleanPorts(df: DataFrame): DataFrame = {
+    val projected = df.withColumn("city", portCity(col("port_name")))
       .withColumn("state_code", portState(col("port_name")))
       .drop("port_name")
       .na.drop()
-      .dropDuplicates()
+    df.sparkSession.createDataFrame(
+      projected.collect().distinct.toList.asJava, projected.schema)
+  }
 
   /** U5: junk country labels → 'NA'. First alternative anchored, the other
     * two not — replaces the matched PREFIX, so 'INVALID: UNKNOWN' → 'NA'

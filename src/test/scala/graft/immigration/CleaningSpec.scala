@@ -1,6 +1,9 @@
 package graft.immigration
 
 import graft.SparkTestBase
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 
 /** Quirk-parity tests for the U1–U5/P4 cleaning semantics (SURVEY §2.3).
@@ -51,5 +54,28 @@ class CleaningSpec extends SparkTestBase {
     val df = Seq(("99", "All Other Codes"), ("AK", "ALASKA"))
       .toDF("state_code", "state_name")
     assert(Cleaning.cleanStates(df).collect().map(_.getString(0)).toSeq === Seq("AK"))
+  }
+
+  test("cleanPorts: dropDuplicates' rows as a local relation, Spark's trim, no job") {
+    val raw = Seq(("NYC", "NEW YORK, NY"), ("NYC", "NEW YORK , NY "), ("NYC", "NEW YORK, NY"),
+      ("ANC", "ANCHORAGE,\tAK"), ("XXX", "NOCOMMA"), ("NUL", null),
+      ("WAS", "WASHINGTON DC, MD, VA")).toDF("port_code", "port_name")
+    val reference = raw.withColumn("city", Cleaning.portCity(col("port_name")))
+      .withColumn("state_code", Cleaning.portState(col("port_name")))
+      .drop("port_name").na.drop().dropDuplicates()
+    val sc = spark.sparkContext
+    sc.setJobGroup("clean-ports", "clean-ports")
+    val (cleaned, rows) = try {
+      val c = Cleaning.cleanPorts(raw)
+      (c, c.collect())
+    } finally sc.clearJobGroup()
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("clean-ports").isEmpty)
+    assert(cleaned.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(cleaned.schema === reference.schema)
+    assert(rows.length === 3)
+    assert(rows.toSet === reference.collect().toSet)
+    // Spark's trim strips spaces only; a tab stays
+    assert(rows.contains(Row("ANC", "ANCHORAGE", "\tAK")))
   }
 }

@@ -9,6 +9,7 @@ import scala.sys.process._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -50,13 +51,15 @@ class ImmigrationFixtureSpec extends SparkTestBase with BeforeAndAfterAll {
   /** Check-phase telemetry: the SQL execution (action) of every job that
     * starts before the first sink command. Jobs outside any execution, such
     * as the parquet schema inference `build()` runs, are not actions and are
-    * not counted. */
+    * not counted. Also the job group of every job. */
   private final class PhaseListener extends SparkListener {
     private val jobExecs = mutable.Buffer.empty[String]
+    private val jobGroups = mutable.Buffer.empty[String]
     @volatile var sinkSeen = false
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-        .filter(_ => !sinkSeen).foreach(jobExecs += _)
+      def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+      prop("spark.sql.execution.id").filter(_ => !sinkSeen).foreach(jobExecs += _)
+      jobGroups += prop("spark.jobGroup.id").getOrElse("<none>")
     }
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart
@@ -65,10 +68,13 @@ class ImmigrationFixtureSpec extends SparkTestBase with BeforeAndAfterAll {
       case _ =>
     }
     def execs: Seq[String] = synchronized(jobExecs.toList)
+    def groups: Seq[String] = synchronized(jobGroups.toList)
   }
 
   private final case class Fixture(o: ImmigrationPipeline.Outputs, exp: JsonNode,
-      out: File, checkJobExecs: Seq[String])
+      out: File, checkJobExecs: Seq[String], jobGroups: Seq[String])
+
+  private val Group = "immigration-fixture"
 
   private lazy val fixture: Fixture = {
     val dir = Files.createTempDirectory("graft-imm-fixture-").toFile
@@ -82,19 +88,18 @@ class ImmigrationFixtureSpec extends SparkTestBase with BeforeAndAfterAll {
     val cfg = ImmigrationConfig(s"$in/i94", s"$in/demographics.csv",
       s"$in/labels.SAS", out.getPath)
 
+    val sc = spark.sparkContext
     val listener = new PhaseListener
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     val o = try {
-      val o = ImmigrationPipeline.run(spark, cfg)
-      // events arrive in post order: once the first sink's start is seen,
-      // every check-phase job before it has been counted
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!listener.sinkSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      sc.setJobGroup(Group, Group)
+      val o = try ImmigrationPipeline.run(spark, cfg) finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
       assert(listener.sinkSeen, "no sink command observed")
       o
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
     built = Some(o)
-    Fixture(o, exp, out, listener.execs)
+    Fixture(o, exp, out, listener.execs, listener.groups)
   }
 
   private var built: Option[ImmigrationPipeline.Outputs] = None
@@ -170,16 +175,34 @@ class ImmigrationFixtureSpec extends SparkTestBase with BeforeAndAfterAll {
     }
   }
 
-  test("the check phase launches jobs from at most 3 actions") {
+  test("every unpartitioned dim directory holds exactly one part file") {
     assume(pythonReady, "python3 with numpy and pyarrow not available")
     val f = fixture
-    // Three actions: the fact aggregate, the cleaned-ports collect and the
-    // city-demo count; the other four dims collect from local relations.
-    // Their 20 jobs are 11 for the aggregate (it also builds and persists
-    // the fact, whose dedupe shuffle and five dim broadcasts are jobs of
-    // their own), 2 for the ports and 7 for the city demographics.
+    Seq("dim_country", "dim_us_state", "dim_ports", "dim_travel_mode",
+        "dim_visa_category").foreach { t =>
+      val parts = new File(f.out, s"$t.parquet").list()
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.length === 1, s"$t holds ${parts.length} part files")
+    }
+  }
+
+  test("the check phase launches jobs from at most 2 actions") {
+    assume(pythonReady, "python3 with numpy and pyarrow not available")
+    val f = fixture
+    // Two actions, run side by side: the fact aggregate and the city-demo
+    // count; the five dims, cleaned ports included, collect from local
+    // relations. Their 16 jobs are 10 for the aggregate (it also builds and
+    // persists the fact, whose dedupe shuffle and five dim broadcasts are
+    // jobs of their own) and 6 for the city demographics.
     val perJob = s"SQL execution per job: ${f.checkJobExecs}"
-    assert(f.checkJobExecs.distinct.size <= 3, perJob)
-    assert(f.checkJobExecs.size <= 20, perJob)
+    assert(f.checkJobExecs.distinct.size <= 2, perJob)
+    assert(f.checkJobExecs.size <= 16, perJob)
+  }
+
+  test("every job run() starts carries the caller's job group") {
+    assume(pythonReady, "python3 with numpy and pyarrow not available")
+    val f = fixture
+    assert(f.jobGroups.nonEmpty)
+    assert(f.jobGroups.forall(_ == Group), s"job groups: ${f.jobGroups}")
   }
 }

@@ -117,30 +117,9 @@ class QualitySpec extends SparkTestBase {
 
   test("run(strict = true) on an empty fact throws before any sink writes") {
     val in = Files.createTempDirectory("graft-quality-empty-").toFile
-    val labels = Seq("/* I94RES */", "  value i94cntyl", "   101 =  'COUNTRY A'", "  ;",
-      "/* I94PORT */", "  value $i94prtl", "\t'NYC'\t=\t'NEW YORK, NY'", ";",
-      "/* I94MODE */", "  value i94model", "\t1 = 'Air' ;",
-      "/* I94ADDR */", "  value i94addrl", "\t'NY'='NEW YORK'", ";",
-      "/* I94VISA - Visa codes:", "   1 = Business", "*/", "run ;", "")
-    Files.writeString(new File(in, "labels.SAS").toPath, labels.mkString("\n"))
-    Files.writeString(new File(in, "demographics.csv").toPath,
-      "City;State;Median Age;Male Population;Female Population;Total Population;" +
-        "Number of Veterans;Foreign-born;Average Household Size;State Code;Race;Count\n" +
-        "New York;New York;36.0;4000000;4000000;8000000;100;300;2.5;NY;White;10\n")
     // one I94 row whose port is not in the labels: the inner join empties the fact
-    val doubles = Seq("cicid", "i94yr", "i94mon", "i94res", "arrdate", "i94mode",
-      "depdate", "i94bir", "i94visa", "biryear", "admnum")
-    val strings = Seq("i94port", "i94addr", "occup", "dtaddto", "gender",
-      "airline", "fltno", "visatype")
-    val schema = StructType(doubles.map(StructField(_, DoubleType)) ++
-      strings.map(StructField(_, StringType)))
-    val row = Row.fromSeq(Seq(1.0, 2016.0, 4.0, 101.0, 20545.0, 1.0, 20550.0, 30.0, 1.0,
-      1986.0, 1e9) ++ Seq("ZZZ", "NY", null, "04302016", "M", "AA", "1", "B2"))
-    spark.createDataFrame(java.util.List.of(row), schema)
-      .write.parquet(new File(in, "i94").getPath)
-    val out = new File(in, "out")
-    val cfg = ImmigrationConfig(s"$in/i94", s"$in/demographics.csv", s"$in/labels.SAS",
-      out.getPath)
+    val cfg = ImmigrationPipelineSpec.tinyInput(spark, in, port = "ZZZ")
+    val out = new File(cfg.outputDir)
 
     val pinned = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[Quality.QualityCheckFailure] {
