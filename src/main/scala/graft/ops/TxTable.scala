@@ -156,6 +156,16 @@ object TxTable {
   private final case class Staged(files: Seq[String],
       holds: Snapshot => Boolean, propose: Snapshot => Proposal)
 
+  /** Where [[TxTable.stage]] lays its part files out under the table
+    * root: like `base`'s files, hive-partitioned on the given physical
+    * columns (Nil: flat), or inside one existing leaf directory (""
+    * the flat root) with that leaf's path columns dropped. */
+  private sealed trait Placement
+  private final case class AsBase(base: Snapshot) extends Placement
+  private final case class PartitionedBy(cols: Seq[String])
+      extends Placement
+  private final case class IntoLeaf(leaf: String) extends Placement
+
   /** Is `rel` (a table-relative name, possibly partition-qualified) a
     * deletion-vector file? DV files flow through the commit log's
     * add/remove lists exactly like data files — the name prefix is the
@@ -1148,7 +1158,6 @@ final class TxTable private (spark: SparkSession, dir: String,
     * lists from the log, so nothing requires the engine's `data-`
     * prefix. */
   private[ops] def convertInPlace(): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val head = snapshot()
     require(head.version == -1L,
       s"$dir is already a transactional table (at v${head.version}) — " +
@@ -1176,9 +1185,8 @@ final class TxTable private (spark: SparkSession, dir: String,
       kids.filter(f => f.isFile && adoptable(f.getName))
         .map(f => (s"$prefix${f.getName}", cols)).toSeq ++
         kids.filter(isPartDir).toSeq.flatMap { sub =>
-          val col = ExternalCatalogUtils.unescapePathName(
-            sub.getName.takeWhile(_ != '='))
-          walk(sub, cols :+ col, s"$prefix${sub.getName}/")
+          walk(sub, cols ++ partKey(sub.getName).map(_._1),
+            s"$prefix${sub.getName}/")
         }
     }
     val found = walk(root, Nil, "")
@@ -1205,7 +1213,7 @@ final class TxTable private (spark: SparkSession, dir: String,
         s"dv- basename) and would be misread as metadata: " +
         s"${reserved.take(3).mkString(", ")} — rename them first")
     val c = Commit(0L, "convert", rels, Nil, System.currentTimeMillis())
-    require(tryCommit(c, fileStats(rels)).isDefined,
+    require(tryCommit(c, fileStats(rels)._1).isDefined,
       s"conversion raced: another writer committed v0 to $dir")
   }
 
@@ -1690,14 +1698,10 @@ final class TxTable private (spark: SparkSession, dir: String,
         df2 = df2.drop("__pid")
         if (evolve) guardSchemaEvolve(head, df2)
         else guardSchema(head, df2)
-        val phys = toPhysical(enforced(df2, cts), head)
-        val staged =
-          if (partitionCols.nonEmpty)
-            stagePartitioned(phys, partitionCols.map(physName(head, _)))
-          else stageLike(head, phys)
+        val (staged, stats) = stage(toPhysical(enforced(df2, cts), head),
+          if (partitionCols.isEmpty) AsBase(head)
+          else PartitionedBy(partitionCols.map(physName(head, _))))
         guardConstraints(head, cts, staged, gcs)
-        val stats = fileStats(staged)
-        buildBlooms(staged)
         val tokenSwap = idm.toSeq.sortBy(_._1).map { case (n, (st, sp, hw)) =>
           (TxTable.encodeId(n, st, sp, hw + sp * total),
             TxTable.encodeId(n, st, sp, hw))
@@ -2005,63 +2009,86 @@ final class TxTable private (spark: SparkSession, dir: String,
         .withColumn("_commit_version", lit(0L)))
   }
 
-  /** Stage `df` as parquet files under content-unique names (`prefix`
-    * "data" for table content, "dv" for deletion vectors); invisible
-    * until a commit references them. */
   /** Crash seam for the multi-process specs: fires after the staging
     * write lands but before any file moves — a `Runtime.halt` here is
     * the kill -9 that leaves a whole `_staged-*` directory behind,
     * the artifact [[vacuum]]'s age-guarded reclaim exists for. */
   private[graft] var afterStageWriteHook: () => Unit = () => ()
 
-  private def stage(df: DataFrame, prefix: String = "data",
-      intoDir: String = ""): Seq[String] = {
-    val tmp = s"$dir/_staged-${UUID.randomUUID()}"
-    df.write.parquet(tmp)
-    afterStageWriteHook()
-    val parts = Option(new File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-    if (intoDir.nonEmpty) Files.createDirectories(Paths.get(dir, intoDir))
-    val named = parts.toSeq.map { f =>
-      val base = s"$prefix-${UUID.randomUUID()}.parquet"
-      val name = if (intoDir.isEmpty) base else s"$intoDir/$base"
-      Files.move(f.toPath, Paths.get(dir, name),
-        StandardCopyOption.ATOMIC_MOVE)
-      name
-    }
-    rmTree(new File(tmp))
-    named
-  }
-
-  /** [[stage]] for hive-partitioned writes: part files move from the
-    * staging dir's nested `col=value/` subdirs (one level per
-    * partition key, in `partitionCols` order — Spark's own nesting
-    * order) to matching subdirs of the table root, and the returned
-    * names stay partition-qualified through every level. */
-  private def stagePartitioned(
-      df: DataFrame, partitionCols: Seq[String]): Seq[String] = {
-    val tmp = s"$dir/_staged-${UUID.randomUUID()}"
-    df.write.partitionBy(partitionCols: _*).parquet(tmp)
-    def walk(d: File, depth: Int, prefix: String): Seq[String] =
-      if (depth == 0) {
-        val parts = Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-        if (parts.nonEmpty) Files.createDirectories(Paths.get(dir, prefix))
-        parts.toSeq.map { f =>
-          val rel = s"${prefix}data-${UUID.randomUUID()}.parquet"
-          Files.move(f.toPath, Paths.get(dir, rel),
-            StandardCopyOption.ATOMIC_MOVE)
-          rel
+  /** The one staging path of every write: write `df` (PHYSICAL-named)
+    * as parquet into a private `_staged-*` directory, move its part
+    * files under the table root as `<prefix>-<uuid>.parquet` —
+    * content-unique names, invisible until a commit references them —
+    * laid out by `at`, and return their table-relative names with
+    * their stats sidecar lines.
+    *
+    * `AsBase` preserves the base snapshot's layout: when its files are
+    * hive-partitioned, the write re-stages under the same `col=value/`
+    * directories — a flat staging would MIX layouts and break
+    * path-based partition inference for every later read (rows
+    * silently lost to a column/path conflict). A frame that drops a
+    * partition column (an overwrite changing the layout) stages flat:
+    * it replaces everything, so the new layout is consistent.
+    *
+    * Data files are table CONTENT: each footer is opened once to mine
+    * the per-file min/max stats the commit logs ([[fileStats]]) and
+    * the row counts that size the bloom sidecars of the indexed
+    * columns ([[buildBlooms]]) — both exist to skip files on read, and
+    * both are mined here because the footers are fresh and local.
+    * Zero-row files (the schema carriers of [[addColumns]] and MERGE
+    * WITH SCHEMA EVOLUTION) hold no row group, so they get neither:
+    * there is nothing in them to skip. Deletion vectors (`prefix`
+    * "dv") get neither either: every read of a vector reads it whole,
+    * nothing prunes them. */
+  private def stage(df: DataFrame, at: Placement,
+      prefix: String = "data"): (Seq[String], Seq[String]) = {
+    val (frame, partCols, leaf) = at match {
+      case AsBase(base) =>
+        // the FULL key sequence from the first file's directories:
+        // every segment must be `col=value`, else the layout is flat
+        val cols = base.files.headOption.toSeq.flatMap { f =>
+          val segs = f.stripPrefix(s"$dir/").split('/').dropRight(1).toSeq
+          val keys = segs.flatMap(partKey)
+          if (keys.length == segs.length) keys.map(_._1) else Nil
         }
-      } else Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.contains("="))
-        .toSeq.flatMap(sub =>
-          walk(sub, depth - 1, s"$prefix${sub.getName}/"))
-    val named = walk(new File(tmp), partitionCols.length, "")
-    rmTree(new File(tmp))
-    named
+        (df, if (cols.forall(df.columns.contains)) cols else Nil, "")
+      case PartitionedBy(cols) => (df, cols, "")
+      case IntoLeaf(leaf) =>
+        (df.drop(leaf.split('/').toSeq.flatMap(partKey).map(_._1): _*),
+          Nil, leaf)
+    }
+    val tmp = new File(s"$dir/_staged-${UUID.randomUUID()}")
+    (if (partCols.isEmpty) frame.write
+      else frame.write.partitionBy(partCols: _*)).parquet(tmp.getPath)
+    afterStageWriteHook()
+    // one directory level per partition key, in `partCols` order
+    // (Spark's own nesting order); names stay partition-qualified
+    def move(d: File, depth: Int, rel: String): Seq[String] = {
+      val kids = Option(d.listFiles()).getOrElse(Array.empty).toSeq
+      if (depth > 0)
+        kids.filter(f => f.isDirectory && f.getName.contains("="))
+          .flatMap(sub => move(sub, depth - 1, s"$rel${sub.getName}/"))
+      else {
+        val parts = kids.filter(f => f.isFile &&
+          f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        if (parts.nonEmpty) Files.createDirectories(Paths.get(dir, rel))
+        parts.map { f =>
+          val name = s"$rel$prefix-${UUID.randomUUID()}.parquet"
+          Files.move(f.toPath, Paths.get(dir, name),
+            StandardCopyOption.ATOMIC_MOVE)
+          name
+        }
+      }
+    }
+    val files =
+      move(tmp, partCols.length, if (leaf.isEmpty) "" else s"$leaf/")
+    rmTree(tmp)
+    if (prefix != "data") (files, Nil)
+    else {
+      val (stats, rows) = fileStats(files)
+      buildBlooms(rows)
+      (files, stats)
+    }
   }
 
   private def rmTree(f: File): Unit = {
@@ -2069,31 +2096,30 @@ final class TxTable private (spark: SparkSession, dir: String,
     f.delete()
   }
 
-  /** Stage a rewrite PRESERVING the table's layout: when `base`'s
-    * files are hive-partitioned, the rewrite re-stages under the same
-    * `col=value/` directories — a flat staging would MIX layouts and
-    * break path-based partition inference for every later read (rows
-    * silently lost to a column/path conflict). Flat tables stage
-    * flat; a frame that legitimately drops the partition column (an
-    * overwrite changing the layout) falls back to flat staging — the
-    * rewrite replaces everything, so the new layout is consistent.
-    * `df` is already PHYSICAL-named, as is the path segment. */
-  private def stageLike(base: Snapshot, df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    // re-derive the FULL partition-key sequence from the first file's
-    // directory segments: every segment must be `col=value` (a partial
-    // match means the path is not hive layout — stage flat)
-    val partCols: Seq[String] = base.files.headOption
-      .map(_.stripPrefix(s"$dir/")).toSeq.flatMap { rel =>
-        val segs = rel.split('/').dropRight(1).toSeq
-        val cols = segs.takeWhile(_.indexOf('=') > 0).map { seg =>
-          ExternalCatalogUtils.unescapePathName(seg.takeWhile(_ != '='))
-        }
-        if (cols.length == segs.length) cols else Seq.empty
-      }
-    if (partCols.nonEmpty && partCols.forall(df.columns.contains))
-      stagePartitioned(df, partCols)
-    else stage(df)
+  // ------------------------------------------------ hive partition paths
+  /** The hive `col=value` directory segment Spark's partitioned write
+    * produces for (PHYSICAL `column`, `value`): both sides escaped
+    * (':', '%', '=', …), a null value as `__HIVE_DEFAULT_PARTITION__`. */
+  private def partSegment(column: String, value: Any): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
+    val v =
+      if (value == null) DEFAULT_PARTITION_NAME
+      else escapePathName(value.toString)
+    s"${escapePathName(column)}=$v"
+  }
+
+  /** [[partSegment]] inverted: (column, value; None = the null
+    * partition), or None when `seg` is not a `col=value` segment. */
+  private def partKey(seg: String): Option[(String, Option[String])] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
+    val eq = seg.indexOf('=')
+    if (eq <= 0) None
+    else {
+      val raw = seg.drop(eq + 1)
+      Some((unescapePathName(seg.take(eq)),
+        if (raw == DEFAULT_PARTITION_NAME) None
+        else Some(unescapePathName(raw))))
+    }
   }
 
   /** Atomic claim of `version` through the table's [[LogStore]]: the
@@ -2310,34 +2336,21 @@ final class TxTable private (spark: SparkSession, dir: String,
   private def bloomFile(rel: String, column: String, kind: String): File =
     new File(bloomDir, s"${escName(rel)}.${escName(column)}.$kind.bloom")
 
-  /** Build + persist bloom sidecars for `relNames`' indexed columns.
-    * ONE distributed pass per indexed column over just the new files:
-    * rows fan into per-file filters sized from the footers' row counts
-    * (already local — staging wrote them), partial filters merge by OR.
-    * Best-effort like [[fileStats]]: a failed build only disables
-    * skipping for those (file, column) pairs. Called BEFORE the commit
-    * CAS; names are unique forever, so a losing retry reuses the same
-    * sidecars and retry exhaustion deletes them with the data files. */
-  private def buildBlooms(relNames: Seq[String]): Unit =
+  /** Build + persist bloom sidecars for the indexed columns of the
+    * staged files `fileRows` lists with their footer row counts
+    * ([[fileStats]]); zero-row files have nothing to index. ONE
+    * distributed pass per indexed column over just the new files: rows
+    * fan into per-file filters sized from those counts, partial
+    * filters merge by OR. Best-effort like [[fileStats]]: a failed
+    * build only disables skipping for those (file, column) pairs.
+    * Called BEFORE the commit CAS; names are unique forever, so a
+    * losing retry reuses the same sidecars and retry exhaustion
+    * deletes them with the data files. */
+  private def buildBlooms(fileRows: Seq[(String, Long)]): Unit = {
+    val relNames = fileRows.collect { case (rel, n) if n > 0 => rel }
     if (bloomCols.nonEmpty && relNames.nonEmpty) try {
       import org.apache.spark.util.sketch.BloomFilter
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val conf = spark.sessionState.newHadoopConf()
-      // footer reads fan out over a driver-side parallel collection:
-      // each is an independent open+footer+close round trip, so a
-      // bulk-load commit of thousands of files pays max(latency) per
-      // pool-width batch instead of sum(latency) — the distributed
-      // pass below was already parallel, this was the serial tail
-      import scala.collection.parallel.CollectionConverters._
-      val rows: Map[String, Long] = relNames.par.map { rel =>
-        val in = HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/$rel"), conf)
-        val r = ParquetFileReader.open(in)
-        try rel -> r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally r.close()
-      }.seq.toMap
+      val rows = fileRows.toMap
       val paths = relNames.map(n => s"$dir/$n")
       val schema = spark.read.option("basePath", dir).parquet(paths: _*).schema
       val indexable = bloomCols.toSeq.sorted.flatMap { c =>
@@ -2391,6 +2404,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       // but an OOM/linkage error must surface, not masquerade as a
       // silently bloom-less commit
     } catch { case scala.util.control.NonFatal(_) => () }
+  }
 
   /** Could `rel` contain `value` in `column`? Missing/unreadable
     * sidecar → conservatively yes. The sidecar NAME carries the dtype
@@ -2440,66 +2454,69 @@ final class TxTable private (spark: SparkSession, dir: String,
     * non-primitive / unsupported types) are simply omitted — omission
     * disables skipping for that (file, column), never correctness.
     * Driver-side, footer-only reads: the same cost class as the file
-    * moves staging already does. */
-  private def fileStats(relNames: Seq[String]): Seq[String] = try {
+    * moves staging already does. The same open also yields each
+    * file's row count, returned beside the lines for [[buildBlooms]];
+    * a failed read returns neither. */
+  private def fileStats(relNames: Seq[String])
+      : (Seq[String], Seq[(String, Long)]) = try {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
-    // parallel like [[buildBlooms]]' row-count pass (and order-
-    // preserving: ParVector keeps element order through flatMap), so
-    // a bulk-load commit's stats mining is bounded by the slowest
-    // footer, not the sum of all of them
+    // footer reads fan out over a driver-side parallel collection
+    // (order-preserving: ParVector keeps element order): each is an
+    // independent open+footer+close round trip, so a bulk-load
+    // commit's mining is bounded by the slowest footer, not the sum
     import scala.collection.parallel.CollectionConverters._
-    relNames.par.flatMap { rel =>
+    val mined = relNames.par.map { rel =>
       val in = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(s"$dir/$rel"), conf)
       val reader = ParquetFileReader.open(in)
       try {
-        val blocks = reader.getFooter.getBlocks
-        if (blocks.isEmpty) Seq.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          // fold each column's stats across row groups; drop the column
-          // if ANY row group lacks usable stats
-          val byCol = blocks.asScala.flatMap(_.getColumns.asScala)
-            .filter(_.getPath.size == 1)
-            .groupBy(_.getPath.toDotString)
-          byCol.toSeq.sortBy(_._1).flatMap { case (name, chunks) =>
-            val pt = chunks.head.getPrimitiveType
-            val isStr = pt.getLogicalTypeAnnotation ==
-              LogicalTypeAnnotation.stringType()
-            val kind = pt.getPrimitiveTypeName match {
-              case INT32 | INT64 => Some("long")
-              case FLOAT | DOUBLE => Some("double")
-              case BINARY if isStr => Some("string")
-              case _ => None
+        val blocks = reader.getFooter.getBlocks.asScala
+        // fold each column's stats across row groups; drop the column
+        // if ANY row group lacks usable stats (a zero-row file has no
+        // row group, hence no line)
+        val byCol = blocks.flatMap(_.getColumns.asScala)
+          .filter(_.getPath.size == 1)
+          .groupBy(_.getPath.toDotString)
+        val lines = byCol.toSeq.sortBy(_._1).flatMap { case (name, chunks) =>
+          val pt = chunks.head.getPrimitiveType
+          val isStr = pt.getLogicalTypeAnnotation ==
+            LogicalTypeAnnotation.stringType()
+          val kind = pt.getPrimitiveTypeName match {
+            case INT32 | INT64 => Some("long")
+            case FLOAT | DOUBLE => Some("double")
+            case BINARY if isStr => Some("string")
+            case _ => None
+          }
+          val stats = chunks.map(_.getStatistics)
+          if (kind.isEmpty ||
+              stats.exists(s => s == null || !s.hasNonNullValue)) None
+          else {
+            def render(v: Any): String = v match {
+              case b: org.apache.parquet.io.api.Binary =>
+                enc(b.toStringUsingUTF8)
+              case x => x.toString
             }
-            val stats = chunks.map(_.getStatistics)
-            if (kind.isEmpty ||
-                stats.exists(s => s == null || !s.hasNonNullValue)) None
-            else {
-              def render(v: Any): String = v match {
-                case b: org.apache.parquet.io.api.Binary =>
-                  enc(b.toStringUsingUTF8)
-                case x => x.toString
-              }
-              val mins = stats.map(s => render(s.genericGetMin))
-              val maxs = stats.map(s => render(s.genericGetMax))
-              val (mn, mx) = kind.get match {
-                case "string" => (mins.min, maxs.max)
-                case _ =>
-                  (mins.minBy(BigDecimal(_)), maxs.maxBy(BigDecimal(_)))
-              }
-              Some(s"${enc(rel)}\t${enc(name)}\t${kind.get}\t$mn\t$mx")
+            val mins = stats.map(s => render(s.genericGetMin))
+            val maxs = stats.map(s => render(s.genericGetMax))
+            val (mn, mx) = kind.get match {
+              case "string" => (mins.min, maxs.max)
+              case _ =>
+                (mins.minBy(BigDecimal(_)), maxs.maxBy(BigDecimal(_)))
             }
+            Some(s"${enc(rel)}\t${enc(name)}\t${kind.get}\t$mn\t$mx")
           }
         }
+        (lines, rel -> blocks.map(_.getRowCount).sum)
       } finally reader.close()
     }.seq
+    (mined.flatMap(_._1), mined.map(_._2))
     // NonFatal: omission only disables skipping; JVM failures propagate
-  } catch { case scala.util.control.NonFatal(_) => Seq.empty }
+  } catch { case scala.util.control.NonFatal(_) => (Nil, Nil) }
 
   /** Percent-encode the TSV metacharacters (and %) in stat values. */
   private def enc(s: String): String =
@@ -2764,7 +2781,6 @@ final class TxTable private (spark: SparkSession, dir: String,
     *    never drop a matching one. */
   private def partitionKeep(rel: String,
       phys: Seq[(String, Option[Any], Option[Any])]): Boolean = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     if (phys.isEmpty || !rel.contains('/')) return true
     def num(s: String): Option[BigDecimal] =
       try Some(BigDecimal(s)) catch { case scala.util.control.NonFatal(_) => None }
@@ -2790,27 +2806,19 @@ final class TxTable private (spark: SparkSession, dir: String,
         }
       side(lo, _ >= _) && side(hi, _ <= _)
     }
-    rel.split('/').dropRight(1).forall { seg =>
-      val eq = seg.indexOf('=')
-      if (eq <= 0) true
-      else {
-        val pcol = ExternalCatalogUtils.unescapePathName(seg.take(eq))
-        val raw = seg.drop(eq + 1)
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) true
-        else {
-          val pval = ExternalCatalogUtils.unescapePathName(raw)
-          phys.filter(_._1 == pcol).forall { case (_, lo, hi) =>
-            val typedNumeric =
-              lo.exists(numBound(_).isDefined) ||
-                hi.exists(numBound(_).isDefined)
-            if (typedNumeric) numKeep(pval, lo, hi)
-            else if (lo.exists(_.isInstanceOf[String]) ||
-                hi.exists(_.isInstanceOf[String]))
-              strKeep(pval, lo, hi) || numKeep(pval, lo, hi)
-            else strKeep(pval, lo, hi)
-          }
+    rel.split('/').dropRight(1).flatMap(partKey).forall {
+      case (_, None) => true // the null partition
+      case (pcol, Some(pval)) =>
+        phys.filter(_._1 == pcol).forall { case (_, lo, hi) =>
+          val typedNumeric =
+            lo.exists(numBound(_).isDefined) ||
+              hi.exists(numBound(_).isDefined)
+          if (typedNumeric) numKeep(pval, lo, hi)
+          else if (lo.exists(_.isInstanceOf[String]) ||
+              hi.exists(_.isInstanceOf[String]))
+            strKeep(pval, lo, hi) || numKeep(pval, lo, hi)
+          else strKeep(pval, lo, hi)
         }
-      }
     }
   }
 
@@ -3101,13 +3109,12 @@ final class TxTable private (spark: SparkSession, dir: String,
           "column still present in old files — pick another name")
     }
 
-  private def commitAppend(files: Seq[String], df: DataFrame,
-      evolve: Boolean = false,
+  private def commitAppend(staged: (Seq[String], Seq[String]),
+      df: DataFrame, evolve: Boolean = false,
       enforcedCts: Map[String, String] = Map.empty,
       enforcedGcs: Map[String, String] = Map.empty,
       txn: Option[(String, Long)] = None): Commit = {
-    val stats = fileStats(files)
-    buildBlooms(files)
+    val (files, stats) = staged
     commitLoop("append", BlindBudget, reclaim = files) { base =>
       if (evolve) guardSchemaEvolve(base, df) else guardSchema(base, df)
       guardConstraints(base, enforcedCts, files, enforcedGcs)
@@ -3137,7 +3144,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     // layout-aware: appending to a hive-partitioned table re-stages
     // under its partition directories automatically (a flat file next
     // to partitioned ones would break path-based inference)
-    commitAppend(stageLike(s0, toPhysical(enforced(df2, cts), s0)), df2,
+    commitAppend(stage(toPhysical(enforced(df2, cts), s0), AsBase(s0)), df2,
       enforcedCts = cts, enforcedGcs = gcMap(s0), txn = txn)
   }
 
@@ -3157,7 +3164,7 @@ final class TxTable private (spark: SparkSession, dir: String,
       return appendWithIdentity(df, evolve = true, Nil)
     val cts = ctMap(s0)
     val df2 = applyGenerated(df, s0)
-    commitAppend(stageLike(s0, toPhysical(enforced(df2, cts), s0)), df2,
+    commitAppend(stage(toPhysical(enforced(df2, cts), s0), AsBase(s0)), df2,
       evolve = true, enforcedCts = cts, enforcedGcs = gcMap(s0))
   }
 
@@ -3202,9 +3209,8 @@ final class TxTable private (spark: SparkSession, dir: String,
         val df = applyGenerated(
           spark.read.format(format).load(fresh: _*), head)
         guardSchema(head, df)
-        val staged = stageLike(head, toPhysical(enforced(df, cts), head))
-        val stats = fileStats(staged)
-        buildBlooms(staged)
+        val (staged, stats) =
+          stage(toPhysical(enforced(df, cts), head), AsBase(head))
         Some(Staged(staged,
           // a racing COPY that recorded any of OUR files must force a
           // re-derive, or both would land the rows
@@ -3381,15 +3387,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     val carrier = toPhysical(spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), widened)
       .repartition(1), head)
-    val leaf = head.files.head.stripPrefix(s"$dir/")
-    if (!leaf.contains("/")) stage(carrier)
-    else {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val ld = leaf.take(leaf.lastIndexOf('/'))
-      val pathCols = ld.split('/').toSeq.map(s =>
-        ExternalCatalogUtils.unescapePathName(s.takeWhile(_ != '=')))
-      stage(carrier.drop(pathCols: _*), intoDir = ld)
-    }
+    val first = head.files.head.stripPrefix(s"$dir/")
+    stage(carrier, IntoLeaf(first.take(first.lastIndexOf('/') max 0)))._1
   }
 
   /** Hive-layout partitioned append: data files land under
@@ -3429,8 +3428,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     partitionCols.foreach { c => require(df2.columns.contains(c),
       s"partition column $c not in ${df2.columns.mkString(",")}") }
     commitAppend(
-      stagePartitioned(toPhysical(enforced(df2, cts), s0),
-        partitionCols.map(physName(s0, _))),
+      stage(toPhysical(enforced(df2, cts), s0),
+        PartitionedBy(partitionCols.map(physName(s0, _)))),
       df2, enforcedCts = cts, enforcedGcs = gcMap(s0), txn = txn)
   }
 
@@ -3438,9 +3437,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     * filtered on the partition-qualified path IN THE LOG — untouched
     * partitions contribute zero I/O, not even a listing. The value is
     * escaped exactly the way Spark's partitioned write escaped it into
-    * the path (`ExternalCatalogUtils.escapePathName`; null →
-    * `__HIVE_DEFAULT_PARTITION__`), so values with ':', '%', '=', …
-    * match their files instead of silently selecting nothing. */
+    * the path ([[partSegment]]), so values with ':', '%', '=', … and
+    * null match their files instead of silently selecting nothing. */
   def readPartition(partitionCol: String, value: Any): DataFrame =
     readPartitions(Seq(partitionCol -> value))
 
@@ -3451,21 +3449,15 @@ final class TxTable private (spark: SparkSession, dir: String,
     * months), and key order need not match the layout's nesting
     * order. */
   def readPartitions(kvs: Seq[(String, Any)]): DataFrame = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val snap = snapshot()
     // paths carry PHYSICAL names (writes translate before staging)
-    val want = kvs.map { case (c, v) =>
-      val seg =
-        if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(v.toString)
-      s"${ExternalCatalogUtils.escapePathName(physName(snap, c))}=$seg"
-    }.toSet
+    val want = kvs.map { case (c, v) => partSegment(physName(snap, c), v) }
+      .toSet
     val sel = snap.files.filter { full =>
       val dirs = full.stripPrefix(s"$dir/").split('/').dropRight(1).toSet
       want.subsetOf(dirs)
     }
-    readSnapshot(Snapshot(snap.version, sel, snap.dvs, dir, snap.merged,
-      snap.cts, snap.cms))
+    readSnapshot(snap.copy(files = sel))
   }
 
   /** Dynamic-partition overwrite, transactionally: replace ONLY the
@@ -3492,10 +3484,8 @@ final class TxTable private (spark: SparkSession, dir: String,
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     partitionCols.foreach { c => require(df2.columns.contains(c),
       s"partition column $c not in ${df2.columns.mkString(",")}") }
-    val files = stagePartitioned(toPhysical(enforced(df2, cts0), s0),
-      partitionCols.map(physName(s0, _)))
-    val stats = fileStats(files)
-    buildBlooms(files)
+    val (files, stats) = stage(toPhysical(enforced(df2, cts0), s0),
+      PartitionedBy(partitionCols.map(physName(s0, _))))
     // full leaf-directory prefixes (all segments up to the file name)
     def leaf(f: String) = f.take(f.lastIndexOf('/') max 0)
     val touched = files.map(leaf).toSet
@@ -3524,7 +3514,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * these keys — the full-overwrite companion of
     * [[overwritePartitions]], used by the writer/CTAS face when
     * `partitionBy`/`PARTITIONED BY` accompanies an overwrite. Empty =
-    * preserve the base snapshot's layout ([[stageLike]]). */
+    * preserve the base snapshot's layout (see [[stage]]). */
   def overwriteAs(tag: String, df: DataFrame, layout: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Commit = {
     require(tag.nonEmpty && !tag.contains('"'), s"bad action tag: $tag")
@@ -3543,12 +3533,9 @@ final class TxTable private (spark: SparkSession, dir: String,
     // failing to resolve here is the loud refusal.
     val staged0 = toPhysical(
       enforced(applyGenerated(df, s0), cts0), s0)
-    val files =
-      if (layout.nonEmpty)
-        stagePartitioned(staged0, layout.map(physName(s0, _)))
-      else stageLike(s0, staged0)
-    val stats = fileStats(files)
-    buildBlooms(files)
+    val (files, stats) = stage(staged0,
+      if (layout.isEmpty) AsBase(s0)
+      else PartitionedBy(layout.map(physName(s0, _))))
     commitLoop("overwrite", BlindBudget, reclaim = files) { base =>
       guardConstraints(base, cts0, files, gcs0)
       val (txnAdd, txnRm) = txnSwap(base, txn)
@@ -3581,14 +3568,14 @@ final class TxTable private (spark: SparkSession, dir: String,
       // TOCTOU window to guard. applyGenerated computes an omitted gc
       // for incoming rows and enforces the equality on supplied ones;
       // carried rows satisfy it by their own write-time enforcement.
-      val staged = stageLike(base, toPhysical(
-        enforced(applyGenerated(merged, base), ctMap(base)), base))
+      val (staged, stats) = stage(toPhysical(
+        enforced(applyGenerated(merged, base), ctMap(base)), base),
+        AsBase(base))
       // a full rewrite retires the deletion vectors too: their targets
       // are all removed, and the rewrite read them applied
       val removed =
         (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/"))
-      buildBlooms(staged)
-      (Proposal("upsert", staged, removed, fileStats(staged)), removed)
+      (Proposal("upsert", staged, removed, stats), removed)
     }
 
   /** Conditional MERGE — the full Delta/ANSI MERGE clause surface, the
@@ -3983,8 +3970,9 @@ final class TxTable private (spark: SparkSession, dir: String,
       // and generated-column sets (gc enforcement covers MERGE like
       // Delta's — an UPDATE/INSERT * that takes a source row with a
       // drifted generated value fails the write job loudly)
-      val staged = stageLike(head, toPhysical(
-        enforced(applyGenerated(out, head), ctMap(head)), head))
+      val (staged, stats) = stage(toPhysical(
+        enforced(applyGenerated(out, head), ctMap(head)), head),
+        AsBase(head))
       // schema evolution rides THIS commit: the zero-row carrier footer
       // (the addColumns device) plus the widened rewrite files land
       // under ONE `merge-evolve` entry — a merge that never commits
@@ -3995,8 +3983,6 @@ final class TxTable private (spark: SparkSession, dir: String,
         else stageCarrier(head,
           org.apache.spark.sql.types.StructType(widen))
       val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      val stats = fileStats(staged)
-      buildBlooms(staged)
       (Proposal(if (widen.isEmpty) "merge" else "merge-evolve",
         carrier ++ staged, removed, stats), removed)
     }
@@ -4152,13 +4138,11 @@ final class TxTable private (spark: SparkSession, dir: String,
       // APPLIED, or it would resurrect DV-deleted rows; the vectors
       // stay active (entries for the removed files are inert — file
       // names never recur) until compaction retires them
-      val staged =
-        if (pruned.files.isEmpty) Nil
-        else stageLike(pruned, toPhysical(readSnapshot(pruned)
-          .where(!coalesce(matches, lit(false))), pruned))
+      val (staged, stats) =
+        if (pruned.files.isEmpty) (Nil, Nil)
+        else stage(toPhysical(readSnapshot(pruned)
+          .where(!coalesce(matches, lit(false))), pruned), AsBase(pruned))
       val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      val stats = fileStats(staged)
-      buildBlooms(staged)
       (Proposal("delete", staged, removed, stats), removed)
     }
 
@@ -4221,8 +4205,8 @@ final class TxTable private (spark: SparkSession, dir: String,
           "UPDATE assigns column(s) the table does not have: " +
             unknown.toSeq.sorted.mkString(", "))
       }
-      val staged =
-        if (pruned.files.isEmpty) Nil
+      val (staged, stats) =
+        if (pruned.files.isEmpty) (Nil, Nil)
         else {
           val base = readSnapshot(pruned)
           // assignment types are checked BEFORE the when() merge with
@@ -4253,11 +4237,10 @@ final class TxTable private (spark: SparkSession, dir: String,
           val regen = gcs.toSeq.sortBy(_._1).foldLeft(out) {
             case (d, (n, e)) => d.withColumn(n, expr(e))
           }
-          stageLike(head, toPhysical(enforced(regen, ctMap(head)), head))
+          stage(toPhysical(enforced(regen, ctMap(head)), head),
+            AsBase(head))
         }
       val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      val stats = fileStats(staged)
-      buildBlooms(staged)
       (Proposal("update", staged, removed, stats), removed)
     }
   }
@@ -4312,11 +4295,9 @@ final class TxTable private (spark: SparkSession, dir: String,
         case Some(k) => k.unionByName(scoped2)
         case None    => scoped2
       }
-      val staged = stageLike(head,
-        toPhysical(enforced(out, ctMap(head)), head))
+      val (staged, stats) =
+        stage(toPhysical(enforced(out, ctMap(head)), head), AsBase(head))
       val removed = pruned.files.map(_.stripPrefix(s"$dir/"))
-      val stats = fileStats(staged)
-      buildBlooms(staged)
       (Proposal("replace", staged, removed, stats), removed)
     }
   }
@@ -4360,7 +4341,7 @@ final class TxTable private (spark: SparkSession, dir: String,
             // stays parallel); a vector is small by contract, so one
             // output file keeps the read side's broadcast list short
             .repartition(1),
-          prefix = "dv")
+          PartitionedBy(Nil), prefix = "dv")._1
       (Proposal("dvdelete", staged),
         pruned.files.map(_.stripPrefix(s"$dir/")))
     }
@@ -4505,35 +4486,60 @@ final class TxTable private (spark: SparkSession, dir: String,
   def compactZOrdered(dims: Seq[String], targetFiles: Int): Commit =
     compactLayout(Layout.zorderedN(_, dims, targetFiles))
 
-  /** Shared compaction protocol: replace EXACTLY the base snapshot's
-    * files with their `layout` rewrite. A concurrent APPEND is no
-    * conflict — the appended files are untouched by the replacement, so
-    * the commit retries onto the new head and content is preserved
-    * (base ∪ appended). A concurrent REWRITE (upsert/overwrite) that
-    * removed any base file aborts with an error: the rewrite already
-    * subsumed or dropped rows this compaction would resurrect. */
+  /** Whole-table compaction: replace EXACTLY the base snapshot's
+    * files with their `layout` rewrite. The rewrite reads CONTENT
+    * (vectors applied), so this is also the operation that
+    * MATERIALIZES merge-on-read deletes and retires the vectors
+    * (Delta's PURGE). */
   private[ops] def compactLayout(layout: DataFrame => DataFrame): Commit = {
     val base = snapshot()
-    // the rewrite reads CONTENT (vectors applied) — compaction is also
-    // the operation that MATERIALIZES merge-on-read deletes and
-    // retires the vectors (Delta's PURGE)
-    val files = stageLike(base, toPhysical(layout(readSnapshot(base)), base))
-    val stats = fileStats(files)
-    buildBlooms(files)
-    val baseNames = (base.files ++ base.dvs).map(_.stripPrefix(s"$dir/"))
-    val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
-    commitLoop("compaction", reclaim = files) { head =>
-      val nowActive = (head.files ++ head.dvs)
-        .map(_.stripPrefix(s"$dir/")).toSet
-      if (!baseNames.forall(nowActive.contains))
-        sys.error("compaction base was rewritten concurrently — rerun compact()")
-      // a deletion vector that landed AFTER the base was read targets
-      // base data files this commit removes: committing would silently
-      // resurrect its deleted rows — abort instead (same class as the
-      // rewrite conflict above; an append stays conflict-free)
-      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs)
-        sys.error("a deletion vector landed during compaction — rerun compact()")
-      Proposal("compact", files, baseNames, stats)
+    val selected = base.files.map(_.stripPrefix(s"$dir/"))
+    compactCommit("compaction", base, selected,
+      compactStage(base, selected, AsBase(base))(layout),
+      retired = base.dvs.map(_.stripPrefix(s"$dir/")))
+  }
+
+  // ------------------------------------------------- the compaction core
+  /** The compactions differ only in which files they select and how
+    * they lay the rewrite out; this is what they share. Stage the
+    * `layout` rewrite of `selected` (table-relative data files of
+    * `base`) at `at`, read the way the snapshot reads them: deletion
+    * vectors applied, footers merged on an evolved table (a raw read
+    * would keep one footer's columns and drop the rest), column
+    * mapping and exists defaults resolved. */
+  private def compactStage(base: Snapshot, selected: Seq[String],
+      at: Placement)(layout: DataFrame => DataFrame)
+      : (Seq[String], Seq[String]) =
+    stage(toPhysical(layout(readSnapshot(
+      base.copy(files = selected.map(n => s"$dir/$n")))), base), at)
+
+  /** The compaction conflict guard, re-run against every attempt's
+    * `head`. A concurrent APPEND is no conflict — its files are
+    * untouched by the replacement, so the commit retries onto the new
+    * head and content is preserved. A concurrent rewrite that removed
+    * a selected file aborts: it already subsumed or dropped rows this
+    * compaction would resurrect. So does ANY change to the deletion
+    * vectors since `base`: a new vector may target a selected file,
+    * and committing would resurrect its deleted rows. */
+  private def compactGuard(op: String, base: Snapshot,
+      selected: Seq[String])(head: Snapshot): Unit = {
+    val active = head.files.map(_.stripPrefix(s"$dir/")).toSet
+    if (!selected.forall(active.contains))
+      sys.error(s"$op input was rewritten concurrently — rerun")
+    if (head.dvs.toSet != base.dvs.toSet)
+      sys.error(s"a deletion vector landed during $op — rerun")
+  }
+
+  /** Commit a staged compaction under [[compactGuard]]: one `compact`
+    * entry adding `staged`, removing `selected` and the `retired`
+    * vectors. */
+  private def compactCommit(op: String, base: Snapshot,
+      selected: Seq[String], staged: (Seq[String], Seq[String]),
+      retired: Seq[String] = Nil): Commit = {
+    val (files, stats) = staged
+    commitLoop(op, reclaim = files) { head =>
+      compactGuard(op, base, selected)(head)
+      Proposal("compact", files, selected ++ retired, stats)
     }
   }
 
@@ -4546,13 +4552,10 @@ final class TxTable private (spark: SparkSession, dir: String,
     * escaping) follows readPartitions — paths carry PHYSICAL names. */
   private def partitionWant(base: Snapshot,
       partitionFilter: Seq[(String, Any)]): Set[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     if (partitionFilter.nonEmpty) {
       val pathCols = base.files.headOption.toSeq
         .flatMap(_.stripPrefix(s"$dir/").split('/').dropRight(1))
-        .filter(_.contains('='))
-        .map(seg => ExternalCatalogUtils.unescapePathName(
-          seg.takeWhile(_ != '=')).toLowerCase).toSet
+        .flatMap(partKey).map(_._1.toLowerCase).toSet
       val unknown = partitionFilter.map(_._1)
         .filterNot(c => pathCols.contains(
           physName(base, c).toLowerCase))
@@ -4562,12 +4565,8 @@ final class TxTable private (spark: SparkSession, dir: String,
           s"${if (pathCols.isEmpty) "<none — flat table>"
              else pathCols.toSeq.sorted.mkString(", ")})")
     }
-    partitionFilter.map { case (c, v) =>
-      val seg =
-        if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(v.toString)
-      s"${ExternalCatalogUtils.escapePathName(physName(base, c))}=$seg"
-    }.toSet
+    partitionFilter.map { case (c, v) => partSegment(physName(base, c), v) }
+      .toSet
   }
 
   /** PARTITION-SCOPED Z-ORDER (Delta's `OPTIMIZE … WHERE … ZORDER BY`)
@@ -4599,21 +4598,9 @@ final class TxTable private (spark: SparkSession, dir: String,
       .map(f => f.stripPrefix(s"$dir/"))
       .filter(rel => want.subsetOf(rel.split('/').dropRight(1).toSet))
     if (selected.isEmpty) return None
-    val sub = Snapshot(base.version, selected.map(n => s"$dir/$n"),
-      base.dvs, dir, base.merged, base.cts, base.cms)
-    val staged = stageLike(base, toPhysical(
-      Layout.zorderedN(readSnapshot(sub), dims, targetFiles), base))
-    val stats = fileStats(staged)
-    buildBlooms(staged)
-    val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
-    Some(commitLoop("scoped z-order", reclaim = staged) { head =>
-      val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
-      if (!selected.forall(nowActive.contains))
-        sys.error("scoped z-order input was rewritten concurrently — rerun")
-      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs)
-        sys.error("a deletion vector landed during scoped z-order — rerun")
-      Proposal("compact", staged, selected, stats)
-    })
+    Some(compactCommit("scoped z-order", base, selected,
+      compactStage(base, selected, AsBase(base))(
+        Layout.zorderedN(_, dims, targetFiles))))
   }
 
   /** INCREMENTAL RECLUSTER — the device behind bare `OPTIMIZE` on a
@@ -4703,8 +4690,6 @@ final class TxTable private (spark: SparkSession, dir: String,
           else base.dvs.map(_.stripPrefix(s"$dir/")).filter { dvRel =>
             touchedFiles(Seq(s"$dir/$dvRel")).forall(selectedSet.contains)
           }
-        val sub = Snapshot(base.version, selected.map(n => s"$dir/$n"),
-          base.dvs, dir, base.merged, base.cts, base.cms)
         val bytes = selected.map(n => new File(dir, n).length()).sum
         // a FULL recluster keeps [[compactZOrdered]]'s 8-way fan-out floor
         // (narrow per-file ranges even on small tables); incremental
@@ -4713,17 +4698,10 @@ final class TxTable private (spark: SparkSession, dir: String,
         val floor = if (selected.size == activeRel.size) 8L else 1L
         val targetFiles = math.max(floor,
           (bytes + targetBytes - 1) / targetBytes).toInt
-        val staged = stageLike(base, toPhysical(
-          Layout.zorderedN(readSnapshot(sub), dims, targetFiles), base))
-        val stats = fileStats(staged)
-        buildBlooms(staged)
-        val baseDvs = base.dvs.map(_.stripPrefix(s"$dir/")).toSet
+        val (staged, stats) = compactStage(base, selected, AsBase(base))(
+          Layout.zorderedN(_, dims, targetFiles))
         Some(Staged(staged, { head =>
-          val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
-          if (!selected.forall(nowActive.contains))
-            sys.error("recluster input was rewritten concurrently — rerun")
-          if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet != baseDvs)
-            sys.error("a deletion vector landed during recluster — rerun")
+          compactGuard("recluster", base, selected)(head)
           // the watermark stamps this commit's OWN version, so every data
           // file that landed between the base snapshot and the commit
           // would sit at-or-below it WITHOUT having been rewritten —
@@ -4763,8 +4741,7 @@ final class TxTable private (spark: SparkSession, dir: String,
     * which retires the vector with them — packing such a file without
     * its vector would either resurrect deleted rows or silently
     * materialize them out of the vector's scope). The commit conflicts
-    * like [[compactLayout]]: any selected file removed concurrently, or
-    * any NEW vector landing (it may target a selected file), aborts.
+    * like every compaction ([[compactGuard]]).
     *
     * Returns None when fewer than two files qualify — packing one file
     * buys nothing, and a no-op commit would churn the log. */
@@ -4780,7 +4757,6 @@ final class TxTable private (spark: SparkSession, dir: String,
     * pack at the root, all under ONE atomic commit. */
   def compactBinPack(targetBytes: Long = 128L * 1024 * 1024,
       partitionFilter: Seq[(String, Any)] = Nil): Option[Commit] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val base = snapshot()
     val dvTouched =
@@ -4806,39 +4782,15 @@ final class TxTable private (spark: SparkSession, dir: String,
       .groupBy { case (rel, _) => rel.take(rel.lastIndexOf('/') max 0) }
       .filter(_._2.size >= 2)
     if (groups.isEmpty) return None
-    val stagedB = Seq.newBuilder[String]
-    val selectedB = Seq.newBuilder[String]
-    groups.toSeq.sortBy(_._1).foreach { case (leaf, smalls) =>
-      val names = smalls.map(_._1)
-      val totalBytes = smalls.map(_._2).sum
+    val leaves = groups.toSeq.sortBy(_._1)
+    val (files, stats) = leaves.map { case (leaf, smalls) =>
       val targetFiles = math.max(1, math.ceil(
-        totalBytes.toDouble / targetBytes).toInt)
-      // the packed rewrite reads the SELECTED files raw (none is
-      // DV-touched, so raw == content) and bins them by size
-      val packed0 = spark.read.option("basePath", dir)
-        .parquet(names.map(n => s"$dir/$n"): _*)
-        .repartition(targetFiles)
-      if (leaf.isEmpty) stagedB ++= stage(packed0)
-      else {
-        val pathCols = leaf.split('/').toSeq.map(s =>
-          ExternalCatalogUtils.unescapePathName(s.takeWhile(_ != '=')))
-        stagedB ++= stage(packed0.drop(pathCols: _*), intoDir = leaf)
-      }
-      selectedB ++= names
-    }
-    val selected = selectedB.result()
-    val files = stagedB.result()
-    val stats = fileStats(files)
-    buildBlooms(files)
-    Some(commitLoop("bin-pack", reclaim = files) { head =>
-      val nowActive = head.files.map(_.stripPrefix(s"$dir/")).toSet
-      if (!selected.forall(nowActive.contains))
-        sys.error("bin-pack input was rewritten concurrently — rerun compactBinPack()")
-      if (head.dvs.map(_.stripPrefix(s"$dir/")).toSet !=
-          base.dvs.map(_.stripPrefix(s"$dir/")).toSet)
-        sys.error("a deletion vector landed during bin-packing — rerun compactBinPack()")
-      Proposal("compact", files, selected, stats)
-    })
+        smalls.map(_._2).sum.toDouble / targetBytes).toInt)
+      compactStage(base, smalls.map(_._1), IntoLeaf(leaf))(
+        _.repartition(targetFiles))
+    }.unzip
+    Some(compactCommit("bin-pack", base, leaves.flatMap(_._2.map(_._1)),
+      (files.flatten, stats.flatten)))
   }
 
   /** Delete data files that no snapshot ≥ `retainVersion` references.

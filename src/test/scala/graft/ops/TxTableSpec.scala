@@ -6,8 +6,10 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.SparkTestBase
 
@@ -475,11 +477,19 @@ class TxTableSpec extends SparkTestBase {
   private val exhaustion: Seq[(String, String, Int, TxTable => Any,
       TxTable => Any)] = {
     val flat = (t: TxTable) => t.append(df(0 until 20).repartition(2))
+    val byPart = (t: TxTable) =>
+      t.appendPartitioned(partitioned(0 until 20), Seq("part"))
     Seq(
       ("append", "append", 50, flat, _.append(df(20 until 25))),
-      ("appendPartitioned", "append", 50,
-        _.appendPartitioned(partitioned(0 until 20), Seq("part")),
+      ("appendEvolve", "append", 50, flat,
+        _.appendEvolve(df(20 until 25).withColumn("extra", lit("x")))),
+      ("identity append", "identity append", 50,
+        { t => flat(t); t.addIdentityColumn("rid") },
+        _.append(df(20 until 25))),
+      ("appendPartitioned", "append", 50, byPart,
         _.appendPartitioned(partitioned(20 until 25), Seq("part"))),
+      ("overwritePartitions", "overwritePartitions", 50, byPart,
+        _.overwritePartitions(partitioned(20 until 25), Seq("part"))),
       ("overwrite", "overwrite", 50, flat, _.overwrite(df(100 until 105))),
       ("upsert", "upsert", 20, flat, _.upsert(df(15 until 25), Seq("id"))),
       ("merge", "merge", 20, flat, _.merge(df(15 until 25), Seq("id"),
@@ -488,6 +498,10 @@ class TxTableSpec extends SparkTestBase {
       ("deleteWhere", "delete", 20, flat, _.deleteWhere("id", 3L)),
       ("updateWhere", "update", 20, flat,
         _.updateWhere("id", 3L, Map("payload" -> lit("patched")))),
+      ("replaceBetween", "replace", 20, flat,
+        _.replaceBetween(df(3 until 4), "id", 3L, 3L)),
+      ("addColumns", "addColumns", 50, flat,
+        _.addColumns(StructType(Seq(StructField("extra", StringType))))),
       ("deleteVectorWhere", "deleteVector", 20, flat,
         _.deleteVectorWhere("id", 3L)),
       ("copyInto", "COPY INTO", 20, flat, { t =>
@@ -496,6 +510,9 @@ class TxTableSpec extends SparkTestBase {
         t.copyInto(src)
       }),
       ("compact", "compaction", 20, flat, _.compact()),
+      ("compactBinPack", "bin-pack", 20, flat, _.compactBinPack(1L << 30)),
+      ("compactZOrderedWhere", "scoped z-order", 20, byPart,
+        _.compactZOrderedWhere(Seq("id", "id"), Seq("part" -> 0))),
       ("compactZOrderedIncremental", "recluster", 20, flat,
         _.compactZOrderedIncremental(Seq("id", "id"))),
       ("addConstraint", "addConstraint", 20, flat,
@@ -522,6 +539,55 @@ class TxTableSpec extends SparkTestBase {
       assert(stagedFiles(new File(dir)) === files)
       assert(t.snapshot().version === version)
       assert(t.read().collect().map(_.toString).sorted.toSeq === rows)
+    }
+
+  // the same writes, uncontended: every staged CONTENT file of the
+  // committed entry has its stats line and its `id` bloom; zero-row
+  // schema carriers and deletion vectors have neither
+  private val sidecarOps = exhaustion.collect {
+    case (name, _, _, seed, op)
+        if name != "addConstraint" && name != "setProperties" =>
+      (name, seed, op)
+  } :+ (("merge widenBy", (t: TxTable) => t.append(df(0 until 20)),
+    (t: TxTable) => t.merge(df(15 until 25).withColumn("extra", lit("x")),
+      Seq("id"), whenMatchedUpdate = Some(lit(true)),
+      whenNotMatchedInsert = Some(lit(true)),
+      widenBy = StructType(Seq(StructField("extra", StringType))))))
+
+  for ((name, seed, op) <- sidecarOps)
+    test(s"$name logs stats and blooms for exactly its content files") {
+      val (t, dir) = mkTable()
+      t.bloomIndex(Seq("id"))
+      seed(t)
+      op(t)
+      val v = t.snapshot().version
+      val added = t.commitsBetween(v - 1, v).head.add
+        .filterNot(TxTable.isMetaToken)
+      val statsFile = new File(f"$dir/_log/$v%020d.stats.tsv")
+      val stats =
+        if (!statsFile.isFile) Nil
+        else Files.readAllLines(statsFile.toPath).asScala.toList
+      def hasStats(rel: String, column: String = "") =
+        stats.exists(_.startsWith(s"$rel\t$column"))
+      def hasBloom(rel: String) = new File(s"$dir/_log/bloom/" +
+        rel.replace("%", "%25").replace("/", "%2F") + ".id.long.bloom").isFile
+      val (content, other) = added.partition(rel =>
+        !TxTable.isDvName(rel) && spark.read.parquet(s"$dir/$rel").count() > 0)
+      content.foreach { rel =>
+        assert(hasStats(rel, "id\t"), s"$rel lacks its id stats")
+        assert(hasBloom(rel), s"$rel lacks its id bloom")
+      }
+      other.foreach { rel =>
+        assert(!hasStats(rel), s"$rel is not content but has stats")
+        assert(!hasBloom(rel), s"$rel is not content but has a bloom")
+      }
+      name match {
+        case "addColumns" => assert(content.isEmpty && other.size === 1)
+        case "merge widenBy" => assert(other.size === 1, added)
+        case "deleteVectorWhere" =>
+          assert(content.isEmpty && other.nonEmpty, added)
+        case _ => assert(content.nonEmpty && other.isEmpty, added)
+      }
     }
 
   test("commit-log codec roundtrips") {
@@ -931,6 +997,27 @@ class TxTableSpec extends SparkTestBase {
         9000 + i * 10 until 9000 + i * 10 + 2)).map(_.toLong).sorted)
     // streaming-visible as a compact: content-neutral by action
     assert(t.commitsBetween(c.version - 1, c.version).head.action === "compact")
+  }
+
+  test("compactBinPack keeps columns added by schema evolution") {
+    val dir = Files.createTempDirectory("graft-tx-").toString
+    // a narrow file adopted under a name that sorts before every staged
+    // `data-` name: a read that samples one footer samples this one
+    val src = Files.createTempDirectory("graft-narrow-").toString
+    df(0 until 10).coalesce(1).write.mode("overwrite").parquet(src)
+    val part = new File(src).listFiles().find(_.getName.endsWith(".parquet"))
+    Files.move(part.get.toPath, new File(dir, "a-narrow.parquet").toPath)
+    val t = TxTable.convert(spark, dir, logStore)
+    t.appendEvolve(df(10 until 20).withColumn("extra", lit("x")))
+    def rows() = t.read().select("id", "payload", "extra").collect()
+      .map(_.toString).sorted.toSeq
+    val before = rows()
+    assert(t.read().where(col("extra").isNotNull).count() === 10)
+    val c = t.compactBinPack(1L << 30).get
+    assert(c.remove.size >= 2 && t.snapshot().files.size === 1)
+    assert(t.read().columns.toSet === Set("id", "payload", "extra"))
+    assert(t.read().where(col("extra").isNotNull).count() === 10)
+    assert(rows() === before)
   }
 
   test("compactBinPack skips DV-touched files and no-ops below two candidates") {
