@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * loop stays one helper: no hand-rolled retry loop, no retry budget
   * parameter, no log CAS outside it. And its write side stays one
   * path each: one staging member, one stats-and-bloom mining, one
-  * partition-path encoder/decoder pair, one compaction guard. */
+  * partition-path encoder/decoder pair, one compaction guard. Its
+  * read side has one scan of its own parquet, and every footer it
+  * opens takes the session's read options. */
 class PinSourceGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(d: File): Seq[File] =
@@ -100,5 +102,26 @@ class PinSourceGuardSpec extends AnyFunSuite {
     val unused = owners.keys.filterNot(t => lines.exists(_._2.contains(t)))
     assert(unused.isEmpty, s"guard tokens no longer present: $unused")
     assert(!lines.exists(_._2.contains("stagePartitioned")))
+  }
+
+  test("TxTable reads its parquet through one scan and opens footers " +
+      "with read options") {
+    assert(txTable.isFile, s"missing ${txTable.getAbsolutePath}")
+    // copyInto loads FOREIGN files, whose schema Spark must infer
+    val readers = Set("scan", "copyInto")
+    val withOptions = """ParquetFileReader\.open\([^(),]+,""".r
+    val lines = ownedLines(txTable)
+    val hits = lines.flatMap { case (owner, line, n) =>
+      Seq(
+        (line.contains("spark.read") && !readers(owner)) ->
+          s"$n: spark.read in $owner",
+        (line.contains("ParquetFileReader.open(") &&
+          withOptions.findFirstIn(line).isEmpty) ->
+          s"$n: ParquetFileReader.open without read options in $owner"
+      ).collect { case (true, hit) => hit }
+    }
+    assert(hits.isEmpty, s"read-side duplicate or bare footer open: $hits")
+    assert(lines.exists { case (o, l, _) => o == "scan" && l.contains("spark.read") })
+    assert(lines.exists(_._2.contains("ParquetFileReader.open(")))
   }
 }
